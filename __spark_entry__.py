@@ -6,7 +6,7 @@ matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash -> CORRECTNESS_r{N}.json).
 
 The engine lives in ``hi_csa_db_spark/``; this module is a thin
-adapter over its query catalog (hi_csa_db_spark/queries.py).
+adapter over its query catalog, the hi_csa_db_spark/queries/ package.
 """
 
 from __future__ import annotations

@@ -23,40 +23,41 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from hi_csa_db_spark import queries as q
+from hi_csa_db_spark.queries import queries
 from hi_csa_db_spark.session import get_spark
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("analytics-observability-example")
+    q = queries()
 
     # 1. engagement
-    stick = q.t32_dau_wau_stickiness(spark, sf_dir).orderBy("week_n").collect()
+    stick = q["t32_dau_wau_stickiness"](spark, sf_dir).orderBy("week_n").collect()
     print(f"weeks tracked: {len(stick)}")
     for r in stick[:3]:
         print(
             f"  week {r['week_n']}: wau={r['wau']}"
             f" stickiness={r['stickiness_micro'] / 1e6:.3f}"
         )
-    wau7 = q.t34_sliding_distinct(spark, sf_dir).count()
+    wau7 = q["t34_sliding_distinct"](spark, sf_dir).count()
     print(f"sliding 7-day distinct windows: {wau7}")
 
     # 2. seasonality
     anomalies = (
-        q.t29_seasonal_anomaly(spark, sf_dir)
+        q["t29_seasonal_anomaly"](spark, sf_dir)
         .filter("is_anomaly = 1")
         .count()
     )
-    strength = q.t33_seasonality_strength(spark, sf_dir).collect()[0]
+    strength = q["t33_seasonality_strength"](spark, sf_dir).collect()[0]
     print(
         f"seasonal strength: {strength['seasonal_strength_micro'] / 1e6:.3f}"
         f" over {strength['n_days']} days; anomalous days: {anomalies}"
     )
 
     # 3. trend + forecastability
-    slope = q.stats_theil_sen(spark, sf_dir).collect()[0]
-    fc = q.t31_forecast_error(spark, sf_dir).collect()[0]
+    slope = q["stats_theil_sen"](spark, sf_dir).collect()[0]
+    fc = q["t31_forecast_error"](spark, sf_dir).collect()[0]
     print(
         f"robust slope: {slope['slope_micro_per_day'] / 1e6:+.3f} events/day"
         f" (over {slope['n_pairs']} pairs)"
@@ -68,11 +69,11 @@ def main() -> None:
     )
 
     # 4. DQ gate
-    rec = q.dq11_reconciliation(spark, sf_dir).collect()
+    rec = q["dq11_reconciliation"](spark, sf_dir).collect()
     mism = sum(r["n_mismatched"] for r in rec)
-    fan = q.dq9_join_fanout(spark, sf_dir).collect()[0]
+    fan = q["dq9_join_fanout"](spark, sf_dir).collect()[0]
     assert fan["predicted_rows"] == fan["actual_rows"], "fanout identity"
-    fresh = q.dq8_freshness(spark, sf_dir).orderBy("event_type").collect()
+    fresh = q["dq8_freshness"](spark, sf_dir).orderBy("event_type").collect()
     stalest = max(r["staleness_sec"] for r in fresh)
     print(
         f"reconciliation: {mism} mismatched orders;"

@@ -22,16 +22,17 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from hi_csa_db_spark import queries as q
+from hi_csa_db_spark.queries import queries
 from hi_csa_db_spark.session import get_spark
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("audit-before-scale-example")
+    q = queries()
 
     # 1. column profile: is anything constant, null-ridden, or drifting?
-    prof = {r["col"]: r for r in q.dq19_column_profile(spark, sf_dir).collect()}
+    prof = {r["col"]: r for r in q["dq19_column_profile"](spark, sf_dir).collect()}
     for c in sorted(prof):
         r = prof[c]
         print(
@@ -44,7 +45,7 @@ def main() -> None:
     )
 
     # 2. join sizing: never run a self-join you didn't price
-    est = q.j14_selfjoin_size_estimate(spark, sf_dir).collect()[0]
+    est = q["j14_selfjoin_size_estimate"](spark, sf_dir).collect()[0]
     print(
         f"self-join pairs: exact {est['exact_pairs']}, "
         f"CMS estimate {est['cms_est']} (+{est['over_bps'] / 100:.1f}%)"
@@ -52,7 +53,7 @@ def main() -> None:
     assert est["cms_est"] >= est["exact_pairs"], "CMS never underestimates"
 
     # 3. blocking bake-off: recall earned per candidate generated
-    for r in q.er4_blocking_eval(spark, sf_dir).collect():
+    for r in q["er4_blocking_eval"](spark, sf_dir).collect():
         rec = "n/a" if r["recall_bps"] is None else f"{r['recall_bps'] / 100:.1f}%"
         print(
             f"{r['family']:20s}: {r['n_candidates']} candidates "
@@ -60,7 +61,7 @@ def main() -> None:
         )
 
     # 4. quantile sketch error: what the mergeable histogram costs
-    for r in q.a18_log_histogram_quantiles(spark, sf_dir).collect():
+    for r in q["a18_log_histogram_quantiles"](spark, sf_dir).collect():
         print(
             f"{r['event_type']:8s}: p99 est {r['est_p99_micro'] / 1e6:.2f} "
             f"vs exact {r['exact_p99_micro'] / 1e6:.2f} "
@@ -72,7 +73,7 @@ def main() -> None:
 
     # 5. embedding width: recall@10 per prefix width
     rec = {r["dims"]: r["recall_pct"] for r in
-           q.s18_dim_truncation_recall(spark, sf_dir).collect()}
+           q["s18_dim_truncation_recall"](spark, sf_dir).collect()}
     for k in sorted(rec):
         print(f"cosine over first {k:2d} dims: recall@10 {rec[k]}%")
     assert rec[64] == 100, "full width must recover the exact top-10"

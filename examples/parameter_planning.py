@@ -24,18 +24,19 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from hi_csa_db_spark import queries as q
+from hi_csa_db_spark.queries import queries
 from hi_csa_db_spark.session import get_spark
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("parameter-planning-example")
+    q = queries()
 
     # 1. LSH band geometry per target threshold
     plan = {
         r["target_micro"]: r
-        for r in q.d21_band_planner(spark, sf_dir).collect()
+        for r in q["d21_band_planner"](spark, sf_dir).collect()
     }
     for t in sorted(plan):
         r = plan[t]
@@ -48,7 +49,7 @@ def main() -> None:
     )
 
     # 2. watermark delay vs completeness
-    wm = q.t38_watermark_planner(spark, sf_dir).orderBy("watermark_s").collect()
+    wm = q["t38_watermark_planner"](spark, sf_dir).orderBy("watermark_s").collect()
     for r in wm:
         print(
             f"watermark {r['watermark_s']:>4}s: drops "
@@ -58,13 +59,13 @@ def main() -> None:
 
     # 3. session gap: curve, then the fused auto-tuner
     curve = (
-        q.t39_session_gap_planner(spark, sf_dir).orderBy("gap_s").collect()
+        q["t39_session_gap_planner"](spark, sf_dir).orderBy("gap_s").collect()
     )
     print(
         "session curve: "
         + "  ".join(f"{r['gap_s']}s->{r['n_sessions']}" for r in curve)
     )
-    auto = q.t40_auto_gap_sessionize(spark, sf_dir).collect()[0]
+    auto = q["t40_auto_gap_sessionize"](spark, sf_dir).collect()[0]
     print(
         f"auto-chosen gap: {auto['gap_s']}s -> {auto['n_sessions']} sessions"
         f" (avg {auto['avg_session_events_milli'] / 1e3:.2f} events)"
@@ -72,12 +73,12 @@ def main() -> None:
     assert auto["gap_s"] in {r["gap_s"] for r in curve}
 
     # 4. storage maintenance: compaction + Z-order audit
-    groups = q.u21_compaction_plan(spark, sf_dir).collect()
+    groups = q["u21_compaction_plan"](spark, sf_dir).collect()
     print(
         f"compaction: 16 shards -> {len(groups)} merge groups "
         f"(largest {max(g['total_chars'] for g in groups)} chars)"
     )
-    zb = q.u22_zorder_layout(spark, sf_dir).collect()
+    zb = q["u22_zorder_layout"](spark, sf_dir).collect()
     worst = max(r["span_product"] for r in zb)
     print(
         f"z-order: {len(zb)} buckets, worst span product {worst} "

@@ -22,7 +22,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-import hi_csa_db_spark.queries as q
 from hi_csa_db_spark.catalog import load_table
 from hi_csa_db_spark.operators import dedup, graph
 from hi_csa_db_spark.session import get_spark

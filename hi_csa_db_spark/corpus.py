@@ -57,9 +57,9 @@ class Corpus:
 
     def quality_filter(self) -> "Corpus":
         """Keep docs the broadcast linear classifier accepts (x20)."""
-        from hi_csa_db_spark import queries as q
+        from hi_csa_db_spark.queries.q_corpus import x20_quality_classifier
 
-        scored = q.x20_quality_classifier(self.spark, self.sf_dir).select(
+        scored = x20_quality_classifier(self.spark, self.sf_dir).select(
             "doc_id", "n_words", "logit_micro", "keep"
         )
         kept = self._docs.join(scored.filter(F.col("keep") == 1), "doc_id")
@@ -67,9 +67,9 @@ class Corpus:
 
     def rule_filter(self) -> "Corpus":
         """Keep docs passing the Gopher-style rule gates (x12)."""
-        from hi_csa_db_spark import queries as q
+        from hi_csa_db_spark.queries.q_corpus import x12_quality_rules
 
-        rules = q.x12_quality_rules(self.spark, self.sf_dir).select(
+        rules = x12_quality_rules(self.spark, self.sf_dir).select(
             "doc_id", F.col("keep").alias("__rk")
         )
         kept = (
@@ -98,11 +98,11 @@ class Corpus:
         quality member (max logit, min-id ties) — the d10 survivor
         rule. Requires quality scores; computes them if the quality
         stage hasn't run."""
-        from hi_csa_db_spark import queries as q
+        from hi_csa_db_spark.queries.q_corpus import x20_quality_classifier
         from hi_csa_db_spark.operators import dedup, graph
 
         docs_all = self._docs
-        scored = q.x20_quality_classifier(self.spark, self.sf_dir).select(
+        scored = x20_quality_classifier(self.spark, self.sf_dir).select(
             F.col("doc_id").alias("id"), "logit_micro"
         )
         pairs = dedup.minhash_lsh_dedup(
@@ -131,9 +131,9 @@ class Corpus:
     def resample_dsir(self) -> "Corpus":
         """DSIR importance resampling toward the target domain (x24's
         pure-integer micro-weight keep rule)."""
-        from hi_csa_db_spark import queries as q
+        from hi_csa_db_spark.queries._shared import _dsir_weight_frame
 
-        wdf = q._dsir_weight_frame(self.spark, self.sf_dir)
+        wdf = _dsir_weight_frame(self.spark, self.sf_dir)
         wi = F.col("dsir_microweight")
         p = F.greatest(
             F.lit(0), F.least(F.lit(1000000), F.lit(500000) + 10 * wi)
@@ -146,9 +146,9 @@ class Corpus:
     def decontaminate(self) -> "Corpus":
         """Drop the held-out eval split AND every corpus doc sharing a
         5-gram with it (x80's GPT-3-style decontamination action)."""
-        from hi_csa_db_spark import queries as q
+        from hi_csa_db_spark.queries._shared import _eval_split_hits
 
-        corpus, hits = q._eval_split_hits(self._docs)
+        corpus, hits = _eval_split_hits(self._docs)
         kept = corpus.join(hits, "doc_id", "left_anti")
         return self._with(kept, "decontaminate[x80]")
 
@@ -191,9 +191,9 @@ class Corpus:
         in slices, never global."""
         from pyspark.sql import Window
 
-        from hi_csa_db_spark import queries as q
+        from hi_csa_db_spark.queries.q_corpus import x20_quality_classifier
 
-        scored = q.x20_quality_classifier(self.spark, self.sf_dir).select(
+        scored = x20_quality_classifier(self.spark, self.sf_dir).select(
             "doc_id", "logit_micro"
         )
         lab = self._docs.join(scored, "doc_id")
@@ -211,9 +211,9 @@ class Corpus:
     def keep_perplexity_buckets(self, buckets: tuple[str, ...] = ("head",)) -> "Corpus":
         """Keep only the named CCNet-style perplexity buckets (x42's
         per-source corpus-bigram-LM terciles; default: head only)."""
-        from hi_csa_db_spark import queries as q
+        from hi_csa_db_spark.queries.q_corpus import x42_perplexity_buckets
 
-        b = q.x42_perplexity_buckets(self.spark, self.sf_dir).filter(
+        b = x42_perplexity_buckets(self.spark, self.sf_dir).filter(
             F.col("bucket").isin(*buckets)
         ).select("doc_id")
         kept = self._docs.join(b, "doc_id")
@@ -260,7 +260,7 @@ class Corpus:
         vs weight-scaled token totals (weight_micro defaults to 1e6
         when weight_soft_dedup hasn't run), and batch counts."""
         from hi_csa_db_spark.functions.text import tokenize
-        from hi_csa_db_spark.queries import _BUCKET_LADDER_SQL
+        from hi_csa_db_spark.queries._shared import _BUCKET_LADDER_SQL
 
         d = self._docs
         if "weight_micro" not in d.columns:

@@ -21,22 +21,10 @@ Cross-engine determinism rules used throughout:
 """
 
 from __future__ import annotations
-import functools
-import glob
-import hashlib
-import inspect
-import json
-import os
-import re
-import sys
+
 from typing import Callable
-from pyspark.sql import Column, DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-from hi_csa_db_spark.catalog import load_table, load_tables
-from hi_csa_db_spark.functions.hashing import KNUTH_HASH32_SQL, knuth_hash32
-from hi_csa_db_spark.functions.text import absolutize_url, slugify, strip_punct, tokenize
-from hi_csa_db_spark.operators import classify, dedup, graph, ordered, similarity, textstats
-from hi_csa_db_spark.operators.merge import db_merge, union_streams
+
+from pyspark.sql import DataFrame, SparkSession
 
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -55,648 +43,34 @@ def _register(name: str, oracle: str | None = None):
     return deco
 
 
-# ---------------------------------------------------------------------------
-# Driver-sample exposure order -- DERIVED, not hand-maintained.
-#
-# The driver's correctness gate samples a 50-query PREFIX of the
-# registry (dict order) each round, and greens are banked across
-# rounds, so the prefix must ROTATE: re-proofs first, then queries
-# that have never had a driver row, banked greens last. Round 5
-# shipped a hand-written tuple and forgot to rotate it (VERDICT r5
-# item 1), spending 44 of 50 driver slots re-proving banked greens.
-# The order is therefore now derived from the shipped
-# CORRECTNESS_r*.json artifacts at the repo root, so skipping the
-# rotation is structurally impossible:
-#
-#   1. _NEEDS_REPROOF -- queries whose oracle/query text changed after
-#      their last driver green, or that were driver-red and have been
-#      fixed since. Hand-maintained map name -> round of the change; a
-#      name leaves the front AUTOMATICALLY once any artifact from a
-#      LATER round records it green (so a proven re-proof can't waste
-#      next round's slots even if nobody edits this map).
-#   2. Never-driver-green queries: _FLAGSHIPS first (one
-#      representative per major family, so a single rotated round
-#      proves breadth), then full-oracle names in registry
-#      (insertion) order -- oldest-registered first, which gives the
-#      remaining never-sampled names a deterministic, TERMINATING
-#      schedule across future rounds (~44 per round after the
-#      re-proof slots), then rows-only names (weaker driver check, so
-#      they spend prefix slots last).
-#   3. Banked greens, registry order.
-#
-# tests/test_priority_rotation.py pins this: while never-green names
-# remain, the top-50 prefix contains no green-and-unchanged name, the
-# ordering is deterministic, and the derivation tolerates missing
-# artifacts (fresh clone => everything rotates to the front).
-
-_NEEDS_REPROOF = {
-    # Round 5 changed these three oracles' SQL text (HUGEINT->BIGINT
-    # casts on SUMs) after their last driver green, so the banked
-    # green no longer covers the current oracle string: a green from
-    # round > 5 retires each entry.
-    "x33_curriculum_phases": 5,
-    "t9_robust_outliers": 5,
-    "x31_dataset_card": 5,
-    # Driver-red in r3 (sampled-once env/timestamp semantics), fixed
-    # that same round, never driver-sampled since: green from
-    # round > 3 retires.
-    "stream_hourly_counts": 3,
-    "stream_stateful_totals": 3,
-    "stream_incremental_dedup": 3,
-    # Round 6 rewrote er1's registered oracle into the
-    # _ER1_CLUSTER_SQL f-string after its r3 green (ADVICE r6 medium:
-    # semantically identical and locally green, but the banked green
-    # predates the current text): green from round > 6 retires.
-    "er1_entity_resolution": 6,
-}
-
-# Never-sampled rotation leaders: one representative per major family
-# (graph iteration, ML, embedding dedup, incremental LSH, OLAP cube,
-# bucketed join, sketches, multimodal, source pruning). er3/er4 added
-# r10: VERDICT r9 item 2 requires both in the r10 driver sample (the
-# last two names from r8 item 2's dependency-hash done-criterion the
-# all-first-time rotation happened to skip); er4 sat at prefix
-# position 51, one slot outside the 50-name sample.
-_FLAGSHIPS = (
-    # r11 front-loads (VERDICT r10 item 5): the stream_*/sketch rows
-    # are the never-sampled names whose semantics (state stores,
-    # watermarks, merge-of-registers) differ most from their batch
-    # twins; without this they sort into the rows-only tail slice and
-    # miss the 50-name sample again. pipe_reference_replay rides
-    # along: it is the last rows-only name and the only §3 pipeline
-    # replay without a driver row.
-    "stream_cms_topk",
-    "sketch_hll_merge",
-    "sketch_cardinality",
-    "sketch_quantiles",
-    "pipe_reference_replay",
-    "er3_golden_record",
-    "er4_blocking_eval",
-    "graph_pagerank",
-    "graph_components",
-    "ml_kmeans",
-    "d5_embedding_neardup",
-    "d9_incremental_lsh",
-    "g3_cube_orders",
-    "j11_bucketed_join",
-    "a12_hll_deterministic",
-    "mm10_video_framesample",
-    "u18_partition_pruned_read",
-)
-
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)  # queries/ is a PACKAGE since round 8: one dirname deeper
-
-
-def _parse_correctness_artifacts(root: str) -> tuple:
-    """One pass over every shipped ``CORRECTNESS_r*.json``: ((round,
-    frozenset-of-green-names), ...) sorted by round. A green row has
-    no error, matching rows, and neither schema nor hash recorded as
-    a mismatch (rows-only checks record null hash_match and still
-    count as their strongest-possible green). Missing or unreadable
-    artifacts contribute nothing."""
-    out = []
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"_r(\d+)\.json$", os.path.basename(path))
-        if m is None:
-            continue
-        try:
-            with open(path, encoding="utf-8") as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        greens = frozenset(
-            name
-            for name, row in rows.items()
-            if isinstance(row, dict)
-            and row.get("err") is None
-            and row.get("rows_match")
-            and row.get("schema_match") is not False
-            and row.get("hash_match") is not False
-        )
-        out.append((int(m.group(1)), greens))
-    return tuple(sorted(out))
-
-
-@functools.lru_cache(maxsize=1)
-def _repo_artifacts_cached() -> tuple:
-    return _parse_correctness_artifacts(_REPO_ROOT)
-
-
-def _greens_by_round(root: str = _REPO_ROOT) -> tuple:
-    """Artifact parse, cached per process for the (immutable) repo
-    snapshot root only -- priority_order() runs on every queries()/
-    oracle_sql() call and was re-globbing and re-parsing every
-    artifact each time (ADVICE r6: O(entries x artifacts) file I/O).
-    Non-default roots (tests' tmp dirs) always re-read."""
-    if root == _REPO_ROOT:
-        return _repo_artifacts_cached()
-    return _parse_correctness_artifacts(root)
-
-
-def driver_green_names(
-    root: str = _REPO_ROOT, after_round: int = 0
-) -> set[str]:
-    """Query names with >= 1 fully-green driver row in any shipped
-    ``CORRECTNESS_r*.json`` from a round STRICTLY LATER than
-    ``after_round`` (used to retire _NEEDS_REPROOF entries only once
-    the post-change driver has confirmed them)."""
-    greens: set[str] = set()
-    for rnd, names in _greens_by_round(root):
-        if rnd > after_round:
-            greens.update(names)
-    return greens
-
-
-def driver_green_rounds(root: str = _REPO_ROOT) -> dict[str, int]:
-    """name -> latest round with a fully-green driver row."""
-    latest: dict[str, int] = {}
-    for rnd, names in _greens_by_round(root):
-        for name in names:
-            latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-def query_text_hash(name: str) -> str | None:
-    """Stable digest of the (query fn source, oracle SQL) pair.
-
-    The banked-green bookkeeping below treats a driver green as
-    covering the query only while this hash matches the one recorded
-    when the green was banked -- so ANY text edit to a banked query or
-    its oracle auto-rotates it back into the driver-sample prefix
-    without anyone remembering to touch _NEEDS_REPROOF (ADVICE r6
-    medium: er1's oracle was rewritten with no reproof entry).
-    Returns None when the source is unavailable (builtins, exec'd
-    defs) -- such names are conservatively treated as never banked.
-    """
-    fn = _QUERIES.get(name)
-    if fn is None:
-        return None
-    try:
-        src = inspect.getsource(fn)
-    except (OSError, TypeError):
-        return None
-    sql = _ORACLES.get(name, "")
-    return hashlib.sha256(
-        (src + "\x00" + sql).encode("utf-8")
-    ).hexdigest()[:16]
-
-
-_BANKED_HASHES_PATH = os.path.join(
-    _REPO_ROOT, "tools", "banked_hashes.json"
-)
-
-
-# ---------------------------------------------------------------------------
-# Dependency hashing (VERDICT r8 item 2). query_text_hash covers only
-# the query fn's own source + oracle SQL, so an OPERATOR-level rewrite
-# (r8: dedup.sorted_neighborhood_pairs migrated onto
-# ordered.global_row_numbers) changed five banked queries' physical
-# plans without rotating any of them forward for driver re-proof.
-# query_dependency_hash closes that: it digests the source of every
-# hi_csa_db_spark object the query's source references, TRANSITIVELY
-# (an edit to ordered.global_row_numbers rotates d15/er1-er4 even
-# though their own text never names it -- they reach it through
-# dedup.sorted_neighborhood_pairs). Granularity is per-OBJECT, not
-# per-module: adding an unrelated function to operators/dedup.py
-# rotates nothing, so routine registry growth cannot flood the driver
-# prefix with spurious re-proofs.
-
-_HCD_PREFIX = "hi_csa_db_spark"
-_DOTTED_REF = re.compile(r"\b([A-Za-z_]\w*)\s*\.\s*([A-Za-z_]\w*)")
-_IDENT_REF = re.compile(r"\b[A-Za-z_]\w*\b")
-# Function-local `from hi_csa_db_spark... import a, b as c` (several
-# queries import their operator INSIDE the fn body, so the name never
-# appears in __globals__).
-_LOCAL_IMPORT = re.compile(
-    r"from\s+(hi_csa_db_spark[\w.]*)\s+import\s+"
-    r"(\([^)]*\)|[^\n#]+)"
-)
-
-
-# The registry plumbing itself is not a semantic dependency: every
-# query's decorator mentions _register, whose source touches the
-# whole-registry dicts -- hashing those would rotate EVERY banked
-# query on ANY registry edit. Each query's own oracle text is already
-# covered by query_text_hash.
-_SKIP_DEP_KEYS = frozenset(
-    {
-        "hi_csa_db_spark.queries:_register",
-        "const:_ORACLES",
-        "const:_QUERIES",
-        "const:hi_csa_db_spark.queries._ORACLES",
-        "const:hi_csa_db_spark.queries._QUERIES",
-    }
-)
-
-
-def _plain_repr(v) -> str | None:
-    """repr(v) iff the value is RECURSIVELY built from types whose
-    repr is deterministic across processes (str/bytes/int/float/bool/
-    None and tuples/lists/dicts thereof). Anything else -- functions,
-    objects (address reprs), sets (hash-seed iteration order) --
-    returns None and is skipped, keeping the banked manifest stable."""
-    if v is None or isinstance(v, (str, bytes, int, float, bool)):
-        return repr(v)
-    if isinstance(v, (tuple, list)):
-        parts = [_plain_repr(x) for x in v]
-        if any(p is None for p in parts):
-            return None
-        return "[" + ",".join(parts) + "]"
-    if isinstance(v, dict):
-        items = []
-        for k, x in v.items():
-            kr, xr = _plain_repr(k), _plain_repr(x)
-            if kr is None or xr is None:
-                return None
-            items.append(kr + ":" + xr)
-        return "{" + ",".join(items) + "}"
-    return None
-
-
-def _object_source_hash(obj) -> str:
-    """Digest of one dependency object's definition text. Separate
-    function (not inlined) so tests can monkeypatch it to simulate an
-    operator edit without touching files."""
-    try:
-        src = inspect.getsource(obj)
-    except (OSError, TypeError):
-        # No retrievable source (C ext, exec'd): pin the whole module
-        # file so ANY change there conservatively rotates dependents.
-        mod = sys.modules.get(getattr(obj, "__module__", "") or "")
-        path = getattr(mod, "__file__", None)
-        if path is None:
-            return "unsourced"
-        try:
-            with open(path, "rb") as fh:
-                return "mod:" + hashlib.sha256(fh.read()).hexdigest()[:16]
-        except OSError:
-            return "unsourced"
-    return hashlib.sha256(src.encode("utf-8")).hexdigest()[:16]
-
-
-def _dep_globals(obj) -> dict:
-    g = getattr(obj, "__globals__", None)
-    if g is not None:
-        return g
-    mod = sys.modules.get(getattr(obj, "__module__", "") or "")
-    return vars(mod) if mod is not None else {}
-
-
-# Modules that CANNOT import without a live SparkSession (module-level
-# pandas_udf registration). Their dependents are always hashed by the
-# module FILE: attempting a real import here would make the dep hash
-# depend on whether a session happens to exist in the computing
-# process -- the import-state bug _dep_import exists to prevent.
-_FILE_PIN_MODULES = frozenset({"hi_csa_db_spark.functions.udxf"})
-
-
-def _dep_import(modname: str):
-    """Resolve a function-local import target for dependency hashing,
-    IMPORT-STATE-INDEPENDENTLY. The r9 first cut read
-    ``sys.modules.get(modname)``, so a query's dep hash flipped
-    between per-object hashes and the modfile pin depending on
-    whether some earlier code in the same process had imported the
-    module (e.g. a Corpus FFD call importing operators.packing made
-    x44's hash diverge from the manifest mid-test-suite). Importing
-    the module outright gives the same answer in every process;
-    session-requiring modules are statically file-pinned instead of
-    being import-attempted, for the same determinism reason."""
-    if modname in _FILE_PIN_MODULES:
-        return None
-    try:
-        import importlib
-
-        return importlib.import_module(modname)
-    except Exception:
-        return None
-
-
-def _collect_dep_hashes(src: str, g: dict, out: dict, seen: set) -> None:
-    """Scan one definition's source for referenced hi_csa_db_spark
-    objects (via its resolved globals), record each object's source
-    hash in ``out`` keyed by module:qualname, and recurse into it.
-    Plain-value constants (oracle SQL templates like _SHINGLE_SQL,
-    KNUTH_HASH32_SQL) are hashed by repr keyed by identifier -- the r6
-    _ER1_CLUSTER_SQL rewrite would have rotated er1 automatically
-    under this rule instead of needing a hand _NEEDS_REPROOF entry."""
-    # Function-local imports bind names invisible to __globals__ --
-    # merge them into the lookup scope first so both the dotted scan
-    # (`ordered.global_row_numbers` after `from ...operators import
-    # ordered`) and the ident scan see them.
-    scope = g
-    for modname, names in _LOCAL_IMPORT.findall(src):
-        mod = _dep_import(modname)
-        if mod is None:
-            # Module statically file-pinned (needs a live Spark
-            # session at import time) or genuinely unimportable: pin
-            # the module FILE -- any edit to it rotates the dependent.
-            key = f"modfile:{modname}"
-            if key not in seen:
-                seen.add(key)
-                rel = modname.split(".")
-                path = os.path.join(_REPO_ROOT, *rel)
-                for cand in (path + ".py", os.path.join(path, "__init__.py")):
-                    try:
-                        with open(cand, "rb") as fh:
-                            out[key] = hashlib.sha256(
-                                fh.read()
-                            ).hexdigest()[:16]
-                        break
-                    except OSError:
-                        continue
-            continue
-        for piece in names.strip("()").split(","):
-            frag = piece.split(" as ")
-            base = frag[0].strip()
-            local = frag[-1].strip()
-            if not base:
-                continue
-            target = getattr(mod, base, None)
-            if target is None:
-                # `from pkg import submodule`: the attr exists on the
-                # package only after someone imports pkg.submodule --
-                # resolving through getattr alone would make the hash
-                # depend on process import history (the second half of
-                # the import-state bug: stream_* queries hashed richer
-                # or poorer by whether streaming.windows happened to
-                # be loaded). Import it explicitly so every process
-                # resolves the same object.
-                _dep_import(f"{modname}.{base}")
-                target = getattr(mod, base, None)
-            if target is not None:
-                if scope is g:
-                    scope = dict(g)
-                scope[local] = target
-    targets = []
-    for base, attr in _DOTTED_REF.findall(src):
-        v = scope.get(base)
-        if inspect.ismodule(v) and v.__name__.startswith(_HCD_PREFIX):
-            try:
-                targets.append((f"{v.__name__}.{attr}", getattr(v, attr)))
-            except AttributeError:
-                pass
-    consts = []
-    for ident in sorted(set(_IDENT_REF.findall(src))):
-        v = scope.get(ident)
-        if v is None or inspect.ismodule(v):
-            continue
-        vmod = getattr(v, "__module__", None)
-        if isinstance(vmod, str) and vmod.startswith(_HCD_PREFIX):
-            targets.append((ident, v))
-        else:
-            consts.append((ident, v))
-    for ident, v in consts:
-        key = f"const:{ident}"
-        if key in seen or key in _SKIP_DEP_KEYS:
-            continue
-        pr = _plain_repr(v)
-        if pr is not None:
-            seen.add(key)
-            out[key] = hashlib.sha256(pr.encode("utf-8")).hexdigest()[:16]
-    for ref, v in targets:
-        vmod = getattr(v, "__module__", None)
-        if not isinstance(vmod, str):
-            # A value imported by name (module-level constant): hash
-            # its content under the dotted reference that named it.
-            key = f"const:{ref}"
-            if key not in seen and key not in _SKIP_DEP_KEYS:
-                pr = _plain_repr(v)
-                if pr is not None:
-                    seen.add(key)
-                    out[key] = hashlib.sha256(
-                        pr.encode("utf-8")
-                    ).hexdigest()[:16]
-            continue
-        qn = getattr(v, "__qualname__", None) or getattr(v, "__name__", "?")
-        # Objects inside the queries PACKAGE are keyed module-free:
-        # family-module splits (r8 queries.py -> package, r9
-        # q_temporal -> 3 modules) move query defs verbatim between
-        # files, and a module-qualified key would mark every dependent
-        # of a moved def dep-stale despite identical content. Operator
-        # modules keep the full module path (a cross-module move there
-        # IS a rewrite).
-        if vmod.startswith("hi_csa_db_spark.queries"):
-            key = f"hi_csa_db_spark.queries:{qn}"
-        else:
-            key = f"{vmod}:{qn}"
-        if key in seen or key in _SKIP_DEP_KEYS:
-            continue
-        seen.add(key)
-        out[key] = _object_source_hash(v)
-        if callable(v) or inspect.isclass(v):
-            try:
-                vsrc = inspect.getsource(v)
-            except (OSError, TypeError):
-                continue
-            _collect_dep_hashes(vsrc, _dep_globals(v), out, seen)
-
-
-def query_dependency_refs(name: str) -> dict[str, str] | None:
-    """The full transitive dependency map for one registered query:
-    {module:qualname (or const:IDENT) -> source/content hash}. None
-    when the query or its source is unavailable."""
-    fn = _QUERIES.get(name)
-    if fn is None:
-        return None
-    try:
-        src = inspect.getsource(fn)
-    except (OSError, TypeError):
-        return None
-    out: dict[str, str] = {}
-    seen = {
-        f"{getattr(fn, '__module__', '?')}:"
-        f"{getattr(fn, '__qualname__', getattr(fn, '__name__', '?'))}"
-    }
-    _collect_dep_hashes(src, _dep_globals(fn), out, seen)
-    return out
-
-
-@functools.lru_cache(maxsize=None)
-def query_dependency_hash(name: str) -> str | None:
-    """Stable digest of everything the query TRANSITIVELY depends on
-    outside its own (already text-hashed) definition. Banked greens in
-    tools/banked_hashes.json additionally record this value; a
-    mismatch rotates the query into the stale slice of
-    priority_order() exactly like an edit to its own text."""
-    refs = query_dependency_refs(name)
-    if refs is None:
-        return None
-    blob = "\n".join(f"{k}={v}" for k, v in sorted(refs.items()))
-    return hashlib.sha256(blob.encode("utf-8")).hexdigest()[:16]
-
-
-@functools.lru_cache(maxsize=None)
-def _banked_hashes(path: str = _BANKED_HASHES_PATH) -> dict:
-    """The committed manifest name -> {"hash", "round"} recording the
-    query/oracle text each driver green actually tested. Written only
-    by tools/update_banked_hashes.py (run at round start, once fresh
-    driver artifacts exist); an entry older than the query's current
-    text makes the green stale. Missing file => empty (fresh clone:
-    everything rotates to the front, same as no artifacts)."""
-    try:
-        with open(path, encoding="utf-8") as fh:
-            data = json.load(fh)
-    except (OSError, ValueError):
-        return {}
-    return data if isinstance(data, dict) else {}
-
-
-def priority_order() -> tuple[str, ...]:
-    """The registry exposure order described in the block comment
-    above, with one addition since round 6: a driver green only BANKS
-    a query while the current (fn source, oracle SQL) text hash still
-    matches the hash recorded in tools/banked_hashes.json at banking
-    time -- an edited-but-green query rotates back to the front
-    (`stale` slice, right after the hand-maintained _NEEDS_REPROOF
-    entries) instead of silently keeping its stale green. Pure
-    function of (_QUERIES, _ORACLES, _NEEDS_REPROOF, _FLAGSHIPS,
-    shipped CORRECTNESS artifacts, banked_hashes.json) --
-    deterministic for a given repo snapshot."""
-    greens = driver_green_names()
-    banked_h = _banked_hashes()
-    reproof = [
-        n
-        for n, since in _NEEDS_REPROOF.items()
-        if n in _QUERIES and n not in driver_green_names(after_round=since)
-    ]
-    taken = set(reproof)
-    stale: list[str] = []
-    never_flagship: list[str] = []
-    never_full: list[str] = []
-    never_rows_only: list[str] = []
-    banked: list[str] = []
-    for name in _QUERIES:
-        if name in taken:
-            continue
-        if name in greens:
-            rec = banked_h.get(name)
-            if (
-                isinstance(rec, dict)
-                and rec.get("hash") == query_text_hash(name)
-                and rec.get("dep_hash") in (None, query_dependency_hash(name))
-            ):
-                # dep_hash None = pre-r9 manifest entry (legacy,
-                # migrated forward by tools/update_banked_hashes.py).
-                banked.append(name)
-            else:
-                stale.append(name)
-        elif name in _FLAGSHIPS:
-            never_flagship.append(name)
-        elif name in _ORACLES:
-            never_full.append(name)
-        else:
-            never_rows_only.append(name)
-    never_flagship.sort(key=_FLAGSHIPS.index)
-    return tuple(
-        reproof
-        + stale
-        + never_flagship
-        + never_full
-        + never_rows_only
-        + banked
-    )
-
-
-def _ordered(d: dict) -> dict:
-    order = priority_order()
-    out = {name: d[name] for name in order if name in d}
-    out.update({name: v for name, v in d.items() if name not in out})
-    return out
-
-
 def queries() -> dict[str, QueryFn]:
-    return _ordered(_QUERIES)
+    return dict(_QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    return _ordered(_ORACLES)
+    return dict(_ORACLES)
 
 
 # ---------------------------------------------------------------------------
-# Family modules (round-8 split of the single 24.7k-line queries.py,
-# VERDICT r7 item 8). Importing each module registers its queries via
-# the shared ``_register`` above; the canonical registry order is then
-# restored from tools/registry_order.json (family grouping must not
-# change the driver-sample rotation), and finally every module's
-# namespace is cross-pollinated so a query body can keep calling
-# helpers/queries now defined in a sibling module with its original,
-# hash-stable text.
+# Family modules. Importing each one registers its queries through
+# ``_register`` above, so the registry is in registration order: the
+# order below, and within a module, source order. A family that uses
+# another family's query imports it (q_corpus is listed before its
+# users only to keep each family's block contiguous).
 # ---------------------------------------------------------------------------
 
-from hi_csa_db_spark.queries import _shared  # noqa: E402
-from hi_csa_db_spark.queries import (  # noqa: E402
+from hi_csa_db_spark.queries import (  # noqa: E402,F401
     q_relational,
     q_scalars,
     q_windows,
     q_temporal,
     q_quality,
     q_maintenance,
-    q_dedup,
     q_corpus,
+    q_dedup,
     q_mixture,
     q_similarity,
     q_streaming,
     q_stats,
     q_pipelines,
 )
-
-_FAMILY_MODULES = (
-    _shared,
-    q_relational,
-    q_scalars,
-    q_windows,
-    q_temporal,
-    q_quality,
-    q_maintenance,
-    q_dedup,
-    q_corpus,
-    q_mixture,
-    q_similarity,
-    q_streaming,
-    q_stats,
-    q_pipelines,
-)
-
-_ORDER_PATH = os.path.join(_REPO_ROOT, "tools", "registry_order.json")
-
-
-def _restore_canonical_order() -> None:
-    """Re-impose the pre-split registration order on _QUERIES/_ORACLES
-    (both mutated IN PLACE -- family modules hold the same dict
-    objects). Names not in the pinned file (newly added queries)
-    keep their registration order at the end, exactly where appending
-    to the old single file would have put them."""
-    try:
-        with open(_ORDER_PATH, encoding="utf-8") as fh:
-            canon = json.load(fh)
-    except (OSError, ValueError):
-        return
-    for d in (_QUERIES, _ORACLES):
-        pinned = {n: d[n] for n in canon if n in d}
-        pinned.update({n: v for n, v in d.items() if n not in pinned})
-        d.clear()
-        d.update(pinned)
-
-
-_restore_canonical_order()
-
-_pool: dict = {}
-for _m in _FAMILY_MODULES:
-    _pool.update(
-        {k: v for k, v in vars(_m).items() if not k.startswith("__")}
-    )
-for _m in _FAMILY_MODULES:
-    _vars = vars(_m)
-    for _k, _v in _pool.items():
-        if _k not in _vars:
-            setattr(_m, _k, _v)
-# Package-level re-export: `queries.x20_quality_classifier`,
-# `queries._disc_price` etc. keep working exactly as when everything
-# lived in one module.
-for _k, _v in _pool.items():
-    globals().setdefault(_k, _v)
-del _m, _vars, _k, _v

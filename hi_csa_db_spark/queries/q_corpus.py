@@ -1,49 +1,31 @@
 """LLM training-data corpus text ops (x*): tokens, quality, PII, contamination, BPE, fingerprints, decontamination.
 
-Split from the original single-file registry (round 8,
-VERDICT r7 item 8); mixture/budget/sampling/packing/split queries
-moved to q_mixture.py (round 10, VERDICT r9 item 6). Query/oracle text is moved VERBATIM so
-query_text_hash values (tools/banked_hashes.json) are unchanged;
-registry order is pinned by tools/registry_order.json. Names a
-query body references from another module resolve through the
-package-level namespace cross-pollination in queries/__init__.py
-(def-time names are imported explicitly below)."""
+Importing this module registers its queries in the package registry
+(``hi_csa_db_spark.queries``) in source order."""
 
 from __future__ import annotations
-import functools
-import glob
-import hashlib
-import inspect
-import json
-import os
-import re
-from typing import Callable
-from pyspark.sql import Column, DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-from hi_csa_db_spark.catalog import load_table, load_tables, spread_input
-from hi_csa_db_spark.functions.hashing import KNUTH_HASH32_SQL, knuth_hash32
-from hi_csa_db_spark.functions.text import absolutize_url, slugify, strip_punct, tokenize
-from hi_csa_db_spark.operators import classify, dedup, graph, ordered, similarity, textstats
-from hi_csa_db_spark.operators.merge import db_merge, union_streams
 
-from hi_csa_db_spark.queries import _ORACLES, _QUERIES, _register
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from hi_csa_db_spark.catalog import load_table, spread_input
+from hi_csa_db_spark.functions.text import strip_punct, tokenize
+from hi_csa_db_spark.operators import dedup, graph, ordered, textstats
+
+from hi_csa_db_spark.queries import _ORACLES, _register
 from hi_csa_db_spark.queries._shared import (
     _BUCKET_LADDER_SQL,
     _CLS_STOPWORDS_SQL,
-    _D6_LABELS_SQL,
-    _DSIR_W_SQL,
     _EVAL_GRAMS_SQL,
     _MARKER_VALUES,
-    _PACK_BUDGET,
     _SHINGLE_SQL,
     _TOKS_SQL,
     _X20_SCORED_SQL,
     _bpe_train_oracle_sql,
     _cos_sql,
+    _eval_split_hits,
     _x27_oracle,
-    _x49_oracle,
 )
-
 
 
 @_register(
@@ -800,6 +782,55 @@ def x20_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("logit_micro"),
         (F.col("p50n") >= 0).cast("int").alias("keep"),
     )
+
+
+def _quality_survivor_drops(
+    spark: SparkSession, sf_dir: str, docs: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """Shared stage chain of the pipe_v3/v4 composites: x20 quality
+    scores + the ids d10-style best-quality survivorship DROPS from
+    each near-dup cluster. Returns (scored, drops).
+
+    Every frame consumed by more than one downstream stage is lazily
+    checkpointed ONCE (scored: survivor selection + final kept join;
+    labels: membership + drop list; mem: per-cluster max + join-back)
+    — without this the composite re-derives the whole
+    LSH -> components -> scoring lineage per consumer (45 Exchanges /
+    9 parquet scans in pipe_v3's r6 plan; VERDICT r6 item 4). At
+    cluster scale each checkpoint is a doc- or cluster-sized frame
+    that must materialize anyway for its first consumer."""
+    scored = (
+        x20_quality_classifier(spark, sf_dir)
+        .select("doc_id", "n_words", "logit_micro", "keep")
+        .localCheckpoint(eager=False)
+    )
+    pairs = dedup.minhash_lsh_dedup(
+        docs, n=3, num_hashes=16, bands=8, threshold=0.05
+    )
+    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    labels = graph.connected_components(edges, iterations=3).localCheckpoint(
+        eager=False
+    )
+    mem = (
+        labels.join(
+            scored.select(F.col("doc_id").alias("id"), "logit_micro"), "id"
+        )
+        .select("id", "lbl", "logit_micro")
+        .localCheckpoint(eager=False)
+    )
+    m = mem.groupBy("lbl").agg(F.max("logit_micro").alias("mx"))
+    surv = (
+        mem.join(m, "lbl")
+        .filter(F.col("logit_micro") == F.col("mx"))
+        .groupBy("lbl")
+        .agg(F.min("id").alias("survivor_id"))
+    )
+    drops = (
+        labels.join(surv, "lbl")
+        .filter(F.col("id") != F.col("survivor_id"))
+        .select("id")
+    )
+    return scored, drops
 
 
 @_register(

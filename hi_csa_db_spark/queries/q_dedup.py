@@ -1,35 +1,19 @@
 """Deduplication + entity-resolution queries (exact, MinHash LSH, SimHash, n-gram Jaccard, SemDeDup, blocking).
 
-Split from the original single-file registry (round 8,
-VERDICT r7 item 8). Query/oracle text is moved VERBATIM so
-query_text_hash values (tools/banked_hashes.json) are unchanged;
-registry order is pinned by tools/registry_order.json. Names a
-query body references from another module resolve through the
-package-level namespace cross-pollination in queries/__init__.py
-(def-time names are imported explicitly below)."""
+Importing this module registers its queries in the package registry
+(``hi_csa_db_spark.queries``) in source order."""
 
 from __future__ import annotations
-import functools
-import glob
-import hashlib
-import inspect
-import json
-import os
-import re
-from typing import Callable
-from pyspark.sql import Column, DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-from hi_csa_db_spark.catalog import load_table, load_tables
-from hi_csa_db_spark.functions.hashing import (
-    KNUTH_HASH32_SQL,
-    MULT_HASH32_SQL,
-    knuth_hash32,
-)
-from hi_csa_db_spark.functions.text import absolutize_url, slugify, strip_punct, tokenize
-from hi_csa_db_spark.operators import classify, dedup, graph, ordered, similarity, textstats
-from hi_csa_db_spark.operators.merge import db_merge, union_streams
 
-from hi_csa_db_spark.queries import _ORACLES, _QUERIES, _register
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from hi_csa_db_spark.catalog import load_table
+from hi_csa_db_spark.functions.hashing import MULT_HASH32_SQL, knuth_hash32
+from hi_csa_db_spark.functions.text import strip_punct, tokenize
+from hi_csa_db_spark.operators import dedup, graph, ordered
+
+from hi_csa_db_spark.queries import _ORACLES, _register
 from hi_csa_db_spark.queries._shared import (
     _D6_LABELS_SQL,
     _ER1_CLUSTER_SQL,
@@ -37,7 +21,7 @@ from hi_csa_db_spark.queries._shared import (
     _X20_SCORED_SQL,
     _cos_sql,
 )
-
+from hi_csa_db_spark.queries.q_corpus import x20_quality_classifier
 
 
 # ---------------------------------------------------------------------------
@@ -341,17 +325,21 @@ def d3_ngram_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard with a hot-shingle guard: candidate pairs
     come from shingles with document frequency <= 100 (a stopword-like
     shingle in m docs would emit m^2 rows), but Jaccard is computed
-    over the FULL shingle sets, so scores stay exact. 20 most-similar
-    pairs, rank on rounded score with id tie-breaks."""
+    over the FULL shingle sets. Set sizes are exact (from the string
+    arrays); intersection counts are exact only while the xxhash64
+    shingle index is collision-free (see jaccard_pairs_hashed). 20
+    most-similar pairs, rank on rounded score with id tie-breaks."""
     docs = load_table(spark, sf_dir, "documents")
     # One tokenize pass feeds BOTH the inverted index and the verify
     # arrays: the doc-level shingle arrays are checkpointed once
     # (VERDICT r6 item 6; r12 NOTE: cache() tried and reverted — see
     # operators/dedup.py::jaccard_pairs). r13: candidate generation
     # runs over a 64-bit-HASHED inverted index (every exchange carries
-    # (long, long) rows instead of (long, string)), and the scores are
-    # verified exactly against the checkpointed string arrays — see
-    # jaccard_pairs_hashed for the equivalence argument.
+    # (long, long) rows instead of (long, string)). Set sizes come
+    # exactly from the checkpointed string arrays; intersection counts
+    # come from the hashed index, so they rely on xxhash64 being
+    # collision-free — see jaccard_pairs_hashed for the equivalence
+    # argument.
     arrs = dedup.shingle_arrays(docs, n=3).localCheckpoint(eager=False)
     pairs = dedup.jaccard_pairs_hashed(arrs, max_df=100)
     return (

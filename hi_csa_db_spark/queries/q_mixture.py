@@ -1,31 +1,19 @@
 """LLM training-data mixture/budget ops (x*): packing, domain mixtures, temperature/budget sampling, dataset cards, shards, train/eval splits, ablations.
 
-Split from q_corpus.py (round 10, VERDICT r9 item 6 -- the r9
-q_temporal recipe). Query/oracle text is moved VERBATIM so
-query_text_hash values (tools/banked_hashes.json) are unchanged;
-registry order is pinned by tools/registry_order.json. Names a
-query body references from another module resolve through the
-package-level namespace cross-pollination in queries/__init__.py
-(def-time names are imported explicitly below)."""
+Importing this module registers its queries in the package registry
+(``hi_csa_db_spark.queries``) in source order."""
 
 from __future__ import annotations
-import functools
-import glob
-import hashlib
-import inspect
-import json
-import os
-import re
-from typing import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from hi_csa_db_spark.catalog import load_table, load_tables
-from hi_csa_db_spark.functions.hashing import KNUTH_HASH32_SQL, knuth_hash32
-from hi_csa_db_spark.functions.text import absolutize_url, slugify, strip_punct, tokenize
-from hi_csa_db_spark.operators import classify, dedup, graph, ordered, similarity, textstats
-from hi_csa_db_spark.operators.merge import db_merge, union_streams
 
-from hi_csa_db_spark.queries import _ORACLES, _QUERIES, _register
+from hi_csa_db_spark.catalog import load_table
+from hi_csa_db_spark.functions.hashing import KNUTH_HASH32_SQL, knuth_hash32
+from hi_csa_db_spark.functions.text import strip_punct, tokenize
+from hi_csa_db_spark.operators import dedup, graph, ordered
+
+from hi_csa_db_spark.queries import _ORACLES, _register
 from hi_csa_db_spark.queries._shared import (
     _D6_LABELS_SQL,
     _DSIR_W_SQL,
@@ -33,8 +21,11 @@ from hi_csa_db_spark.queries._shared import (
     _PACK_BUDGET,
     _SHINGLE_SQL,
     _X20_SCORED_SQL,
+    _dsir_weight_frame,
+    _eval_split_hits,
     _x49_oracle,
 )
+from hi_csa_db_spark.queries.q_corpus import x12_quality_rules, x20_quality_classifier
 
 
 @_register(

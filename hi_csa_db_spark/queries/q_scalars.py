@@ -1,32 +1,23 @@
 """Scalar/function-suite queries: string/array/map/date/bitwise suites, sketches, as-of and range joins, ordered-slice ops.
 
-Split from the original single-file registry (round 8,
-VERDICT r7 item 8). Query/oracle text is moved VERBATIM so
-query_text_hash values (tools/banked_hashes.json) are unchanged;
-registry order is pinned by tools/registry_order.json. Names a
-query body references from another module resolve through the
-package-level namespace cross-pollination in queries/__init__.py
-(def-time names are imported explicitly below)."""
+Importing this module registers its queries in the package registry
+(``hi_csa_db_spark.queries``) in source order."""
 
 from __future__ import annotations
-import functools
-import glob
-import hashlib
-import inspect
-import json
-import os
-import re
-from typing import Callable
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from hi_csa_db_spark.catalog import load_table, load_tables
-from hi_csa_db_spark.functions.hashing import KNUTH_HASH32_SQL, knuth_hash32
-from hi_csa_db_spark.functions.text import absolutize_url, slugify, strip_punct, tokenize
-from hi_csa_db_spark.operators import classify, dedup, graph, ordered, similarity, textstats
-from hi_csa_db_spark.operators.merge import db_merge, union_streams
 
-from hi_csa_db_spark.queries import _ORACLES, _QUERIES, _register
+from hi_csa_db_spark.catalog import load_table
+from hi_csa_db_spark.functions.text import (
+    absolutize_url,
+    slugify,
+    strip_punct,
+    tokenize,
+)
+from hi_csa_db_spark.operators import ordered
 
+from hi_csa_db_spark.queries import _register
 
 
 @_register(

@@ -1,39 +1,24 @@
 """Temporal/time-series queries (t*): windows, sessions, resampling, seasonality, changepoints.
 
-Split from q_temporal.py in round 9 (VERDICT r8 item 8: 6.5k lines,
-the registry's growth magnet, pre-emptively split before the 8k
-hygiene cap). Query/oracle text is moved VERBATIM so
-query_text_hash AND query_dependency_hash values
-(tools/banked_hashes.json) are unchanged; registry order is pinned
-by tools/registry_order.json. Names a query body references from
-another module resolve through the package-level namespace
-cross-pollination in queries/__init__.py (def-time names are
-imported explicitly below)."""
+Importing this module registers its queries in the package registry
+(``hi_csa_db_spark.queries``) in source order."""
 
 from __future__ import annotations
-import functools
-import glob
-import hashlib
-import inspect
-import json
-import os
-import re
-from typing import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from hi_csa_db_spark.catalog import load_table, load_tables
-from hi_csa_db_spark.functions.hashing import KNUTH_HASH32_SQL, knuth_hash32
-from hi_csa_db_spark.functions.text import absolutize_url, slugify, strip_punct, tokenize
-from hi_csa_db_spark.operators import classify, dedup, graph, ordered, similarity, textstats
-from hi_csa_db_spark.operators.merge import db_merge, union_streams
 
-from hi_csa_db_spark.queries import _ORACLES, _QUERIES, _register
+from hi_csa_db_spark.catalog import load_table, load_tables
+from hi_csa_db_spark.operators import ordered
+
+from hi_csa_db_spark.queries import _register
 from hi_csa_db_spark.queries._shared import (
     _DAILY_SQL,
     _EWMA_W,
     _STL_SQL,
+    _daily_series,
+    _dsum,
 )
-
 
 
 @_register(

@@ -20,7 +20,7 @@ def test_chain_matches_pipe_training_prep_v3(spark, sf_dir):
         .resample_dsir()
         .audit_by("lang")
     )
-    ref = q.pipe_training_prep_v3(spark, sf_dir)
+    ref = q.queries()["pipe_training_prep_v3"](spark, sf_dir)
     assert sorted(api.columns) == sorted(ref.columns)
     assert _rows(api.select(*sorted(api.columns))) == _rows(
         ref.select(*sorted(ref.columns))
@@ -63,7 +63,7 @@ def test_corpus_perplexity_bucket_and_ffd_pack(spark, sf_dir):
     kept = {r.doc_id for r in c.df().select("doc_id").collect()}
     want = {
         r.doc_id
-        for r in q.x42_perplexity_buckets(spark, sf_dir)
+        for r in q.queries()["x42_perplexity_buckets"](spark, sf_dir)
         .filter("bucket = 'head'")
         .collect()
     }
@@ -90,7 +90,7 @@ def test_gate_quantile_matches_pipe_v7_unique_counts(spark, sf_dir):
         .groupBy("lang")
         .count()
     )
-    ref = q.pipe_training_prep_v7(spark, sf_dir).select("lang", "n_unique")
+    ref = q.queries()["pipe_training_prep_v7"](spark, sf_dir).select("lang", "n_unique")
     got = {r["lang"]: r["count"] for r in api.collect()}
     want = {r["lang"]: r["n_unique"] for r in ref.collect()}
     assert got == want
@@ -117,7 +117,7 @@ def test_decontaminate_matches_x80_kept_counts(spark, sf_dir):
         .groupBy("source")
         .count()
     )
-    ref = q.x80_eval_decontam(spark, sf_dir).select("source", "n_kept")
+    ref = q.queries()["x80_eval_decontam"](spark, sf_dir).select("source", "n_kept")
     got = {r["source"]: r["count"] for r in api.collect()}
     want = {r["source"]: r["n_kept"] for r in ref.collect()}
     # sources whose every doc was removed don't appear in the API frame
@@ -134,7 +134,7 @@ def test_cluster_safe_splits_match_x81_audit(spark, sf_dir):
     api = {r["split"]: r["count"] for r in c.df().groupBy("split").count().collect()}
     ref = {
         r["split"]: r["n_docs"]
-        for r in q.x81_cluster_safe_split(spark, sf_dir).collect()
+        for r in q.queries()["x81_cluster_safe_split"](spark, sf_dir).collect()
     }
     assert api == ref
     # structural leak-freedom: every verified near-dup pair agrees

@@ -160,13 +160,29 @@ def test_env_fingerprint_emittable():
         assert key in fp and fp[key]
 
 
-@pytest.mark.slow  # r13: ~53 s full-prefix replay; slow tier
+# ROUND-bearing oracles the boundary replay covers: near-dup and
+# similarity scores, TPC-H pricing, the quality score, and the window
+# and math suites.
+_BOUNDARY_REPLAY = (
+    "d3_ngram_jaccard_topk",
+    "d12_containment_pairs",
+    "q1_pricing_summary",
+    "d2_minhash_lsh_pairs",
+    "d14_minhash_calibration",
+    "s1_cosine_topk",
+    "s2_ivf_topk",
+    "x3_quality_score",
+    "w5_window_suite",
+    "f_math_suite",
+)
+
+
+@pytest.mark.slow  # r13: ~53 s replay; slow tier
 def test_round_boundary_stability_prefix():
-    """Every oracle in the driver-facing 50-query prefix (plus the
-    changed-block tail) must be stable when every ROUND input is
-    perturbed by more than the cross-host skew envelope — i.e. no
-    compared value sits close enough to a rounding boundary for a
-    driver host's libm/ROUND implementation to flip it. See
+    """Each oracle in ``_BOUNDARY_REPLAY`` must be stable when every
+    ROUND input is perturbed by more than the cross-host skew envelope
+    — i.e. no compared value sits close enough to a rounding boundary
+    for another host's libm/ROUND implementation to flip it. See
     tools/boundary_sweep.py for the envelope argument."""
     import re
     import subprocess
@@ -174,14 +190,10 @@ def test_round_boundary_stability_prefix():
 
     import __spark_entry__ as m
 
-    prefix = [
-        q
-        for q in list(m.queries())[:59]
-        if q in m.oracle_sql()
-        and re.search(r"\bROUND\s*\(", m.oracle_sql()[q], re.IGNORECASE)
-    ]
+    for q in _BOUNDARY_REPLAY:
+        assert re.search(r"\bROUND\s*\(", m.oracle_sql()[q], re.IGNORECASE), q
     r = subprocess.run(
-        [_sys.executable, "tools/boundary_sweep.py", SF01] + prefix,
+        [_sys.executable, "tools/boundary_sweep.py", SF01, *_BOUNDARY_REPLAY],
         capture_output=True,
         text=True,
         timeout=1200,

@@ -24,7 +24,7 @@ def test_fuzzy_blocking_equals_brute_force(spark, sf_dir):
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_name")
     blocked = {
         (r["p_partkey"], r["n_typo_neighbors"], r["nearest_neighbor_key"])
-        for r in queries.j10_fuzzy_neighbor_join(spark, sf_dir).collect()
+        for r in queries.queries()["j10_fuzzy_neighbor_join"](spark, sf_dir).collect()
     }
     rows = part.collect()
     names = [(r["p_partkey"], r["p_name"]) for r in rows]
@@ -60,7 +60,7 @@ def test_fuzzy_blocking_equals_brute_force(spark, sf_dir):
 def test_skyline_equals_dominance_definition(spark, sf_dir):
     out = {
         (r["p_partkey"], r["p_size"], r["price_cents"])
-        for r in queries.q_skyline_pareto(spark, sf_dir).collect()
+        for r in queries.queries()["q_skyline_pareto"](spark, sf_dir).collect()
     }
     pts = [
         (r["p_partkey"], r["p_size"], r["price_cents"])
@@ -94,7 +94,7 @@ def test_skyline_equals_dominance_definition(spark, sf_dir):
 def test_kendall_grid_matches_bruteforce_on_buckets(spark, sf_dir):
     """tau-b over the decile buckets == O(n^2) concordance counting
     over the SAME bucket assignments (small SF only)."""
-    row = queries.stats_kendall_grid(spark, sf_dir).collect()[0]
+    row = queries.queries()["stats_kendall_grid"](spark, sf_dir).collect()[0]
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     pairs = (
@@ -142,7 +142,7 @@ def test_kendall_grid_matches_bruteforce_on_buckets(spark, sf_dir):
 
 
 def test_chi2_closed_form(spark, sf_dir):
-    row = queries.stats_chi2_independence(spark, sf_dir).collect()[0]
+    row = queries.queries()["stats_chi2_independence"](spark, sf_dir).collect()[0]
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     pairs = [
@@ -230,7 +230,7 @@ def test_ivf_knn_join_probe_all_equals_brute_force(spark):
 
 
 def test_stratified_sample_exact_counts(spark, sf_dir):
-    out = queries.x55_stratified_sample(spark, sf_dir)
+    out = queries.queries()["x55_stratified_sample"](spark, sf_dir)
     per_lang = {
         r["lang"]: r["n"]
         for r in out.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -245,13 +245,13 @@ def test_stratified_sample_exact_counts(spark, sf_dir):
         assert per_lang[lang] == min(40, n)
     # deterministic: a second run returns the identical sample
     a = {tuple(r) for r in out.collect()}
-    b = {tuple(r) for r in queries.x55_stratified_sample(spark, sf_dir).collect()}
+    b = {tuple(r) for r in queries.queries()["x55_stratified_sample"](spark, sf_dir).collect()}
     assert a == b
 
 
 def test_heaps_law_monotone_and_totals(spark, sf_dir):
     rows = sorted(
-        queries.x56_heaps_law(spark, sf_dir).collect(), key=lambda r: r["decile"]
+        queries.queries()["x56_heaps_law"](spark, sf_dir).collect(), key=lambda r: r["decile"]
     )
     assert [r["decile"] for r in rows] == list(range(1, 11))
     for prev, cur in zip(rows, rows[1:]):
@@ -263,7 +263,7 @@ def test_heaps_law_monotone_and_totals(spark, sf_dir):
 
 
 def test_referential_integrity_clean_fixtures(spark, sf_dir):
-    out = {r["edge"]: r for r in queries.dq7_referential_integrity(spark, sf_dir).collect()}
+    out = {r["edge"]: r for r in queries.queries()["dq7_referential_integrity"](spark, sf_dir).collect()}
     assert set(out) == {
         "lineitem->orders",
         "lineitem->part",
@@ -316,6 +316,6 @@ def test_stream_debounce_equals_batch_t25(spark, sf_dir):
     """Session-window burst counting under the streaming planner must
     reproduce the batch lag-chain debounce EXACTLY (same thresholds,
     same microsecond precision)."""
-    batch = {tuple(r) for r in queries.t25_debounce(spark, sf_dir).collect()}
-    stream = {tuple(r) for r in queries.stream_debounce(spark, sf_dir).collect()}
+    batch = {tuple(r) for r in queries.queries()["t25_debounce"](spark, sf_dir).collect()}
+    stream = {tuple(r) for r in queries.queries()["stream_debounce"](spark, sf_dir).collect()}
     assert stream == batch
