@@ -1,10 +1,13 @@
 """Fluent corpus-curation API: the user-facing front door to the
 LLM-training-data tier. Each verb appends one independently
-oracle-proven stage (the same code paths the named queries run) to a
-single LAZY plan — Catalyst sees the whole chained pipeline and prunes
-columns/pushes filters across stage boundaries, exactly like the
-hand-written composites (pipe_training_prep_v3/v4, whose equality with
-this API is pinned by tests/test_corpus_api.py).
+oracle-proven stage to a single LAZY plan, calling the same functions
+the named queries call (operators.dedup.minhash_lsh_dedup and
+near_dup_clusters, q_corpus._quality_survivor_drops,
+_shared._dsir_keep and _split_80_10_10) — Catalyst sees the whole
+chained pipeline and prunes columns/pushes filters across stage
+boundaries, exactly like the hand-written composites
+(pipe_training_prep_v3, v6 and v7, whose equality with this API is
+pinned by tests/test_corpus_api.py).
 
     corpus = Corpus.load(spark, sf_dir)
     report = (corpus
@@ -22,8 +25,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from hi_csa_db_spark.functions.hashing import knuth_hash32
 
 
 class Corpus:
@@ -90,57 +91,25 @@ class Corpus:
         )
         return self._with(kept, "dedup_exact[d1]")
 
-    def dedup_near_keep_best(
-        self, n: int = 3, num_hashes: int = 16, bands: int = 8,
-        threshold: float = 0.05,
-    ) -> "Corpus":
+    def dedup_near_keep_best(self) -> "Corpus":
         """Collapse MinHash-LSH near-dup clusters keeping the BEST-
         quality member (max logit, min-id ties) — the d10 survivor
-        rule. Requires quality scores; computes them if the quality
-        stage hasn't run."""
-        from hi_csa_db_spark.queries.q_corpus import x20_quality_classifier
-        from hi_csa_db_spark.operators import dedup, graph
+        rule, computed over the current docs with x20's scores."""
+        from hi_csa_db_spark.queries.q_corpus import _quality_survivor_drops
 
-        docs_all = self._docs
-        scored = x20_quality_classifier(self.spark, self.sf_dir).select(
-            F.col("doc_id").alias("id"), "logit_micro"
-        )
-        pairs = dedup.minhash_lsh_dedup(
-            docs_all, n=n, num_hashes=num_hashes, bands=bands, threshold=threshold
-        )
-        edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        labels = graph.connected_components(edges, iterations=3)
-        mem = labels.join(scored, "id").select("id", "lbl", "logit_micro")
-        m = mem.groupBy("lbl").agg(F.max("logit_micro").alias("__mx"))
-        surv = (
-            mem.join(m, "lbl")
-            .filter(F.col("logit_micro") == F.col("__mx"))
-            .groupBy("lbl")
-            .agg(F.min("id").alias("__survivor_id"))
-        )
-        drops = (
-            labels.join(surv, "lbl")
-            .filter(F.col("id") != F.col("__survivor_id"))
-            .select("id")
-        )
-        kept = docs_all.join(
-            drops, docs_all["doc_id"] == drops["id"], "left_anti"
+        _, drops = _quality_survivor_drops(self.spark, self.sf_dir, self._docs)
+        kept = self._docs.join(
+            drops, self._docs["doc_id"] == drops["id"], "left_anti"
         )
         return self._with(kept, "dedup_near_keep_best[d10]")
 
     def resample_dsir(self) -> "Corpus":
         """DSIR importance resampling toward the target domain (x24's
         pure-integer micro-weight keep rule)."""
-        from hi_csa_db_spark.queries._shared import _dsir_weight_frame
+        from hi_csa_db_spark.queries._shared import _dsir_keep, _dsir_weight_frame
 
-        wdf = _dsir_weight_frame(self.spark, self.sf_dir)
-        wi = F.col("dsir_microweight")
-        p = F.greatest(
-            F.lit(0), F.least(F.lit(1000000), F.lit(500000) + 10 * wi)
-        )
-        u = knuth_hash32(F.col("doc_id"))  # overflow-safe (ADVICE r7)
-        dk = wdf.filter(u * 1000000 < p * F.lit(4294967296)).select("doc_id")
-        kept = self._docs.join(dk, "doc_id")
+        dk = _dsir_weight_frame(self.spark, self.sf_dir).filter(_dsir_keep())
+        kept = self._docs.join(dk.select("doc_id"), "doc_id")
         return self._with(kept, "resample_dsir[x24]")
 
     def decontaminate(self) -> "Corpus":
@@ -156,21 +125,11 @@ class Corpus:
         """Add a ``split`` column (train/val/test, 80/10/10) keyed by
         the near-dup CLUSTER label so duplicate clusters never
         straddle splits (x81's leakage-safe rule)."""
-        from hi_csa_db_spark.operators import dedup, graph
+        from hi_csa_db_spark.operators import dedup
+        from hi_csa_db_spark.queries._shared import _split_80_10_10
 
-        pairs = dedup.minhash_lsh_dedup(
-            self._docs, n=3, num_hashes=16, bands=8, threshold=0.05
-        )
-        edges = pairs.select(
-            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-        )
-        labels = graph.connected_components(edges, iterations=3)
-        u = knuth_hash32(F.coalesce(F.col("lbl"), F.col("doc_id")))
-        split = (
-            F.when(u < 3435973836, "train")
-            .when(u < 3865470566, "val")
-            .otherwise("test")
-        )
+        labels = dedup.near_dup_clusters(dedup.minhash_lsh_dedup(self._docs))
+        split = _split_80_10_10(F.coalesce(F.col("lbl"), F.col("doc_id")))
         tagged = (
             self._docs.join(
                 labels, self._docs["doc_id"] == labels["id"], "left"
@@ -219,24 +178,14 @@ class Corpus:
         kept = self._docs.join(b, "doc_id")
         return self._with(kept, f"keep_perplexity_buckets{buckets}[x42]")
 
-    def weight_soft_dedup(
-        self, n: int = 3, num_hashes: int = 16, bands: int = 8,
-        threshold: float = 0.05,
-    ) -> "Corpus":
+    def weight_soft_dedup(self) -> "Corpus":
         """SOFT dedup (d19): attach a ``weight_micro`` column
         (1e6 div near-dup-cluster size) instead of dropping rows —
         every duplicate cluster contributes one document's worth of
         training signal, complementary fragments survive."""
-        from hi_csa_db_spark.operators import dedup, graph
+        from hi_csa_db_spark.operators import dedup
 
-        pairs = dedup.minhash_lsh_dedup(
-            self._docs, n=n, num_hashes=num_hashes, bands=bands,
-            threshold=threshold,
-        )
-        edges = pairs.select(
-            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-        )
-        labels = graph.connected_components(edges, iterations=3)
+        labels = dedup.near_dup_clusters(dedup.minhash_lsh_dedup(self._docs))
         sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("__csz"))
         weighted = (
             self._docs.join(

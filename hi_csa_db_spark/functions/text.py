@@ -27,6 +27,17 @@ def tokenize(col: Column) -> Column:
     return F.filter(F.split(F.trim(col), " "), lambda t: t != F.lit(""))
 
 
+def word_ngrams(toks: Column, n: int) -> Column:
+    """Space-joined word n-grams of a token array, one per window start
+    (a higher-order ``transform`` over token indices — no UDF). An
+    array shorter than ``n`` yields one gram of all its tokens; an
+    empty array yields one empty string."""
+    return F.transform(
+        F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
+        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
+    )
+
+
 def absolutize_url(col: Column, base: str) -> Column:
     """F5: relative -> absolute URL unless already absolute.
 

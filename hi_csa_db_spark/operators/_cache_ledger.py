@@ -21,35 +21,26 @@ correctness-neutral (a later consumer recomputes), and the cap is far
 above any single query's cache count, so eviction only collects
 frames from queries that already ran to completion.
 
-Set ``SPARK_GRAFT_ITER_CACHE_CAP`` to tune (default 32; ``0`` disables
-eviction and restores the unbounded r12 behavior).
+``semanticHash`` is a 32-bit hash, so two distinct plans can collide:
+the later one then replaces the earlier in the ledger, which is left
+cached but untracked (bounded by the collision rate, never wrong).
 """
 
 from __future__ import annotations
 
-import os
 import threading
 from collections import OrderedDict
 
 from pyspark.sql import DataFrame
 
+_CAP = 32
 _LOCK = threading.Lock()
 _LEDGER: "OrderedDict[int, DataFrame]" = OrderedDict()
 
 
-def _cap() -> int:
-    try:
-        return int(os.environ.get("SPARK_GRAFT_ITER_CACHE_CAP", "32"))
-    except ValueError:
-        return 32
-
-
 def register_cached(df: DataFrame) -> DataFrame:
     """Track a just-``cache()``d DataFrame; evict the oldest distinct
-    plan beyond the cap. Returns ``df`` for fluent use."""
-    cap = _cap()
-    if cap <= 0:
-        return df
+    plan beyond ``_CAP``. Returns ``df`` for fluent use."""
     try:
         key = int(df._jdf.queryExecution().analyzed().semanticHash())
     except Exception:
@@ -61,7 +52,7 @@ def register_cached(df: DataFrame) -> DataFrame:
             _LEDGER[key] = df
         else:
             _LEDGER[key] = df
-            while len(_LEDGER) > cap:
+            while len(_LEDGER) > _CAP:
                 _, old = _LEDGER.popitem(last=False)
                 evict.append(old)
     for old in evict:

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hi_csa_db_spark.functions.text import strip_punct, tokenize
+from hi_csa_db_spark.functions.text import strip_punct, tokenize, word_ngrams
 
 
 def keyword_classify(
@@ -57,15 +57,7 @@ def keyword_classify(
         F.col(id_col),
         tokenize(F.lower(strip_punct(F.col(text_col)))).alias("__toks"),
     )
-    def _ngrams(n: int):
-        # NB: the lambda must take exactly one arg — F.transform treats
-        # a second parameter as the element index.
-        return F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size("__toks") - n, F.lit(0))),
-            lambda i: F.concat_ws(" ", F.slice("__toks", i + 1, n)),
-        )
-
-    shingle_arrays = [_ngrams(n) for n in range(1, max_n + 1)]
+    shingle_arrays = [word_ngrams(F.col("__toks"), n) for n in range(1, max_n + 1)]
     shingled = toks.select(
         F.col(id_col),
         F.explode(F.flatten(F.array(*shingle_arrays))).alias("__tok"),
@@ -110,19 +102,15 @@ def keyword_classify_literal(
         F.col(id_col),
         tokenize(F.lower(strip_punct(F.col(text_col)))).alias("__toks"),
     )
-
-    def _ngrams(n: int):
-        return F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size("__toks") - n, F.lit(0))),
-            lambda i: F.concat_ws(" ", F.slice("__toks", i + 1, n)),
-        )
-
     # n=1 shingles ARE the token array — skip the sequence/slice/
     # concat_ws rebuild the generic operator pays per token
     shingles = F.col("__toks")
     if max_n > 1:
         shingles = F.flatten(
-            F.array(shingles, *[_ngrams(n) for n in range(2, max_n + 1)])
+            F.array(
+                shingles,
+                *[word_ngrams(F.col("__toks"), n) for n in range(2, max_n + 1)],
+            )
         )
     kws = [k for k, _ in pairs]
     label_map = F.create_map(

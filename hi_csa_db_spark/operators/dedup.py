@@ -3,7 +3,9 @@
 Extension surface mandated by BASELINE.json (training-data pipeline
 ops). All hashing is md5-based (functions.hashing) so results are
 deterministic and portable across engines — the DuckDB oracle replays
-the identical math.
+the identical math. The one exception is internal: jaccard_pairs_hashed
+keys its inverted index by xxhash64(shingle) and never surfaces the
+hash in its output.
 
 Scale notes (100 TB):
 - shingling/minhashing are narrow maps after one explode;
@@ -18,7 +20,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from hi_csa_db_spark.functions.text import strip_punct, tokenize
+from hi_csa_db_spark.functions.text import strip_punct, tokenize, word_ngrams
+from hi_csa_db_spark.operators import graph
+from hi_csa_db_spark.operators._cache_ledger import register_cached
 
 
 def exact_dedup(
@@ -34,6 +38,20 @@ def exact_dedup(
     )
 
 
+def _doc_tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, __toks): punct-stripped, lowercased word tokens per doc."""
+    return docs.select(
+        F.col(id_col),
+        tokenize(F.lower(strip_punct(F.col(text_col)))).alias("__toks"),
+    )
+
+
+def _shingle_set(toks: Column, n: int) -> Column:
+    """The distinct, non-empty word n-grams of a token array — the
+    shingle set every near-dup operator compares."""
+    return F.array_distinct(F.filter(word_ngrams(toks, n), lambda s: s != ""))
+
+
 def shingles(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
 ) -> DataFrame:
@@ -42,31 +60,14 @@ def shingles(
     Tokenize (punct-stripped, lowercased), then slide an n-window via a
     higher-order ``transform`` over token indices — no UDF.
     """
-    toks = docs.select(
-        F.col(id_col),
-        tokenize(F.lower(strip_punct(F.col(text_col)))).alias("__toks"),
-    )
     # per-doc dedup happens INSIDE the array (array_distinct) before
     # the explode: identical semantics to a global distinct on
     # (id, shingle) — a shingle can only repeat within its own doc —
     # but zero shuffle, where .distinct() would repartition the whole
     # exploded index. Every consumer (minhash, LSH, jaccard) inherits
     # the saving.
-    return toks.select(
-        id_col,
-        F.explode(
-            F.array_distinct(
-                F.filter(
-                    F.transform(
-                        F.sequence(
-                            F.lit(0), F.greatest(F.size("__toks") - n, F.lit(0))
-                        ),
-                        lambda i: F.concat_ws(" ", F.slice("__toks", i + 1, n)),
-                    ),
-                    lambda s: s != "",
-                )
-            )
-        ).alias("shingle"),
+    return _doc_tokens(docs, id_col, text_col).select(
+        id_col, F.explode(_shingle_set(F.col("__toks"), n)).alias("shingle")
     )
 
 
@@ -112,16 +113,7 @@ def shingle_array(text_col: str = "text", n: int = 3):
     """The per-doc distinct shingle set as an ARRAY column — the same
     set shingles() explodes, kept un-exploded for narrow per-row
     consumers (streaming signatures)."""
-    toks = tokenize(F.lower(strip_punct(F.col(text_col))))
-    return F.array_distinct(
-        F.filter(
-            F.transform(
-                F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
-                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-            ),
-            lambda s: s != "",
-        )
-    )
+    return _shingle_set(tokenize(F.lower(strip_punct(F.col(text_col)))), n)
 
 
 def hash_pairs_col(shingle_col: Column) -> Column:
@@ -284,53 +276,8 @@ def shingle_arrays(
     once and derives both narrowly, instead of running the
     tokenize -> transform -> array_distinct chain twice over the full
     corpus (measured ~0.6 s of d3's 3.4 s at sf0.1)."""
-    toks = docs.select(
-        F.col(id_col),
-        tokenize(F.lower(strip_punct(F.col(text_col)))).alias("__toks"),
-    )
-    return toks.select(
-        id_col,
-        F.array_distinct(
-            F.filter(
-                F.transform(
-                    F.sequence(
-                        F.lit(0), F.greatest(F.size("__toks") - n, F.lit(0))
-                    ),
-                    lambda i: F.concat_ws(" ", F.slice("__toks", i + 1, n)),
-                ),
-                lambda s: s != "",
-            )
-        ).alias("__sh_arr"),
-    )
-
-
-def shingle_sizes(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
-    """Per-doc DISTINCT-shingle count computed BEFORE the explode —
-    size(array_distinct(...)) inside one narrow projection, so the
-    denominator table for Jaccard costs zero shuffles (the groupBy
-    re-aggregation of the exploded index it replaces shuffles the
-    whole inverted index just to count it)."""
-    toks = docs.select(
-        F.col(id_col),
-        tokenize(F.lower(strip_punct(F.col(text_col)))).alias("__toks"),
-    )
-    return toks.select(
-        id_col,
-        F.size(
-            F.array_distinct(
-                F.filter(
-                    F.transform(
-                        F.sequence(
-                            F.lit(0), F.greatest(F.size("__toks") - n, F.lit(0))
-                        ),
-                        lambda i: F.concat_ws(" ", F.slice("__toks", i + 1, n)),
-                    ),
-                    lambda s: s != "",
-                )
-            )
-        ).alias("sz"),
+    return _doc_tokens(docs, id_col, text_col).select(
+        id_col, _shingle_set(F.col("__toks"), n).alias("__sh_arr")
     )
 
 
@@ -338,153 +285,17 @@ def jaccard_pairs(
     shingle_df: DataFrame,
     candidates: DataFrame | None = None,
     id_col: str = "doc_id",
-    max_df: int | None = None,
-    sizes: DataFrame | None = None,
 ) -> DataFrame:
     """Exact Jaccard over distinct shingle sets for candidate pairs.
+    Returns (id_a, id_b, inter_cnt, jaccard).
 
+    With ``candidates`` (id_a, id_b), only those pairs are verified.
     With ``candidates=None``, pairs come from the shingle inverted
-    index itself (docs sharing at least one shingle) — still an
-    equi-join, never a cross join. Returns (id_a, id_b, inter_cnt,
-    jaccard).
-
-    ``max_df`` is the hot-shingle guard: a shingle present in m docs
-    emits m^2 candidate rows, so without a cap one stopword-like
-    shingle makes the inverted-index self-join quadratic (the round-1
-    scale-killer). With ``max_df`` set, shingles with document
-    frequency > max_df are excluded from CANDIDATE GENERATION only —
-    Jaccard is still computed over the full shingle sets (set-verify
-    path), so scores are exact; the only approximation is that a pair
-    sharing nothing but ultra-hot shingles (necessarily low-Jaccard)
-    is never considered. Worst-case candidate rows are bounded by
-    n_shingles * max_df^2 regardless of corpus skew.
+    index itself (docs sharing at least one shingle) — an equi-join,
+    never a cross join, but quadratic in a hot shingle's document
+    frequency: the exact reference. Corpus-scale candidate generation
+    with a document-frequency cap is jaccard_pairs_hashed.
     """
-    if candidates is None and max_df is not None:
-        # Split the inverted index by document frequency:
-        #  - rare shingles (df <= max_df): grouped to per-shingle doc
-        #    SETS (one shuffle of the rare index; each set is bounded
-        #    by max_df, so no group can blow executor memory), then
-        #    candidate pairs are generated MAP-SIDE by a double explode
-        #    over each set — fan-out per shingle still bounded by
-        #    max_df^2, but with no second shuffle and no self-join.
-        #    These pairs also DEFINE the candidate set.
-        #  - hot shingles (df > max_df): never pair-expanded; for the
-        #    already-bounded candidate set, count hot shingles present
-        #    in both docs via two index lookups (join on (doc),
-        #    then semi on (shingle, doc)) — linear in |candidates| x
-        #    hot-shingles-per-doc, and hot shingles are few DISTINCT
-        #    values by construction.
-        # inter = rare part + hot part, so Jaccard stays exact for
-        # every candidate pair. Rare/hot splitting joins the index
-        # against only the HOT-shingle list — by construction a small
-        # relation (stopword-like values), so AQE converts both the
-        # anti- and semi-join to broadcasts at runtime, and the index
-        # is never shuffled just for tagging; if the list ever grows
-        # past the broadcast threshold the plan degrades to a shuffle
-        # join instead of an executor OOM (no forced hint).
-        # Document frequency is counted FIRST with a narrow map-side-
-        # combinable count aggregate (no set materialization), and only
-        # shingles at df <= max_df ever reach collect_set — via a
-        # LEFT-ANTI join against the (small, stopword-like, AQE-
-        # broadcastable) hot-shingle list. No aggregation group can
-        # therefore materialize more than max_df doc ids no matter how
-        # skewed the corpus: the r3 formulation's collect_set over hot
-        # shingles (one group = that shingle's ENTIRE doc list — the
-        # VERDICT r3 perf-weak item) is gone from the plan, not just
-        # documented around. The hot branch needs only the flat
-        # (shingle, doc) stream, which is the input semi-joined against
-        # the same broadcast hot list — never grouped at all.
-        # tests/test_dedup_guards.py pins both the plan shape (anti-
-        # join below the set aggregate) and value-exactness with an
-        # ultra-hot shingle present.
-        # The shingle stream feeds THREE consumers (df count, rare set
-        # aggregate, hot semi-join): repartition it BY SHINGLE, with NO
-        # checkpoint (r12). Keeping the Exchange visible in the plan
-        # does two things a checkpoint cannot: EnsureRequirements sees
-        # hashpartitioning(shingle) already satisfied, so the
-        # shingle-keyed aggregates run WITHOUT their own exchanges, and
-        # AQE's stage reuse materializes the one repartition shuffle
-        # once for all three consumers (ReusedExchange), so the
-        # upstream map work still runs once — which is everything the
-        # old repartition+localCheckpoint bought, minus one full
-        # re-shuffle per aggregate (the checkpointed LogicalRDD loses
-        # its partitioning under AQE: every consumer re-exchanged) and
-        # minus one optimize/physical cycle at plan-build time.
-        # Interleaved A/B at sf0.1: 2.60 -> 1.98 s, values equal.
-        # r12 NOTE: a cache() here was tried
-        # (cross-pass CacheManager reuse won ~1 s on d3 in isolation)
-        # and REVERTED: a cached entry whose plan embeds the
-        # tokenize/shingle expression tree makes CacheManager's
-        # per-query useCachedData pass deep-compare it against every
-        # shingle-shaped subtree of every LATER query in the session
-        # — measured +4-5 s EACH on d10/pipe_training_prep_v3 in the
-        # full bench context. The lazy checkpoint keeps plan-compare
-        # state out of the session.
-        sh = shingle_df.repartition(F.col("shingle"))
-        dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-        hot_list = dfreq.filter(F.col("__df") > max_df).select("shingle")
-        rare_sets = (
-            sh.join(hot_list, "shingle", "left_anti")
-            .groupBy("shingle")
-            .agg(F.collect_set(id_col).alias("__ds"))
-        )
-        inter_rare = (
-            rare_sets.select(F.explode("__ds").alias("id_a"), "__ds")
-            .select(
-                "id_a",
-                F.explode(F.filter("__ds", lambda d: d > F.col("id_a"))).alias(
-                    "id_b"
-                ),
-            )
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("__rc"))
-        )
-        # Hot-shingle intersection counts (r12): each doc's hot-shingle
-        # SET rides the per-doc size join the plan already pays, and the
-        # per-pair overlap is one array_intersect — replacing the four
-        # pair-sized stages of the old shape (join hot index by id_a,
-        # semi-join by (id_b, shingle), pair re-aggregate, left-join
-        # back onto inter_rare). Per-group state stays bounded: a doc's
-        # hot set is capped by its own distinct-shingle count (docs are
-        # length-bounded), never by corpus skew — the unbounded-group
-        # guarantee (LeftAnti below collect_set) is about SHINGLE
-        # groups and is untouched above.
-        hot_sets = (
-            sh.join(hot_list, "shingle", "left_semi")
-            .groupBy(id_col)
-            .agg(F.collect_set("shingle").alias("__hs"))
-        )
-        if sizes is None:
-            sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-        info = sizes.join(hot_sets, id_col, "left")
-        sa = info.select(
-            F.col(id_col).alias("id_a"),
-            F.col("sz").alias("sz_a"),
-            F.col("__hs").alias("__hs_a"),
-        )
-        sb = info.select(
-            F.col(id_col).alias("id_b"),
-            F.col("sz").alias("sz_b"),
-            F.col("__hs").alias("__hs_b"),
-        )
-        # array_intersect(NULL, x) is NULL and size(NULL) is NULL, so a
-        # doc with no hot shingles contributes 0 via the coalesce.
-        hc = F.coalesce(
-            F.size(F.array_intersect("__hs_a", "__hs_b")), F.lit(0)
-        )
-        inter_c = F.col("__rc") + hc
-        return (
-            inter_rare.join(sa, "id_a")
-            .join(sb, "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                inter_c.alias("inter_cnt"),
-                (inter_c / (F.col("sz_a") + F.col("sz_b") - inter_c)).alias(
-                    "jaccard"
-                ),
-            )
-        )
     if candidates is not None:
         # Candidate-pair verify: intersect the two docs' shingle SETS
         # per pair (collect_set + array_intersect) instead of running
@@ -519,8 +330,7 @@ def jaccard_pairs(
                 ).alias("jaccard"),
             )
         )
-    if sizes is None:
-        sizes = shingle_df.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
+    sizes = shingle_df.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     a = shingle_df.alias("a")
     b = shingle_df.alias("b")
     inter = (
@@ -557,36 +367,46 @@ def jaccard_pairs_hashed(
     arr_col: str = "__sh_arr",
     max_df: int = 100,
 ) -> DataFrame:
-    """`jaccard_pairs(max_df=...)` over doc-level shingle ARRAYS, with
-    the inverted index 64-bit-hashed (r13, guide §2.3: shuffle and
-    compare 8-byte longs instead of variable-length shingle strings).
+    """Jaccard pairs over doc-level shingle ARRAYS with a
+    document-frequency cap on candidate generation, the inverted index
+    keyed by xxhash64(shingle) (8-byte longs shuffle and compare
+    cheaper than variable-length shingle strings). Returns (id_a, id_b,
+    inter_cnt, jaccard, sz_a, sz_b).
 
-    Input is the `shingle_arrays` frame (id, distinct-shingle array) —
-    the doc-level arrays the d3/d12 plans already materialize behind a
-    checkpoint. Structure is jaccard_pairs' max_df branch verbatim
-    (df count -> LeftAnti hot guard -> bounded rare sets -> map-side
-    pair explode -> pair count __rc; per-doc hot sets ride the size
-    join; inter = __rc + |hot_a ∩ hot_b|), with xxhash64(shingle)
-    substituted for the string key end to end: the one big
-    repartition, the df count, the rare-set aggregate, the hot sets
-    and the pair explode all carry (long, long) rows. Set sizes come
-    from F.size over the STRING arrays (exact). Bounded-memory
-    contract unchanged: the LeftAnti join sits below collect_set, so
-    no aggregation group can materialize more than max_df doc ids
-    (tests/test_dedup_guards.py twins pin the plan and values).
+    Input is the `shingle_arrays` frame (id, distinct-shingle array).
+    ``max_df`` is the hot-shingle guard: a shingle present in m docs
+    would emit m^2 candidate rows, so shingles with document frequency
+    > max_df are excluded from CANDIDATE GENERATION only. Jaccard is
+    still computed over the full sets, so a pair's score is exact; the
+    only approximation is that a pair sharing nothing but hot shingles
+    (necessarily low-Jaccard) is never considered. Candidate rows are
+    bounded by n_shingles * max_df^2 regardless of corpus skew.
 
-    Exactness: identical to jaccard_pairs whenever xxhash64 is
-    injective on the corpus's distinct shingles — verified
-    collision-free on the fixtures at every SF (r13), and
-    P(any collision among n distinct shingles) <= n^2/2^65 (~5e-8 at
-    n=1e6). A collision can merge two shingles' df counts/doc sets
+    Shape: df count -> LeftAnti hot guard -> bounded rare sets ->
+    map-side pair explode -> pair count __rc; inter = __rc +
+    |hot_a ∩ hot_b|. Two properties hold the memory bound:
+    - the LeftAnti join against the hot list sits BELOW collect_set,
+      so no shingle group ever materializes more than max_df doc ids
+      (a hot shingle's whole doc list never reaches an aggregate);
+    - each doc's hot-shingle set rides the per-doc size join, so the
+      hot part of a pair's overlap is one array_intersect, and a
+      doc's hot set is bounded by its own length, not by corpus skew.
+    Set sizes come from F.size over the STRING arrays (exact).
+    tests/test_dedup_guards.py pins the plan shape and the values
+    against the exact self-join ``jaccard_pairs(shingles)``.
+
+    Exactness: identical to the exact self-join on every pair the cap
+    admits whenever xxhash64 is injective on the corpus's distinct
+    shingles — verified collision-free on the fixtures at every SF,
+    and P(any collision among n distinct shingles) <= n^2/2^65 (~5e-8
+    at n=1e6). A collision can merge two shingles' df counts/doc sets
     (candidate-set drift in the same approximation class as max_df
     itself) or count a cross-doc colliding pair as shared (score
-    inflation with per-pair probability |A||B|/2^64). The r13
-    alternative — re-verifying every candidate against the exact
-    string arrays — was built and MEASURED WORSE by 5x: the pair
-    aggregate produces intersections for free, while per-pair
-    array_intersect over 1.13M sf0.1 candidates cost ~17 s standalone.
+    inflation with per-pair probability |A||B|/2^64). Re-verifying
+    every candidate against the exact string arrays was built and
+    measured 5x worse: the pair aggregate produces intersections for
+    free, while per-pair array_intersect over 1.13M sf0.1 candidates
+    cost ~17 s standalone.
     """
     # hash AFTER the explode: xxhash64 as a codegen'd projection, not
     # a `transform` lambda (interpreted HOFs get no codegen — the
@@ -601,6 +421,15 @@ def jaccard_pairs_hashed(
     # the win. defaultParallelism scales with the session, not a
     # local constant (guide §2.5: partition by downstream work, not
     # shuffled bytes).
+    # The repartitioned index feeds three consumers (df count, rare
+    # sets, hot sets) with NO checkpoint: EnsureRequirements sees the
+    # hash partitioning on __h already satisfied, so the __h-keyed
+    # aggregates add no exchange, and AQE reuses the one repartition
+    # shuffle for all three (ReusedExchange). A cache() here was
+    # measured and reverted (r12): a cached plan holding the
+    # tokenize/shingle tree makes CacheManager deep-compare it against
+    # every later shingle-shaped query in the session (+4-5 s each on
+    # d10/pipe_training_prep_v3 in the full bench).
     n_parts = arrs.sparkSession.sparkContext.defaultParallelism
     h = (
         arrs.select(F.col(id_col), F.explode(F.col(arr_col)).alias("__s"))
@@ -816,8 +645,6 @@ def _lsh_scored_candidates(
     # accumulating one retained per_doc frame per LSH query
     # (VERDICT r12 item 5); recency-keyed by plan, so the bench's
     # cross-pass reuse is untouched.
-    from hi_csa_db_spark.operators._cache_ledger import register_cached
-
     per_doc = register_cached(
         base.groupBy(id_col)
         .agg(*aggs, F.collect_set("shingle").alias("__shs"))
@@ -852,18 +679,16 @@ def minhash_lsh_dedup(
     text_col: str = "text",
     n: int = 3,
     num_hashes: int = 16,
-    bands: int | None = None,
-    threshold: float = 0.5,
+    bands: int = 8,
+    threshold: float = 0.05,
 ) -> DataFrame:
     """Full near-dup pipeline: shingle -> minhash -> LSH -> verify.
 
     Returns verified near-duplicate pairs (id_a, id_b, jaccard) with
-    exact Jaccard >= threshold among LSH candidates. ``bands=None``
-    derives the band geometry from the threshold (plan_lsh_bands);
-    for the defaults (16 hashes, t=0.5) that's the classic 8x2.
+    exact Jaccard >= threshold among LSH candidates. The defaults are
+    the engine's one near-dup geometry: word 3-gram shingles, 16
+    hashes in 8 bands of 2 rows, Jaccard >= 0.05.
     """
-    if bands is None:
-        bands, _rows = plan_lsh_bands(num_hashes, threshold)
     scored = _lsh_scored_candidates(docs, id_col, text_col, n, num_hashes, bands)
     verified = scored.select(
         "id_a",
@@ -901,6 +726,17 @@ def minhash_lsh_pairs_micro(
         F.expr(
             "CAST(__ic * 1000000 div (__szsum - __ic) AS BIGINT)"
         ).alias("j_micro"),
+    )
+
+
+def near_dup_clusters(pairs: DataFrame) -> DataFrame:
+    """Near-dup CLUSTERS from verified pairs (id_a, id_b): (id, lbl),
+    lbl = the min id reached by 3 rounds of label propagation
+    (graph.connected_components). Docs in no pair get no row; callers
+    that need every doc left-join and coalesce."""
+    return graph.connected_components(
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+        iterations=3,
     )
 
 
@@ -1050,10 +886,7 @@ def chunk_spans(
     kept. Pure higher-order array functions (sequence + slice inside
     one projection), so chunking is a narrow map — no shuffle, no UDF.
     """
-    toks = docs.select(
-        F.col(id_col),
-        tokenize(F.lower(strip_punct(F.col(text_col)))).alias("__toks"),
-    )
+    toks = _doc_tokens(docs, id_col, text_col)
     n_chunks = F.greatest(
         F.ceil(F.size("__toks") / F.lit(float(width))).cast("long"), F.lit(1)
     )

@@ -9,6 +9,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hi_csa_db_spark.catalog import load_table
+from hi_csa_db_spark.functions.hashing import knuth_hash32
 from hi_csa_db_spark.functions.text import strip_punct, tokenize
 from hi_csa_db_spark.operators import textstats
 
@@ -486,6 +487,30 @@ def _dsir_weight_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST((__s + 100000000L * __m) div __m - 100000000L AS BIGINT)"
             ).alias("dsir_microweight"),
         )
+    )
+
+
+def _dsir_keep() -> Column:
+    """x24's DSIR keep decision over a ``_dsir_weight_frame`` row: keep
+    probability p = clamp(500000 + 10 * dsir_microweight, 0, 1e6) in
+    micro units; the doc is kept iff knuth_hash32(doc_id) * 1e6 <
+    p * 2^32. Pure bigint arithmetic (the hash is the overflow-safe
+    form), so a re-run or the oracle keeps the identical set."""
+    p = F.greatest(
+        F.lit(0),
+        F.least(F.lit(1000000), F.lit(500000) + 10 * F.col("dsir_microweight")),
+    )
+    return knuth_hash32(F.col("doc_id")) * 1000000 < p * F.lit(4294967296)
+
+
+def _split_80_10_10(key: Column) -> Column:
+    """x81's train/val/test split of ``key``: knuth_hash32(key) against
+    floor(0.8 * 2^32) and floor(0.9 * 2^32)."""
+    u = knuth_hash32(key)
+    return (
+        F.when(u < 3435973836, "train")
+        .when(u < 3865470566, "val")
+        .otherwise("test")
     )
 
 

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from hi_csa_db_spark.catalog import load_table, spread_input
 from hi_csa_db_spark.functions.text import strip_punct, tokenize
-from hi_csa_db_spark.operators import dedup, graph, ordered, textstats
+from hi_csa_db_spark.operators import dedup, ordered, textstats
 
 from hi_csa_db_spark.queries import _ORACLES, _register
 from hi_csa_db_spark.queries._shared import (
@@ -787,9 +787,12 @@ def x20_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _quality_survivor_drops(
     spark: SparkSession, sf_dir: str, docs: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
-    """Shared stage chain of the pipe_v3/v4 composites: x20 quality
-    scores + the ids d10-style best-quality survivorship DROPS from
-    each near-dup cluster. Returns (scored, drops).
+    """The one implementation of d10-style best-quality survivorship,
+    shared by the pipe_v3/v4/v5 composites and
+    Corpus.dedup_near_keep_best: x20 quality scores + the ids
+    survivorship DROPS from each near-dup cluster of ``docs`` (the
+    member with the max logit survives, min id on ties). Returns
+    (scored, drops); scored is (doc_id, n_words, logit_micro, keep).
 
     Every frame consumed by more than one downstream stage is lazily
     checkpointed ONCE (scored: survivor selection + final kept join;
@@ -804,11 +807,7 @@ def _quality_survivor_drops(
         .select("doc_id", "n_words", "logit_micro", "keep")
         .localCheckpoint(eager=False)
     )
-    pairs = dedup.minhash_lsh_dedup(
-        docs, n=3, num_hashes=16, bands=8, threshold=0.05
-    )
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    labels = graph.connected_components(edges, iterations=3).localCheckpoint(
+    labels = dedup.near_dup_clusters(dedup.minhash_lsh_dedup(docs)).localCheckpoint(
         eager=False
     )
     mem = (
@@ -2366,9 +2365,9 @@ def x66_threshold_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the threshold fan-out is a 4-row broadcast over the scored pairs
     (never re-scoring per threshold)."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_pairs_micro(
-        docs, n=3, num_hashes=16, bands=8
-    ).withColumnRenamed("j_micro", "__jm")
+    pairs = dedup.minhash_lsh_pairs_micro(docs).withColumnRenamed(
+        "j_micro", "__jm"
+    )
     thr = spark.createDataFrame(
         [(50000,), (100000,), (200000,), (400000,)], ["thr_micro"]
     )

@@ -90,10 +90,7 @@ def d2_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup: shingle -> md5 minhash (16) -> band (8x2)
     -> bucket equi-join -> exact-Jaccard verify. The LSH equi-join
     replaces the O(n^2) cross join at scale."""
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.minhash_lsh_dedup(
-        docs, n=3, num_hashes=16, bands=8, threshold=0.05
-    )
+    return dedup.minhash_lsh_dedup(load_table(spark, sf_dir, "documents"))
 
 
 @_register(
@@ -221,11 +218,7 @@ def d6_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse to ONE survivor even when (a,c) was never directly
     compared."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_dedup(
-        docs, n=3, num_hashes=16, bands=8, threshold=0.05
-    )
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    labels = graph.connected_components(edges, iterations=3)
+    labels = dedup.near_dup_clusters(dedup.minhash_lsh_dedup(docs))
     return labels.groupBy(F.col("lbl").alias("survivor_id")).agg(
         F.count(F.lit(1)).alias("n_members")
     )
@@ -268,11 +261,7 @@ def d19_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny aggregate. At 100 TB the per-doc weight column would be
     persisted next to the corpus for the training loader to consume."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_dedup(
-        docs, n=3, num_hashes=16, bands=8, threshold=0.05
-    )
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    labels = graph.connected_components(edges, iterations=3)
+    labels = dedup.near_dup_clusters(dedup.minhash_lsh_dedup(docs))
     sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("csz"))
     docw = (
         docs.select("doc_id")
@@ -333,7 +322,7 @@ def d3_ngram_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One tokenize pass feeds BOTH the inverted index and the verify
     # arrays: the doc-level shingle arrays are checkpointed once
     # (VERDICT r6 item 6; r12 NOTE: cache() tried and reverted — see
-    # operators/dedup.py::jaccard_pairs). r13: candidate generation
+    # operators/dedup.py::jaccard_pairs_hashed). r13: candidate generation
     # runs over a 64-bit-HASHED inverted index (every exchange carries
     # (long, long) rows instead of (long, string)). Set sizes come
     # exactly from the checkpointed string arrays; intersection counts
@@ -853,8 +842,7 @@ def sem1_semdedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("cos_sim") >= 0.3)
     )
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    labels = graph.connected_components(edges, iterations=3)
+    labels = dedup.near_dup_clusters(pairs)
     return labels.groupBy(F.col("lbl").alias("survivor_id")).agg(
         F.count(F.lit(1)).alias("n_members")
     )
@@ -893,11 +881,7 @@ def d10_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation; the quality join adds one doc-level equi-join and two
     small aggregations by cluster label."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_dedup(
-        docs, n=3, num_hashes=16, bands=8, threshold=0.05
-    )
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    labels = graph.connected_components(edges, iterations=3)
+    labels = dedup.near_dup_clusters(dedup.minhash_lsh_dedup(docs))
     scored = x20_quality_classifier(spark, sf_dir).select("doc_id", "logit_micro")
     # mem feeds two consumers (the per-cluster max and the join-back);
     # checkpoint it once so the LSH + components + scoring lineage is
@@ -1035,11 +1019,7 @@ def d18_dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     means the threshold is too strict). Composes d6's pair->component
     machinery; one extra size rollup + a 1-row total broadcast."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_dedup(
-        docs, n=3, num_hashes=16, bands=8, threshold=0.05
-    )
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    labels = graph.connected_components(edges, iterations=3)
+    labels = dedup.near_dup_clusters(dedup.minhash_lsh_dedup(docs))
     sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("cluster_size"))
     tot = sizes.agg(F.sum("cluster_size").alias("n_docs_total"))
     return (
@@ -1861,6 +1841,7 @@ def er6_bcubed_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     input (er4's contract: at scale, run on a stratified sample)."""
     from hi_csa_db_spark.operators.dedup import (
         jaccard_pairs,
+        near_dup_clusters,
         shingles,
         sorted_neighborhood_pairs,
     )
@@ -1874,12 +1855,7 @@ def er6_bcubed_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     slab = graph.connected_components(spairs, iterations=3)
     sh = shingles(docs, n=3)
-    tpairs = (
-        jaccard_pairs(sh)
-        .filter(F.col("jaccard") >= 0.05)
-        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
-    tlab = graph.connected_components(tpairs, iterations=3)
+    tlab = near_dup_clusters(jaccard_pairs(sh).filter(F.col("jaccard") >= 0.05))
     el = (
         docs.select("doc_id")
         .join(slab, docs["doc_id"] == slab["id"], "left")

@@ -1110,9 +1110,7 @@ def u23_backfill_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; pure integer micros throughout."""
     ev = load_table(spark, sf_dir, "events")
     t = F.expr("ts_ns div 1000")
-    arr = t + F.pmod(F.col("event_id") * F.lit(2654435761), F.lit(4294967296)) % F.lit(
-        300000000
-    )
+    arr = t + knuth_hash32(F.col("event_id")) % F.lit(300000000)
     d = ev.select(t.alias("t"), arr.alias("arr")).select(
         F.expr("t div 86400000000").alias("event_day"),
         F.expr("arr div 86400000000").alias("arrival_day"),

@@ -5,13 +5,13 @@ Importing this module registers its queries in the package registry
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hi_csa_db_spark.catalog import load_table
 from hi_csa_db_spark.functions.hashing import KNUTH_HASH32_SQL, knuth_hash32
 from hi_csa_db_spark.functions.text import strip_punct, tokenize
-from hi_csa_db_spark.operators import dedup, graph, ordered
+from hi_csa_db_spark.operators import dedup, ordered
 
 from hi_csa_db_spark.queries import _ORACLES, _register
 from hi_csa_db_spark.queries._shared import (
@@ -21,8 +21,10 @@ from hi_csa_db_spark.queries._shared import (
     _PACK_BUDGET,
     _SHINGLE_SQL,
     _X20_SCORED_SQL,
+    _dsir_keep,
     _dsir_weight_frame,
     _eval_split_hits,
+    _split_80_10_10,
     _x49_oracle,
 )
 from hi_csa_db_spark.queries.q_corpus import x12_quality_rules, x20_quality_classifier
@@ -288,7 +290,7 @@ def x17_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     totals = toks.groupBy("source").agg(F.sum("n_tokens").alias("src_tokens"))
     floor_t = totals.agg(F.min("src_tokens").alias("min_tokens"))
-    u = F.pmod(F.col("doc_id") * F.lit(2654435761), F.lit(4294967296))
+    u = knuth_hash32(F.col("doc_id"))
     return (
         toks.join(F.broadcast(totals), "source")
         .join(F.broadcast(floor_t))
@@ -542,7 +544,7 @@ def x21_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("r") * F.lit(4294967296.0)).cast("bigint").alias("thr"),
         )
     )
-    u = F.pmod(F.col("doc_id") * F.lit(2654435761), F.lit(4294967296))
+    u = knuth_hash32(F.col("doc_id"))
     return (
         toks.join(F.broadcast(thr), "source")
         .filter(u < F.col("thr"))
@@ -678,16 +680,10 @@ def x24_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. Nothing new shuffles beyond the weight computation."""
     w = _dsir_weight_frame(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    wi = F.col("dsir_microweight")
     keep = w.select(
-        "doc_id",
-        wi.alias("wi"),
-        F.greatest(F.lit(0), F.least(F.lit(1000000), F.lit(500000) + 10 * wi)).alias(
-            "p"
-        ),
-        F.pmod(F.col("doc_id") * F.lit(2654435761), F.lit(4294967296)).alias("u"),
+        "doc_id", F.col("dsir_microweight").alias("wi"), _dsir_keep().alias("__k")
     )
-    kept = F.col("u") * 1000000 < F.col("p") * F.lit(4294967296)
+    kept = F.col("__k")
     return (
         keep.join(docs, "doc_id")
         .groupBy("lang")
@@ -1109,9 +1105,7 @@ def x62_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     label is a pure md5 function of the id, so the join adds no new
     shuffle key."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_dedup(
-        docs, n=3, num_hashes=16, bands=8, threshold=0.05
-    )
+    pairs = dedup.minhash_lsh_dedup(docs)
     nib = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
     split = (
         F.when(nib.isin(*list("0123456789ab")), F.lit("train"))
@@ -1251,11 +1245,7 @@ def x78_dedup_mixture_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join-shaped left join, a <= |sources| aggregate, and two
     1-row total broadcasts."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_dedup(
-        docs, n=3, num_hashes=16, bands=8, threshold=0.05
-    )
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    labels = graph.connected_components(edges, iterations=3)
+    labels = dedup.near_dup_clusters(dedup.minhash_lsh_dedup(docs))
     drops = labels.filter(F.col("id") != F.col("lbl")).select("id")
     # two consumers (per-source rollup + kept total) would re-run the
     # whole LSH+components derivation; truncate once (the er3 pattern)
@@ -1356,30 +1346,18 @@ def x81_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (already bounded) verified pair set against doc-level splits, and
     the report is a 3-group aggregate."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_dedup(
-        docs, n=3, num_hashes=16, bands=8, threshold=0.05
-    ).localCheckpoint(eager=False)
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    labels = graph.connected_components(edges, iterations=3)
+    pairs = dedup.minhash_lsh_dedup(docs).localCheckpoint(eager=False)
+    labels = dedup.near_dup_clusters(pairs)
     eff = (
         docs.select("doc_id")
         .join(labels, docs["doc_id"] == labels["id"], "left")
         .select("doc_id", F.coalesce("lbl", F.col("doc_id")).alias("lbl"))
     )
-
-    def _split(col: str) -> Column:
-        u = knuth_hash32(F.col(col))  # overflow-safe (ADVICE r7)
-        return (
-            F.when(u < 3435973836, "train")
-            .when(u < 3865470566, "val")
-            .otherwise("test")
-        )
-
     sp = eff.select(
         "doc_id",
         "lbl",
-        _split("lbl").alias("split"),
-        _split("doc_id").alias("naive_split"),
+        _split_80_10_10(F.col("lbl")).alias("split"),
+        _split_80_10_10(F.col("doc_id")).alias("naive_split"),
     ).localCheckpoint(eager=False)
     a = sp.select(
         F.col("doc_id").alias("id_a"),
@@ -1463,11 +1441,7 @@ def x82_ablation_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = x20_quality_classifier(spark, sf_dir).select(
         "doc_id", "n_words", "keep"
     )
-    pairs = dedup.minhash_lsh_dedup(
-        docs, n=3, num_hashes=16, bands=8, threshold=0.05
-    )
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    labels = graph.connected_components(edges, iterations=3)
+    labels = dedup.near_dup_clusters(dedup.minhash_lsh_dedup(docs))
     flags = (
         corpus.select("doc_id")
         .join(scored, "doc_id")

@@ -20,6 +20,7 @@ from hi_csa_db_spark.queries._shared import (
     _DSIR_W_SQL,
     _PACK_BUDGET,
     _X20_SCORED_SQL,
+    _dsir_keep,
     _dsir_weight_frame,
     _ktruss_oracle,
 )
@@ -250,7 +251,7 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_partkey").alias("src"),
         (F.lit(1_000_000) + F.col("l_suppkey")).alias("dst"),
     )
-    return graph.connected_components(edges, iterations=3)
+    return graph.connected_components(edges)
 
 
 @_register(
@@ -741,7 +742,7 @@ def pipe_training_prep_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     totals = deduped.groupBy("source").agg(F.sum("n_tokens").alias("src_tokens"))
     floor_t = totals.agg(F.min("src_tokens").alias("min_tokens"))
-    u = F.pmod(F.col("doc_id") * F.lit(2654435761), F.lit(4294967296))
+    u = knuth_hash32(F.col("doc_id"))
     kept = (
         deduped.join(F.broadcast(totals), "source")
         .join(F.broadcast(floor_t))
@@ -823,11 +824,7 @@ def pipe_training_prep_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     9 scans before)."""
     docs = load_table(spark, sf_dir, "documents")
     scored, drops = _quality_survivor_drops(spark, sf_dir, docs)
-    wdf = _dsir_weight_frame(spark, sf_dir)
-    wi = F.col("dsir_microweight")
-    p = F.greatest(F.lit(0), F.least(F.lit(1000000), F.lit(500000) + 10 * wi))
-    u = F.pmod(F.col("doc_id") * F.lit(2654435761), F.lit(4294967296))
-    dk = wdf.filter(u * 1000000 < p * F.lit(4294967296)).select("doc_id")
+    dk = _dsir_weight_frame(spark, sf_dir).filter(_dsir_keep()).select("doc_id")
     kept = (
         docs.select("doc_id", "lang")
         .join(scored.filter(F.col("keep") == 1), "doc_id")
@@ -937,11 +934,7 @@ def pipe_training_prep_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     item 4)."""
     docs = load_table(spark, sf_dir, "documents")
     scored, drops = _quality_survivor_drops(spark, sf_dir, docs)
-    wdf = _dsir_weight_frame(spark, sf_dir)
-    wi = F.col("dsir_microweight")
-    p = F.greatest(F.lit(0), F.least(F.lit(1000000), F.lit(500000) + 10 * wi))
-    u = F.pmod(F.col("doc_id") * F.lit(2654435761), F.lit(4294967296))
-    dk = wdf.filter(u * 1000000 < p * F.lit(4294967296)).select("doc_id")
+    dk = _dsir_weight_frame(spark, sf_dir).filter(_dsir_keep()).select("doc_id")
     heavy = (
         dedup.duplicated_spans(docs, k=5)
         .filter(10 * F.col("covered_tokens") >= 3 * F.col("n_tokens"))
@@ -1332,13 +1325,11 @@ def pipe_training_prep_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     x35-style shard manifest.
 
     Scale: the gate is one window pass partitioned by lang (parallel
-    across slices) feeding a semi-join; everything else inherits
-    v3/v4's proven stage contracts; manifest is a 16-group
-    map-combined aggregate."""
+    across slices) feeding a semi-join; survivorship and the DSIR
+    keep rule are v3/v4's own (_quality_survivor_drops, _dsir_keep);
+    manifest is a 16-group map-combined aggregate."""
     docs = load_table(spark, sf_dir, "documents")
-    scored = x20_quality_classifier(spark, sf_dir).select(
-        "doc_id", "n_words", "logit_micro"
-    )
+    scored, drops = _quality_survivor_drops(spark, sf_dir, docs)
     lab = scored.join(docs.select("doc_id", "lang"), "doc_id")
     qw = Window.partitionBy("lang").orderBy(
         F.col("logit_micro").desc(), F.col("doc_id").asc()
@@ -1352,31 +1343,7 @@ def pipe_training_prep_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") * 10 <= F.col("n") * 4)
         .select("doc_id")
     )
-    pairs = dedup.minhash_lsh_dedup(
-        docs, n=3, num_hashes=16, bands=8, threshold=0.05
-    )
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    labels = graph.connected_components(edges, iterations=3)
-    mem = labels.join(
-        scored.select(F.col("doc_id").alias("id"), "logit_micro"), "id"
-    ).select("id", "lbl", "logit_micro")
-    m = mem.groupBy("lbl").agg(F.max("logit_micro").alias("mx"))
-    surv = (
-        mem.join(m, "lbl")
-        .filter(F.col("logit_micro") == F.col("mx"))
-        .groupBy("lbl")
-        .agg(F.min("id").alias("survivor_id"))
-    )
-    drops = (
-        labels.join(surv, "lbl")
-        .filter(F.col("id") != F.col("survivor_id"))
-        .select("id")
-    )
-    wdf = _dsir_weight_frame(spark, sf_dir)
-    wi = F.col("dsir_microweight")
-    p = F.greatest(F.lit(0), F.least(F.lit(1000000), F.lit(500000) + 10 * wi))
-    u = F.pmod(F.col("doc_id") * F.lit(2654435761), F.lit(4294967296))
-    dk = wdf.filter(u * 1000000 < p * F.lit(4294967296)).select("doc_id")
+    dk = _dsir_weight_frame(spark, sf_dir).filter(_dsir_keep()).select("doc_id")
     kept = (
         docs.select("doc_id", "text")
         .join(scored.select("doc_id", "n_words"), "doc_id")

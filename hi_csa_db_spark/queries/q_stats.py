@@ -1813,9 +1813,7 @@ def stats_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     u = ev.select("user_id").distinct()
     arm = F.when(
-        F.pmod(F.col("user_id") * F.lit(2654435761), F.lit(4294967296))
-        < F.lit(2147483648),
-        "A",
+        knuth_hash32(F.col("user_id")) < F.lit(2147483648), "A"
     ).otherwise("B")
     c = u.select(arm.alias("arm")).agg(
         F.sum(F.when(F.col("arm") == "A", 1).otherwise(0))

@@ -9,6 +9,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hi_csa_db_spark.catalog import load_table, load_tables
+from hi_csa_db_spark.functions.hashing import knuth_hash32
 from hi_csa_db_spark.operators import ordered
 
 from hi_csa_db_spark.queries import _register
@@ -2334,8 +2335,7 @@ def t38_watermark_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("ts_ns div 1000").alias("us"),
     ).withColumn(
         "arr",
-        F.col("us")
-        + (F.col("event_id") * 2654435761) % 4294967296 % 300000000,
+        F.col("us") + knuth_hash32(F.col("event_id")) % 300000000,
     )
     win = (
         Window.partitionBy("user_id")

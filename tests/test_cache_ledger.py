@@ -22,7 +22,7 @@ def _distinct_frame(spark, i):
 
 
 def test_eviction_unpersists_beyond_cap(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_ITER_CACHE_CAP", "3")
+    monkeypatch.setattr(_cache_ledger, "_CAP", 3)
     frames = [
         _iter_layout(_distinct_frame(spark, i * 100), "src") for i in range(5)
     ]
@@ -38,7 +38,7 @@ def test_eviction_unpersists_beyond_cap(spark, monkeypatch):
 
 
 def test_recache_same_plan_refreshes_recency(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_ITER_CACHE_CAP", "2")
+    monkeypatch.setattr(_cache_ledger, "_CAP", 2)
     a = _iter_layout(_distinct_frame(spark, 0), "src")
     b = _iter_layout(_distinct_frame(spark, 1000), "src")
     a.count(), b.count()
@@ -51,20 +51,8 @@ def test_recache_same_plan_refreshes_recency(spark, monkeypatch):
     assert b.storageLevel.useMemory is False
 
 
-def test_cap_zero_disables_eviction(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_ITER_CACHE_CAP", "0")
-    frames = [
-        _iter_layout(_distinct_frame(spark, i * 100), "src") for i in range(4)
-    ]
-    for f in frames:
-        f.count()
-    assert all(f.storageLevel.useMemory for f in frames)
-    for f in frames:
-        f.unpersist()
-
-
 def test_release_all(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_ITER_CACHE_CAP", "8")
+    monkeypatch.setattr(_cache_ledger, "_CAP", 8)
     f = _iter_layout(_distinct_frame(spark, 0), "src")
     f.count()
     assert f.storageLevel.useMemory is True

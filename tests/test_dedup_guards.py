@@ -1,23 +1,38 @@
 """Scale-guard property tests for the hot-key quadratic paths
-(round-1 verdict items 4-5): jaccard_pairs' document-frequency cap
-and the length-banded edit-distance join."""
+(round-1 verdict items 4-5): jaccard_pairs_hashed's document-frequency
+cap, checked against the exact self-join, the length-banded
+edit-distance join, and near-dup clustering."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from hi_csa_db_spark.operators import dedup
 
 
-def test_hot_shingle_corpus_emits_no_candidates(spark):
-    # 60 identical single-shingle docs: unguarded, the inverted-index
-    # self-join would emit 60*59/2 pairs from ONE shingle; with the df
-    # cap the hot shingle never enters candidate generation.
-    docs = spark.range(60).select(
-        F.col("id").alias("doc_id"), F.lit("alpha beta gamma").alias("text")
-    )
+def _assert_capped_matches_exact(docs, caps):
+    """jaccard_pairs_hashed against the exact self-join reference:
+    every capped pair is an exact pair with the same inter_cnt and
+    jaccard, and every exact pair sharing a shingle with df <= cap is
+    present."""
     sh = dedup.shingles(docs, n=3)
-    guarded = dedup.jaccard_pairs(sh, max_df=10)
-    assert guarded.count() == 0
+    arrs = dedup.shingle_arrays(docs, n=3)
+    exact = {
+        (r["id_a"], r["id_b"]): (r["inter_cnt"], r["jaccard"])
+        for r in dedup.jaccard_pairs(sh).collect()
+    }
+    sets: dict = {}
+    for r in sh.collect():
+        sets.setdefault(r["doc_id"], set()).add(r["shingle"])
+    dfreq = {r["shingle"]: r["count"] for r in sh.groupBy("shingle").count().collect()}
+    for cap in caps:
+        hashed = {
+            (r["id_a"], r["id_b"]): (r["inter_cnt"], r["jaccard"])
+            for r in dedup.jaccard_pairs_hashed(arrs, max_df=cap).collect()
+        }
+        for pair, got in hashed.items():
+            assert exact.get(pair) == got, (cap, pair)
+        for a, b in exact:
+            if any(dfreq[s] <= cap for s in sets[a] & sets[b]):
+                assert (a, b) in hashed, (cap, a, b)
 
 
 def test_df_cap_keeps_jaccard_exact_over_full_sets(spark):
@@ -30,18 +45,9 @@ def test_df_cap_keeps_jaccard_exact_over_full_sets(spark):
         (3, "common base phrase other beta one"),
         (4, "totally different words entirely here now"),
     ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    sh = dedup.shingles(docs, n=3)
-    guarded = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dedup.jaccard_pairs(sh, max_df=3).collect()
-    }
-    exact = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dedup.jaccard_pairs(sh).collect()
-    }
-    for pair, j in guarded.items():
-        assert j == pytest.approx(exact[pair]), pair
+    _assert_capped_matches_exact(
+        spark.createDataFrame(rows, ["doc_id", "text"]), (2, 3, 100)
+    )
 
 
 def test_candidate_rows_bounded_by_df_cap(spark):
@@ -52,22 +58,22 @@ def test_candidate_rows_bounded_by_df_cap(spark):
         F.concat(F.lit("shared shingle text plus word "), F.col("id").cast("string")).alias("text"),
     )
     sh = dedup.shingles(docs, n=3)
-    cap = 5
-    kept = (
-        sh.groupBy("shingle").count().filter(F.col("count") <= cap)
-        .agg(F.sum(F.col("count") * F.col("count")))
-        .collect()[0][0]
-    ) or 0
-    pairs = dedup.jaccard_pairs(sh, max_df=cap)
-    assert pairs.count() <= kept
+    arrs = dedup.shingle_arrays(docs, n=3)
+    for cap in (2, 3, 100):
+        kept = (
+            sh.groupBy("shingle").count().filter(F.col("count") <= cap)
+            .agg(F.sum(F.col("count") * F.col("count")))
+            .collect()[0][0]
+        ) or 0
+        assert dedup.jaccard_pairs_hashed(arrs, max_df=cap).count() <= kept, cap
+    _assert_capped_matches_exact(docs, (2, 3, 100))
 
 
 def test_hashed_candidates_match_string_candidates(spark):
-    # r13: jaccard_pairs_hashed runs the whole max_df pipeline over a
-    # 64-bit hashed inverted index — candidate set AND scores must
-    # match the string operator for every max_df on a
-    # hash-collision-free corpus (the fixtures were verified
-    # collision-free at every SF).
+    # candidate generation runs over a 64-bit hashed inverted index;
+    # on a hash-collision-free corpus (the fixtures were verified
+    # collision-free at every SF) its pairs and scores are the exact
+    # string self-join's, restricted to pairs sharing a rare shingle.
     rows = [
         (1, "common base phrase unique alpha one"),
         (2, "common base phrase unique alpha two"),
@@ -75,22 +81,9 @@ def test_hashed_candidates_match_string_candidates(spark):
         (4, "totally different words entirely here now"),
         (5, "common base phrase unique alpha one extra"),
     ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    sh = dedup.shingles(docs, n=3)
-    arrs = dedup.shingle_arrays(docs, n=3)
-    for cap in (2, 3, 100):
-        hashed = {
-            (r["id_a"], r["id_b"]): (r["inter_cnt"], r["jaccard"])
-            for r in dedup.jaccard_pairs_hashed(arrs, max_df=cap).collect()
-        }
-        stringy = {
-            (r["id_a"], r["id_b"]): (r["inter_cnt"], r["jaccard"])
-            for r in dedup.jaccard_pairs(sh, max_df=cap).collect()
-        }
-        assert set(hashed) == set(stringy), cap
-        for pair, (ic, j) in hashed.items():
-            assert ic == stringy[pair][0], (cap, pair)
-            assert j == pytest.approx(stringy[pair][1]), (cap, pair)
+    _assert_capped_matches_exact(
+        spark.createDataFrame(rows, ["doc_id", "text"]), (2, 3, 100)
+    )
 
 
 def test_hashed_hot_shingle_corpus_emits_no_candidates(spark):
@@ -138,26 +131,11 @@ def test_edit_distance_pairs_equals_unblocked_join(spark):
     assert banded == unblocked
 
 
-def test_hot_shingle_never_reaches_collect_set_in_plan(spark):
-    """VERDICT r3 item 3: the df cap must live in the PLAN, not the
-    docs — collect_set may only aggregate the anti-joined (rare-only)
-    shingle stream, so no group can materialize an unbounded doc set
-    at fleet scale. Assert the optimized plan puts a LeftAnti join
-    below the set aggregate, and value-exactness survives with an
-    ultra-hot shingle present."""
-    rows = [(i, "hot hot hot hot filler unique%d word" % i) for i in range(30)]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    sh = dedup.shingles(docs, n=3)
-    pairs = dedup.jaccard_pairs(sh, max_df=5)
-    plan = pairs._jdf.queryExecution().optimizedPlan().toString()
-    assert "LeftAnti" in plan
-    # and the guard stays value-exact: guarded scores == unguarded
-    guarded = {
-        (r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()
-    }
-    exact = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dedup.jaccard_pairs(sh).collect()
-    }
-    for pair, j in guarded.items():
-        assert j == pytest.approx(exact[pair]), pair
+def test_near_dup_clusters_collapse_chain_to_min_label(spark):
+    # a~b and b~c were verified but (a, c) never was: all three still
+    # share the label min(a, b, c); a doc in no pair gets no row.
+    pairs = spark.createDataFrame(
+        [(20, 30, 0.5), (10, 20, 0.4)], ["id_a", "id_b", "jaccard"]
+    )
+    labels = {r["id"]: r["lbl"] for r in dedup.near_dup_clusters(pairs).collect()}
+    assert labels == {10: 10, 20: 10, 30: 10}
