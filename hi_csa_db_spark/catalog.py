@@ -18,6 +18,7 @@ from __future__ import annotations
 import os
 from collections.abc import Mapping
 from typing import Iterator
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -109,8 +110,8 @@ def normalize_events(df: DataFrame) -> DataFrame:
 
 # Footer-inferred schema per table path (metadata only — column
 # names/types, no data and no query results; the same class of
-# planning metadata as _SPLIT_PARALLELISM below, which Spark itself
-# caches in InMemoryFileIndex/FileStatusCache). Catalyst's
+# planning metadata Spark itself caches in
+# InMemoryFileIndex/FileStatusCache). Catalyst's
 # ResolveDataSource re-reads parquet footers on EVERY schema-less
 # ``spark.read.parquet`` call — ~100-135 ms per load_table call even
 # in a warm local session (measured r12: pipe_training_prep_v3 spent
@@ -150,67 +151,67 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# Footer-derived split parallelism per table path (metadata only — row
-# GROUP counts, no data read and no cached query results; the same
-# class of planning metadata Spark itself caches in InMemoryFileIndex).
-_SPLIT_PARALLELISM: dict[str, int] = {}
+# Parquet row-group count per input file (footer metadata only: no
+# data read and no cached query results; the same class of planning
+# metadata as _TABLE_SCHEMAS above). Keyed like _TABLE_SCHEMAS, so a
+# rewritten file is re-read, and one entry per path.
+_ROW_GROUPS: dict[str, tuple[tuple[int, int], int]] = {}
 
 
-def scan_split_parallelism(sf_dir: str, name: str) -> int:
-    """How many parallel tasks a scan of this table can actually use:
-    the number of parquet ROW GROUPS across its files. Spark splits
-    parquet scans by byte range, but a task only produces rows for row
-    groups whose midpoint falls in its range — a single-row-group file
-    is a single-task scan no matter how many splits Spark makes.
-    Footer metadata only (pyarrow), cached per path; 0 = unknown."""
-    key = f"{sf_dir}/{name}"
-    if key not in _SPLIT_PARALLELISM:
-        total = 0
-        try:
-            import glob as _glob
+def _row_groups(uri: str) -> int:
+    """Row groups in one local parquet file named by an
+    ``inputFiles()`` URI. Raises OSError/ValueError when the footer
+    cannot be read (remote scheme, missing or non-parquet file)."""
+    import pyarrow.parquet as pq
 
-            import pyarrow.parquet as pq
-
-            path = f"{sf_dir}/{name}.parquet"
-            files = (
-                _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-                if os.path.isdir(path)
-                else [path]
-            )
-            for f in files:
-                total += pq.ParquetFile(f).metadata.num_row_groups
-        except Exception:
-            total = 0
-        _SPLIT_PARALLELISM[key] = total
-    return _SPLIT_PARALLELISM[key]
+    url = urlparse(uri)
+    if url.scheme not in ("", "file"):
+        raise ValueError(f"no local footer for {uri}")
+    path = unquote(url.path)
+    st = os.stat(path)
+    stamp = (st.st_mtime_ns, st.st_size)
+    hit = _ROW_GROUPS.get(path)
+    if hit is None or hit[0] != stamp:
+        hit = (stamp, pq.ParquetFile(path).metadata.num_row_groups)
+        _ROW_GROUPS[path] = hit
+    return hit[1]
 
 
-def spread_input(df: DataFrame, sf_dir: str, name: str, *keys: str) -> DataFrame:
-    """Redistribute a NARROW-parallelism scan across the session's
-    cores before CPU-heavy per-row work (guide §2.5 "input skew: one
-    huge unsplittable file — repartition immediately after the read").
+def spread_input(df: DataFrame, *keys: str) -> DataFrame:
+    """Hash-repartition a NARROW file scan across the session's cores
+    before CPU-heavy per-row work (SCALE.md "THE partition-sizing
+    rule", narrow-input spread).
 
-    The driver fixtures are single-row-group parquet files, so every
-    scan is a single task: a query whose plan has no Exchange runs
-    START TO FINISH ON ONE CORE regardless of cluster size. For
-    queries whose per-row compute (tokenize chains, rolling hashes,
-    decimal aggregates) dominates, one cheap hash exchange of the
-    narrow input buys full-core parallelism for the expensive stage.
+    A parquet scan runs one task per row group at most: a task only
+    produces rows for row groups whose midpoint falls in its byte
+    range, so a single-row-group file is a single-task scan however
+    many splits Spark makes, and a plan with no Exchange above it runs
+    start to finish on one core. When the row groups across the
+    frame's own ``inputFiles()`` (footer metadata, memoized per file)
+    number fewer than ``defaultParallelism``, this returns
+    ``df.repartition(defaultParallelism, *keys)``; otherwise ``df``
+    unchanged, so a wide production table pays nothing. Keyed on the
+    consumer's own aggregate key, the hash partitioning satisfies that
+    aggregate and replaces its shuffle instead of adding one.
 
-    Scale-adaptive, not a local[32] constant: the exchange is added
-    ONLY when the source's available split parallelism (parquet row
-    groups, footer metadata) is below the session's core count. On a
-    production table (thousands of row groups) this is a no-op — the
-    scan is already wide and the extra shuffle would be pure cost.
-    Hash-partitioning on a stable key (not round-robin) avoids the
-    sort-before-repartition pass and keeps task assignment
-    deterministic under retries."""
-    spark = df.sparkSession
-    cores = spark.sparkContext.defaultParallelism
-    splits = scan_split_parallelism(sf_dir, name)
-    if splits == 0 or splits >= cores:
+    Detection runs nothing: no ``.rdd`` and no ``getNumPartitions()``
+    (under AQE those execute the child's shuffle stages). Streaming
+    frames, frames with no input files (in-memory data, checkpoints)
+    and frames whose footers cannot be read come back unchanged."""
+    if df.isStreaming:
         return df
-    return df.repartition(cores, *[F.col(k) for k in keys])
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    splits = 0
+    for uri in df.inputFiles():
+        try:
+            splits += _row_groups(uri)
+        except (OSError, ValueError):
+            return df
+        if splits >= cores:
+            return df
+    if splits == 0:
+        return df
+    return df.repartition(cores, *keys)
 
 
 class LazyTables(Mapping):

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hi_csa_db_spark.catalog import spread_input
 from hi_csa_db_spark.functions.text import strip_punct, tokenize, word_ngrams
 from hi_csa_db_spark.operators import graph
 from hi_csa_db_spark.operators._cache_ledger import register_cached
@@ -39,8 +40,16 @@ def exact_dedup(
 
 
 def _doc_tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, __toks): punct-stripped, lowercased word tokens per doc."""
-    return docs.select(
+    """(id, __toks): punct-stripped, lowercased word tokens per doc.
+
+    The one tokenizer of every near-dup and quality operator, so the
+    narrow-input spread sits here: a single-row-group ``docs`` scan is
+    hash-partitioned on ``id_col`` before the tokenize, and the
+    per-document work downstream (shingles, md5, min-hash partials,
+    quality features) runs on every core. The consumers' own
+    ``groupBy(id_col)`` reuses that partitioning, so no shuffle is
+    added where one follows."""
+    return spread_input(docs, id_col).select(
         F.col(id_col),
         tokenize(F.lower(strip_punct(F.col(text_col)))).alias("__toks"),
     )

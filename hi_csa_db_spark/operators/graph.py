@@ -70,16 +70,6 @@ def _iter_layout(df: DataFrame, *keys: str, adaptive: bool = True) -> DataFrame:
     return register_cached(df.repartition(n, *keys).cache())
 
 
-def resolve_edges(edges: DataFrame, nodes: DataFrame) -> DataFrame:
-    """J3: ordinal edges -> URL edges via double dimension join.
-
-    Reference: NetwEdges.From/.To are 1-based indices into NetwIndex.
-    """
-    src = nodes.select(F.col("id").alias("src"), F.col("url").alias("src_url"))
-    dst = nodes.select(F.col("id").alias("dst"), F.col("url").alias("dst_url"))
-    return edges.join(F.broadcast(src), "src").join(F.broadcast(dst), "dst")
-
-
 def degrees(edges: DataFrame) -> DataFrame:
     """Out/in degree per node id: (id, out_deg, in_deg).
 

@@ -10,7 +10,6 @@ narrow transformations.
 from __future__ import annotations
 
 from functools import reduce
-from typing import Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -29,10 +28,6 @@ def union_streams(streams: dict[str, DataFrame], type_col: str = "type") -> Data
     """
     tagged = [df.withColumn(type_col, F.lit(name)) for name, df in streams.items()]
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), tagged)
-
-
-def union_all(frames: Iterable[DataFrame]) -> DataFrame:
-    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
 
 
 def upsert(base: DataFrame, updates: DataFrame, keys: list[str]) -> DataFrame:

@@ -162,14 +162,9 @@ def x5_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     over char 8-grams — base-31 polynomial mod 1e9+7, pure bigint
     arithmetic on both engines (r4: was md5-per-gram).
 
-    r12: spread_input — the per-char hash transform is the heaviest
-    per-row map in the headline set and the single-row-group fixture
-    scan ran it on ONE core (plan had zero exchanges). One narrow
-    hash exchange of (doc_id, text) first: 1.64 s -> 0.44 s at sf0.1
-    on local[32]; no-op when the source scan is already wide."""
-    docs = spread_input(
-        load_table(spark, sf_dir, "documents"), sf_dir, "documents", "doc_id"
-    )
+    The per-char hash transform runs after ``spread_input`` (SCALE.md
+    "THE partition-sizing rule")."""
+    docs = spread_input(load_table(spark, sf_dir, "documents"), "doc_id")
     return textstats.fingerprints(docs, k=8, keep=5)
 
 
@@ -752,10 +747,12 @@ def x20_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast side input at fleet scale; scoring cost is independent
     of model delivery."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.col("doc_id"),
-        F.explode(tokenize(F.lower(strip_punct(F.col("text"))))).alias("w"),
-    ).filter(F.col("w") != "")
+    # explode an expression, not the bare column: over a bare column
+    # Catalyst infers size(__toks) > 0 and pushes it, tokenizer and
+    # all, below the tokenizer's spread exchange onto the scan's task
+    toks = dedup._doc_tokens(docs, "doc_id", "text").select(
+        "doc_id", F.explode(F.filter("__toks", lambda w: w != "")).alias("w")
+    )
     feats = toks.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_words"),
         F.sum(F.length("w")).cast("long").alias("sum_len"),

@@ -48,24 +48,17 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     needed columns push down to the parquet scan; partial aggregation is
     map-side (7 groups total, so the shuffle is a few KB at any scale).
 
-    r12: spread_input after the filter — the decimal partial
-    aggregation is the expensive stage and the single-row-group
-    fixture scan ran it on one core. The filter stays BELOW the added
-    exchange (still pushed to the scan, pinned by
-    tests/test_plans.py); the exchange redistributes survivors so the
-    partial aggregate runs on every core: 1.54 s -> 0.87 s at sf0.1.
-    No-op when the source scan is already wide. The spread key is
-    l_extendedprice — near-unique (even hash spread) and ALREADY in
-    the aggregate's input, so the scan's 7-column pruning (pinned in
-    tests/test_plans.py) is unchanged."""
+    The decimal partial aggregate runs after ``spread_input``
+    (SCALE.md "THE partition-sizing rule"); the filter stays below the
+    exchange, pushed to the scan. The spread key l_extendedprice is
+    near-unique and already in the aggregate's input, so the scan's
+    7-column pruning is unchanged (both pinned in tests/test_plans.py)."""
     li = load_table(spark, sf_dir, "lineitem")
     return (
         spread_input(
             li.filter(
                 F.col("l_shipdate") <= F.lit("2000-09-02 00:00:00").cast("timestamp")
             ),
-            sf_dir,
-            "lineitem",
             "l_extendedprice",
         )
         .groupBy("l_returnflag", "l_linestatus")

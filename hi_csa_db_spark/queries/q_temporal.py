@@ -3338,8 +3338,11 @@ def t51_event_regex_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"'{name}', '{pat}', __m{i}, __t{i}"
         for i, (name, pat) in enumerate(pats)
     )
+    # a global agg emits one row even over no sessions, where the
+    # oracle's GROUP BY emits none: drop it before the unpivot
     return (
-        agg.selectExpr(
+        agg.filter(F.col("__n") > 0)
+        .selectExpr(
             "__n",
             f"stack({len(pats)}, {stack})"
             " AS (pattern_name, pattern, n_matched_sessions, total_matches)",
