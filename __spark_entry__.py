@@ -1,9 +1,10 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""The engine's three entry points: ``entry``, ``queries`` and
+``oracle_sql``.
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash -> CORRECTNESS_r{N}.json).
+``entry(spark)`` builds the flagship table as a smoke check. Each
+``queries()[name]`` has a DuckDB twin ``oracle_sql()[name]``;
+tools/check_oracle.py runs both over the same parquet fixtures and
+compares row count, schema and an order-insensitive value hash.
 
 The engine lives in ``hi_csa_db_spark/``; this module is a thin
 adapter over its query catalog, the hi_csa_db_spark/queries/ package.

@@ -141,30 +141,18 @@ class Corpus:
 
     def gate_quantile(self, keep_permille: int = 400) -> "Corpus":
         """Keep the top ``keep_permille``/1000 of each language slice
-        by classifier logit (x26's self-calibrating quantile gate).
-        Pure integer keep rule — rank*1000 <= slice_count*permille
-        over a deterministic (logit desc, doc_id) per-slice rank — so
-        no float percentile boundary exists; the threshold
-        self-adjusts as the corpus mix shifts (an absolute logit
-        cutoff drifts). One window pass partitioned by lang: parallel
-        in slices, never global."""
-        from pyspark.sql import Window
-
+        by classifier logit: x26's self-calibrating integer quantile
+        gate (queries/_shared.py::_lang_quantile_gate)."""
+        from hi_csa_db_spark.queries._shared import _lang_quantile_gate
         from hi_csa_db_spark.queries.q_corpus import x20_quality_classifier
 
         scored = x20_quality_classifier(self.spark, self.sf_dir).select(
             "doc_id", "logit_micro"
         )
-        lab = self._docs.join(scored, "doc_id")
-        w = Window.partitionBy("lang").orderBy(
-            F.col("logit_micro").desc(), F.col("doc_id").asc()
+        ranked, keep = _lang_quantile_gate(
+            self._docs.join(scored, "doc_id"), keep_permille
         )
-        ranked = lab.withColumn("__rn", F.row_number().over(w)).withColumn(
-            "__n", F.count(F.lit(1)).over(Window.partitionBy("lang"))
-        )
-        kept = ranked.filter(
-            F.col("__rn") * 1000 <= F.col("__n") * keep_permille
-        ).drop("__rn", "__n", "logit_micro")
+        kept = ranked.filter(keep).drop("__rn", "__n", "logit_micro")
         return self._with(kept, f"gate_quantile[{keep_permille}|x26]")
 
     def keep_perplexity_buckets(self, buckets: tuple[str, ...] = ("head",)) -> "Corpus":
@@ -185,20 +173,7 @@ class Corpus:
         training signal, complementary fragments survive."""
         from hi_csa_db_spark.operators import dedup
 
-        labels = dedup.near_dup_clusters(dedup.minhash_lsh_dedup(self._docs))
-        sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("__csz"))
-        weighted = (
-            self._docs.join(
-                labels.withColumnRenamed("id", "doc_id"), "doc_id", "left"
-            )
-            .join(sizes, "lbl", "left")
-            .drop("lbl")
-            .withColumn(
-                "weight_micro",
-                F.expr("CAST(1000000 div COALESCE(__csz, 1) AS BIGINT)"),
-            )
-            .drop("__csz")
-        )
+        weighted = dedup.soft_dedup_weights(self._docs).drop("cluster_size")
         return self._with(weighted, "weight_soft_dedup[d19]")
 
     # -- terminal reports -------------------------------------------------

@@ -295,15 +295,6 @@ def encode_wav(samples: np.ndarray, rate: int = 16000) -> bytes:
 # ---------------------------------------------------------------------------
 
 
-def resize_nearest(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Nearest-neighbor resize — the cheap deterministic resize kernel
-    (swap in an area/bilinear kernel where quality matters)."""
-    h, w = img.shape[:2]
-    ys = (np.arange(out_h) * h // out_h).clip(0, h - 1)
-    xs = (np.arange(out_w) * w // out_w).clip(0, w - 1)
-    return img[ys][:, xs]
-
-
 def image_feature(img: np.ndarray, dim: int = 8) -> list[float]:
     """Fixed-dim image descriptor: per-channel means + gray std +
     geometry. Deterministic, resolution-invariant where possible."""

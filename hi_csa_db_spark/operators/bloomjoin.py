@@ -136,22 +136,3 @@ def bloom_semi_join(
     )
 
 
-def merge_blooms(a: DataFrame, b: DataFrame) -> DataFrame:
-    """OR-merge two 1-row bloom maps built with the same (m_bits,
-    k_hashes): the result is BIT-IDENTICAL to building one filter
-    over the union of both key sets — the monoid property that makes
-    the filter incrementally maintainable (yesterday's filter + the
-    delta's filter, no rebuild over history). Pinned exactly by
-    tests/test_r3_ops.py."""
-    entries = a.select(F.explode("bloom").alias("widx", "word")).unionByName(
-        b.select(F.explode("bloom").alias("widx", "word"))
-    )
-    return (
-        entries.groupBy("widx")
-        .agg(F.bit_or("word").alias("word"))
-        .agg(
-            F.map_from_entries(F.collect_list(F.struct("widx", "word"))).alias(
-                "bloom"
-            )
-        )
-    )

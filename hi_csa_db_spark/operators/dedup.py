@@ -749,6 +749,27 @@ def near_dup_clusters(pairs: DataFrame) -> DataFrame:
     )
 
 
+def soft_dedup_weights(docs: DataFrame) -> DataFrame:
+    """SOFT dedup (d19): ``docs`` (doc_id, text, ...) with its near-dup
+    ``cluster_size`` (1 for a doc in no cluster) and the training
+    weight ``weight_micro`` = 1e6 div cluster size, so every duplicate
+    cluster contributes one document's worth of signal. A left join of
+    every doc onto near_dup_clusters(minhash_lsh_dedup(docs))."""
+    labels = near_dup_clusters(minhash_lsh_dedup(docs))
+    sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("__csz"))
+    return (
+        docs.join(labels.withColumnRenamed("id", "doc_id"), "doc_id", "left")
+        .join(sizes, "lbl", "left")
+        .drop("lbl")
+        .withColumn("cluster_size", F.coalesce("__csz", F.lit(1)))
+        .withColumn(
+            "weight_micro",
+            F.expr("CAST(1000000 div COALESCE(__csz, 1) AS BIGINT)"),
+        )
+        .drop("__csz")
+    )
+
+
 def simhash(
     docs: DataFrame,
     id_col: str = "doc_id",

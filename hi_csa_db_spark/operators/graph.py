@@ -14,6 +14,8 @@ bucketed by src so the frontier join is shuffle-free on one side.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -68,6 +70,74 @@ def _iter_layout(df: DataFrame, *keys: str, adaptive: bool = True) -> DataFrame:
     # r13: cached layouts register in the bounded ledger so a long
     # session cannot accumulate unpersisted frames (VERDICT r12 item 5).
     return register_cached(df.repartition(n, *keys).cache())
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """The symmetrized, distinct (src, dst) edge list in the cached
+    ``_iter_layout`` keyed on src: the adjacency every undirected
+    operator here walks."""
+    return _iter_layout(
+        edges.select("src", "dst")
+        .unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .distinct(),
+        "src",
+    )
+
+
+def _min_label_step(g: DataFrame, labels: DataFrame) -> DataFrame:
+    """One min-label round over the (src, dst) layout ``g``: each
+    (id, lbl) label becomes the least of itself and the labels of its
+    neighbours along g (src -> dst). One join + one map-combined min
+    aggregate, then the left join back (a node with no edge keeps its
+    label). Every label-propagation operator here runs this step."""
+    nb_min = (
+        g.join(labels, g["dst"] == labels["id"])
+        .groupBy("src")
+        .agg(F.min("lbl").alias("__nb"))
+    )
+    return labels.join(nb_min, labels["id"] == nb_min["src"], "left").select(
+        "id",
+        F.least(F.col("lbl"), F.coalesce("__nb", F.col("lbl"))).alias("lbl"),
+    )
+
+
+def _label_sum(labels: DataFrame):
+    """sum(lbl) of a label table, collected to the driver: the EARLY
+    STOP probe of the fixpoint loops (r12). Every label move there is
+    non-increasing (the step takes a least() with the current label;
+    the pointer jump replaces lbl with lbl's own label, and lbl(x) <= x
+    holds from lbl_0 = id), so sum(lbl) strictly decreases until the
+    fixpoint and an UNCHANGED sum proves no label moved: every later
+    round is an identity map and stopping returns the same table.
+    Decimal, so no bigint wrap at any node-id scale; one nodes-sized
+    aggregate per round replaces the wasted tail rounds and their
+    driver-side plan builds — measured at sf0.1 (graph_components_star):
+    10 rounds built in 4.2 s for a graph that converges in 2."""
+    return labels.agg(
+        F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
+    ).collect()[0][0]
+
+
+def _audit_rows(joined: list[DataFrame], resolved: str) -> DataFrame:
+    """The convergence-audit table: row k (1-based) of ``joined`` is
+    the round-k label table joined to its exact labels, and a node is
+    RESOLVED where the SQL condition ``resolved`` holds. One row per
+    round: (round, resolved_nodes, total_nodes, resolved_share_micro),
+    the share in exact integer micro-units (resolved*1000000 div
+    total) — no float, engine-portable."""
+    hits = f"sum(CASE WHEN {resolved} THEN 1 ELSE 0 END)"
+    rows = [
+        j.agg(
+            F.lit(k).cast("bigint").alias("round"),
+            F.expr(hits).cast("bigint").alias("resolved_nodes"),
+            F.count(F.lit(1)).cast("bigint").alias("total_nodes"),
+            F.expr(f"CAST({hits} * 1000000 div count(1) AS BIGINT)").alias(
+                "resolved_share_micro"
+            ),
+        )
+        for k, j in enumerate(joined, 1)
+    ]
+    return reduce(DataFrame.unionByName, rows)
 
 
 def degrees(edges: DataFrame) -> DataFrame:
@@ -177,48 +247,14 @@ def connected_components_fixpoint(
     label self-join — same bucketed _iter_layout contract as the other
     iterative ops; the label table is nodes-sized, never edges-sized.
     """
-    ud = _iter_layout(
-        edges.select("src", "dst")
-        .unionAll(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct(),
-        "src",
-    )
+    ud = _undirected(edges)
     labels = ud.select(F.col("src").alias("id")).distinct().select(
         "id", F.col("id").alias("lbl")
     )
-    # r12 EARLY STOP: every label move is non-increasing (step (a)
-    # takes a min with the current label; step (b) replaces lbl with
-    # lbl's own label, and lbl(x) <= x is an invariant from lbl_0 = id,
-    # so the parent's label cannot exceed the follower's), hence
-    # sum(lbl) strictly decreases until the fixpoint and an UNCHANGED
-    # sum proves no label moved — all remaining rounds are identity
-    # maps and the early exit returns the exact same table. One cheap
-    # nodes-sized aggregate per round (decimal sum: immune to bigint
-    # wrap at any node-id scale) replaces up to rounds-minus-diameter
-    # wasted join rounds AND their driver-side plan constructions —
-    # measured at sf0.1 (graph_components_star): 10 rounds built in
-    # 4.2 s driver-side for a graph that converges in 2.
+    # r12 EARLY STOP on an unchanged label sum (see _label_sum).
     prev_sum = None
     for _ in range(rounds):
-        nb_min = (
-            ud.join(
-                labels.select(F.col("id").alias("dst"), F.col("lbl").alias("nl")),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("nl").alias("nbm"))
-        )
-        labels = (
-            labels.join(nb_min, labels["id"] == nb_min["src"], "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("lbl"), F.coalesce(F.col("nbm"), F.col("lbl"))
-                ).alias("lbl"),
-            )
-        )
+        labels = _min_label_step(ud, labels)
         # pointer jump: follow my label's own label (halves rounds).
         # Rename both sides before the self-join so the lineage-shared
         # attributes can't collide (Spark self-join ambiguity).
@@ -238,9 +274,7 @@ def connected_components_fixpoint(
             # the standard iterative-algorithm truncation.
             .localCheckpoint(eager=False)
         )
-        cur_sum = labels.agg(
-            F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
-        ).collect()[0][0]
+        cur_sum = _label_sum(labels)
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
@@ -328,12 +362,7 @@ def connected_components(
     if directed:
         ud = _iter_layout(edges.select("src", "dst").distinct(), "src")
     else:
-        ud = _iter_layout(
-            edges.select("src", "dst")
-            .unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-            .distinct(),
-            "src",
-        )
+        ud = _undirected(edges)
     # r13: truncate the LOGICAL lineage on top of the cache. Every
     # caller feeds this operator a near-dup pair graph whose edge
     # frame is a deep LSH/IVF composite, and each round's lazy
@@ -358,18 +387,7 @@ def connected_components(
             "id", F.col("id").alias("lbl")
         )
     for it in range(iterations):
-        nb_min = (
-            ud.join(labels, ud["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("lbl").alias("__nb"))
-        )
-        labels = (
-            labels.join(nb_min, labels["id"] == nb_min["src"], "left")
-            .select(
-                "id",
-                F.least(F.col("lbl"), F.coalesce("__nb", F.col("lbl"))).alias("lbl"),
-            )
-        )
+        labels = _min_label_step(ud, labels)
         # labels_k feeds TWO consumers in round k+1 (the neighbor-min
         # aggregate and the join-back), so without lineage truncation
         # the physical plan doubles per iteration — d10's composite
@@ -398,64 +416,28 @@ def convergence_audit(
     into a measured number instead of an assertion.
 
     The k-round labels are produced by ONE propagation pass that
-    snapshots after every round (identical per-round body to
-    connected_components — min over neighbors, least with self, lazy
-    per-round checkpoint), so the audit measures the real operator
-    without re-running it per k. Share is exact integer micro-units
-    (resolved*1000000 div total) — no float, engine-portable.
+    snapshots after every round (connected_components' own step,
+    _min_label_step, with a lazy per-round checkpoint), so the audit
+    measures the real operator without re-running it per k. Share is
+    exact integer micro-units (_audit_rows).
 
     Scale: the exact pass is O(log diameter) rounds; each audit row is
     one node-sized equi-join + a map-combined count — everything is
     bounded by the label table (nodes-sized, never edges-sized).
     """
-    ud = _iter_layout(
-        edges.select("src", "dst")
-        .unionAll(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct(),
-        "src",
-    )
+    ud = _undirected(edges)
     exact = connected_components_fixpoint(edges, rounds=exact_rounds).select(
         "id", F.col("lbl").alias("__xlbl")
     ).localCheckpoint(eager=False)
     labels = ud.select(F.col("src").alias("id")).distinct().select(
         "id", F.col("id").alias("lbl")
     )
-    audits = []
-    for k in range(1, rounds + 1):
-        nb_min = (
-            ud.join(labels, ud["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("lbl").alias("__nb"))
-        )
-        labels = (
-            labels.join(nb_min, labels["id"] == nb_min["src"], "left")
-            .select(
-                "id",
-                F.least(F.col("lbl"), F.coalesce("__nb", F.col("lbl"))).alias("lbl"),
-            )
-            .localCheckpoint(eager=False)  # 2 consumers: audit + next round
-        )
-        audits.append(
-            labels.join(exact, "id").agg(
-                F.lit(k).cast("bigint").alias("round"),
-                F.sum(
-                    F.when(F.col("lbl") == F.col("__xlbl"), 1).otherwise(0)
-                )
-                .cast("bigint")
-                .alias("resolved_nodes"),
-                F.count(F.lit(1)).cast("bigint").alias("total_nodes"),
-                F.expr(
-                    "CAST(sum(CASE WHEN lbl = __xlbl THEN 1 ELSE 0 END) "
-                    "* 1000000 div count(1) AS BIGINT)"
-                ).alias("resolved_share_micro"),
-            )
-        )
-    out = audits[0]
-    for a in audits[1:]:
-        out = out.unionByName(a)
-    return out
+    joined = []
+    for _ in range(rounds):
+        # 2 consumers: audit + next round
+        labels = _min_label_step(ud, labels).localCheckpoint(eager=False)
+        joined.append(labels.join(exact, "id"))
+    return _audit_rows(joined, "lbl = __xlbl")
 
 
 def scc_convergence_audit(
@@ -515,33 +497,13 @@ def scc_convergence_audit(
         .localCheckpoint(eager=False)  # fwd + bwd + both fixpoints
     )
 
-    def _step(g: DataFrame, labels: DataFrame) -> DataFrame:
-        # lbl <- min(lbl, min over OUT-neighbors' lbl): converges to
-        # the minimum node id reachable from each node along g.
-        nb = (
-            g.join(
-                labels.select(
-                    F.col("id").alias("dst"), F.col("lbl").alias("nl")
-                ),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("nl").alias("nbm"))
-        )
-        return labels.join(
-            nb, labels["id"] == nb["src"], "left"
-        ).select(
-            "id",
-            F.least(
-                F.col("lbl"), F.coalesce(F.col("nbm"), F.col("lbl"))
-            ).alias("lbl"),
-        )
-
     def _fixpoint(g: DataFrame) -> DataFrame:
+        # lbl <- min(lbl, min over OUT-neighbors' lbl) to the fixpoint:
+        # the minimum node id reachable from each node along g.
         labels = nodes.select("id", F.col("id").alias("lbl"))
         prev_sum = None
         for _ in range(exact_rounds):
-            # EAGER checkpoint: _step references `labels` twice (the
+            # EAGER checkpoint: the step references `labels` twice (the
             # neighbor lookup and the least-with-self), so a lazy
             # checkpoint leaves a plan tree that DOUBLES per round —
             # 2^exact_rounds nodes blew the driver heap at 24 rounds
@@ -550,25 +512,16 @@ def scc_convergence_audit(
             # keeping plan and per-round job cost constant (measured
             # flat ~0.2 s/round through 30 rounds); same pattern as
             # ordered.py's global_row_numbers barriers.
-            labels = _step(g, labels).localCheckpoint(eager=True)
-            # r12 EARLY STOP (the connected_components_fixpoint
-            # argument, valid for the directed step too): _step takes
-            # a least() with the current label, so every per-node move
-            # is non-increasing and sum(lbl) strictly decreases until
-            # the fixpoint; an UNCHANGED sum proves no label moved,
-            # making all remaining rounds identity maps — the early
-            # exit returns the exact same table. exact_rounds stays
-            # the diameter upper BOUND (an undersized value still
-            # yields the unconverged labels and hash-mismatches the
-            # oracle, the pinned failure mode); the stop only trims
-            # the sized-for-margin tail — e.g. the registered
+            labels = _min_label_step(g, labels).localCheckpoint(eager=True)
+            # r12 EARLY STOP (_label_sum; the argument holds for the
+            # directed step too). exact_rounds stays the diameter
+            # upper BOUND (an undersized value still yields the
+            # unconverged labels and hash-mismatches the oracle, the
+            # pinned failure mode); the stop only trims the
+            # sized-for-margin tail — e.g. the registered
             # graph_scc_convergence runs 24 rounds per direction for
-            # a measured diameter ~3. One nodes-sized decimal-sum
-            # aggregate per round on the already-materialized
-            # checkpoint is the price.
-            cur_sum = labels.agg(
-                F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
-            ).collect()[0][0]
+            # a measured diameter ~3.
+            cur_sum = _label_sum(labels)
             if cur_sum == prev_sum:
                 break
             prev_sum = cur_sum
@@ -582,37 +535,17 @@ def scc_convergence_audit(
     )
     flab = nodes.select("id", F.col("id").alias("lbl"))
     blab = nodes.select("id", F.col("id").alias("lbl"))
-    audits = []
-    for k in range(1, rounds + 1):
+    joined = []
+    for _ in range(rounds):
         # 2 consumers each (audit row + next round) -> lazy checkpoint
-        flab = _step(e, flab).localCheckpoint(eager=False)
-        blab = _step(rev, blab).localCheckpoint(eager=False)
-        audits.append(
+        flab = _min_label_step(e, flab).localCheckpoint(eager=False)
+        blab = _min_label_step(rev, blab).localCheckpoint(eager=False)
+        joined.append(
             flab.select("id", F.col("lbl").alias("__f"))
             .join(blab.select("id", F.col("lbl").alias("__b")), "id")
             .join(exact, "id")
-            .agg(
-                F.lit(k).cast("bigint").alias("round"),
-                F.sum(
-                    F.when(
-                        (F.col("__f") == F.col("__fx"))
-                        & (F.col("__b") == F.col("__bx")),
-                        1,
-                    ).otherwise(0)
-                )
-                .cast("bigint")
-                .alias("resolved_nodes"),
-                F.count(F.lit(1)).cast("bigint").alias("total_nodes"),
-                F.expr(
-                    "CAST(sum(CASE WHEN __f = __fx AND __b = __bx"
-                    " THEN 1 ELSE 0 END) * 1000000 div count(1) AS BIGINT)"
-                ).alias("resolved_share_micro"),
-            )
         )
-    out = audits[0]
-    for a in audits[1:]:
-        out = out.unionByName(a)
-    return out
+    return _audit_rows(joined, "__f = __fx AND __b = __bx")
 
 
 def k_core(edges: DataFrame, k: int, iterations: int = 3) -> DataFrame:
@@ -628,12 +561,7 @@ def k_core(edges: DataFrame, k: int, iterations: int = 3) -> DataFrame:
     approximation, and the oracle unrolls identically). Per round: one
     degree aggregation + two semi-joins over the surviving edge list —
     same bucketed-by-src layout as the rest of the graph tier."""
-    ud = _iter_layout(
-        edges.select("src", "dst")
-        .unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct(),
-        "src",
-    )
+    ud = _undirected(edges)
     for _ in range(iterations):
         deg = ud.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select("src")
@@ -700,12 +628,7 @@ def label_propagation(edges: DataFrame, iterations: int = 2) -> DataFrame:
     pagerank/bfs, and the window's per-node group is bounded by the
     node's distinct neighbour labels (<= degree).
     """
-    ud = _iter_layout(
-        edges.select("src", "dst")
-        .unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct(),
-        "src",
-    )
+    ud = _undirected(edges)
     labels = ud.select(F.col("src").alias("id")).distinct().select(
         "id", F.col("id").alias("lbl")
     )

@@ -25,9 +25,10 @@ shuffle rows that spill are proportional to input ROWS.
 
 On a cluster the same rule is just `cores x 2-3 where cores scales
 with executors` — the deployment autoscales the operand this rig must
-derive. Locally the derived value feeds SPARK_GRAFT_INITIAL_PARTS_MULT
-(AQE's initial partition count; session.py applies it only when > 1,
-so the benchmark scale keeps its measured core-count optimum).
+derive. Locally the derived count divided by the cores is the value
+to set in SPARK_GRAFT_INITIAL_PARTS_MULT (AQE's initial partition
+count; session.py applies it only when > 1, so the benchmark scale
+keeps its measured core-count optimum).
 """
 
 from __future__ import annotations
@@ -64,8 +65,3 @@ def recommended_shuffle_partitions(sf_dir: str, cores: int) -> int:
     return max(cores, waves * cores)
 
 
-def recommended_parts_mult(sf_dir: str, cores: int) -> int:
-    """The SPARK_GRAFT_INITIAL_PARTS_MULT value the rule derives for a
-    local fixture (1 = core-count default, i.e. the knob stays off)."""
-    cores = max(1, cores)
-    return recommended_shuffle_partitions(sf_dir, cores) // cores

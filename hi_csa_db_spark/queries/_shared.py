@@ -5,7 +5,7 @@ when called, so the queries they compose must already be registered."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hi_csa_db_spark.catalog import load_table
@@ -501,6 +501,27 @@ def _dsir_keep() -> Column:
         F.least(F.lit(1000000), F.lit(500000) + 10 * F.col("dsir_microweight")),
     )
     return knuth_hash32(F.col("doc_id")) * 1000000 < p * F.lit(4294967296)
+
+
+def _lang_quantile_gate(
+    lab: DataFrame, keep_permille: int = 400
+) -> tuple[DataFrame, Column]:
+    """x26's per-language quantile gate over ``lab`` (lang, logit_micro,
+    doc_id, ...): ``lab`` with ``__rn``, the rank within its lang slice
+    on (logit_micro desc, doc_id asc), and ``__n``, the slice count;
+    plus the keep test __rn*1000 <= __n*keep_permille (the top
+    ``keep_permille``/1000 of each slice). Pure integer rule over a
+    deterministic rank, so no float percentile boundary exists; the
+    threshold self-calibrates as the corpus mix shifts, where an
+    absolute logit cutoff drifts. One window pass partitioned by lang:
+    parallel in slices, never global."""
+    w = Window.partitionBy("lang").orderBy(
+        F.col("logit_micro").desc(), F.col("doc_id").asc()
+    )
+    ranked = lab.withColumn("__rn", F.row_number().over(w)).withColumn(
+        "__n", F.count(F.lit(1)).over(Window.partitionBy("lang"))
+    )
+    return ranked, F.col("__rn").cast("bigint") * 1000 <= F.col("__n") * keep_permille
 
 
 def _split_80_10_10(key: Column) -> Column:

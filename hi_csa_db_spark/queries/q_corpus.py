@@ -24,6 +24,7 @@ from hi_csa_db_spark.queries._shared import (
     _bpe_train_oracle_sql,
     _cos_sql,
     _eval_split_hits,
+    _lang_quantile_gate,
     _x27_oracle,
 )
 
@@ -1087,10 +1088,10 @@ def x26_quality_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile-based quality filtering: keep the top 40% of each
     language slice by classifier logit — the threshold real pipelines
     use (an absolute logit cutoff drifts as the corpus mix shifts; a
-    per-slice quantile self-calibrates). The keep test is pure integer
-    (rank * 10 <= slice_count * 4) over a deterministic per-slice rank
-    (logit desc, doc_id ties) — no float percentile boundary to
-    disagree across engines.
+    per-slice quantile self-calibrates). The keep test is the pure
+    integer rank*1000 <= slice_count*400 of _lang_quantile_gate, over a
+    deterministic per-slice rank (logit desc, doc_id ties) — no float
+    percentile boundary to disagree across engines.
 
     Scale: one window pass partitioned by lang (parallel in slices,
     never global) + a 5-group audit aggregate."""
@@ -1099,16 +1100,7 @@ def x26_quality_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "logit_micro", "n_words"
     )
     lab = scored.join(docs.select("doc_id", "lang"), "doc_id")
-    w = Window.partitionBy("lang").orderBy(
-        F.col("logit_micro").desc(), F.col("doc_id").asc()
-    )
-    rk = lab.select(
-        "lang",
-        "n_words",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("lang")).alias("n"),
-    )
-    kept = F.col("rn") * 10 <= F.col("n") * 4
+    rk, kept = _lang_quantile_gate(lab)
     return rk.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_total"),
         F.sum(F.when(kept, 1).otherwise(0)).alias("n_kept"),

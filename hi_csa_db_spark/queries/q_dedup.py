@@ -260,20 +260,7 @@ def d19_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     weight is a narrow map over a left join on doc_id; the audit is a
     tiny aggregate. At 100 TB the per-doc weight column would be
     persisted next to the corpus for the training loader to consume."""
-    docs = load_table(spark, sf_dir, "documents")
-    labels = dedup.near_dup_clusters(dedup.minhash_lsh_dedup(docs))
-    sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("csz"))
-    docw = (
-        docs.select("doc_id")
-        .join(labels.withColumnRenamed("id", "doc_id"), "doc_id", "left")
-        .join(sizes, "lbl", "left")
-        .select(
-            F.coalesce("csz", F.lit(1)).alias("cluster_size"),
-            F.expr("CAST(1000000 div COALESCE(csz, 1) AS BIGINT)").alias(
-                "weight_micro"
-            ),
-        )
-    )
+    docw = dedup.soft_dedup_weights(load_table(spark, sf_dir, "documents"))
     return docw.groupBy("cluster_size", "weight_micro").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("weight_micro").cast("bigint").alias("total_weight_micro"),

@@ -23,6 +23,7 @@ from hi_csa_db_spark.queries._shared import (
     _dsir_keep,
     _dsir_weight_frame,
     _ktruss_oracle,
+    _lang_quantile_gate,
 )
 from hi_csa_db_spark.queries.q_corpus import (
     _quality_survivor_drops,
@@ -1320,7 +1321,7 @@ def pipe_training_prep_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold drifts as the corpus mix shifts between crawls; the
     per-slice quantile self-calibrates — this is the v3 composition a
     production pipeline would actually run on a moving corpus. Stages:
-    per-lang quantile filter (x26's integer rank*10 <= n*4 rule) ->
+    per-lang quantile filter (x26's _lang_quantile_gate) ->
     best-quality near-dup survivor (d10) -> DSIR resample (x24) ->
     x35-style shard manifest.
 
@@ -1330,19 +1331,10 @@ def pipe_training_prep_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest is a 16-group map-combined aggregate."""
     docs = load_table(spark, sf_dir, "documents")
     scored, drops = _quality_survivor_drops(spark, sf_dir, docs)
-    lab = scored.join(docs.select("doc_id", "lang"), "doc_id")
-    qw = Window.partitionBy("lang").orderBy(
-        F.col("logit_micro").desc(), F.col("doc_id").asc()
+    ranked, keep = _lang_quantile_gate(
+        scored.join(docs.select("doc_id", "lang"), "doc_id")
     )
-    qgate = (
-        lab.select(
-            "doc_id",
-            F.row_number().over(qw).alias("rn"),
-            F.count(F.lit(1)).over(Window.partitionBy("lang")).alias("n"),
-        )
-        .filter(F.col("rn") * 10 <= F.col("n") * 4)
-        .select("doc_id")
-    )
+    qgate = ranked.filter(keep).select("doc_id")
     dk = _dsir_weight_frame(spark, sf_dir).filter(_dsir_keep()).select("doc_id")
     kept = (
         docs.select("doc_id", "text")
@@ -1926,7 +1918,7 @@ def pipe_training_prep_v7(spark: SparkSession, sf_dir: str) -> DataFrame:
     lazy oracle-proven plan.
 
     All-integer outputs (counts, token sums, ceil-div batches); the
-    gate is x26's rank*10 <= n*4 integer test, so no float percentile
+    gate is x26's _lang_quantile_gate integer test, so no float percentile
     boundary exists on either engine.
 
     Scale: x20's one explode + map-combined groupBy, one window pass
@@ -1938,18 +1930,10 @@ def pipe_training_prep_v7(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = x20_quality_classifier(spark, sf_dir).select(
         "doc_id", "logit_micro", "n_words"
     )
-    lab = scored.join(docs.select("doc_id", "lang", "text"), "doc_id")
-    w = Window.partitionBy("lang").orderBy(
-        F.col("logit_micro").desc(), F.col("doc_id").asc()
+    ranked, keep = _lang_quantile_gate(
+        scored.join(docs.select("doc_id", "lang", "text"), "doc_id")
     )
-    rk = lab.select(
-        "lang",
-        "text",
-        "n_words",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("lang")).alias("n"),
-    )
-    gated = rk.filter(F.col("rn") * 10 <= F.col("n") * 4)
+    gated = ranked.filter(keep)
     uniq = gated.groupBy("lang", F.md5("text").alias("ch")).agg(
         F.count(F.lit(1)).cast("bigint").alias("grp"),
         F.min("n_words").alias("n_words"),

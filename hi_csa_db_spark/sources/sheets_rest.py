@@ -220,25 +220,6 @@ def fetch_values_paged(
     }
 
 
-def read_sheet_rest_paged(
-    spark: SparkSession,
-    spreadsheet_id: str,
-    sheet: str = "Sheet1",
-    page_rows: int = 1000,
-    rename: dict[str, str] | None = None,
-    target_schema: T.StructType | str | None = None,
-    **fetch_kwargs,
-) -> DataFrame:
-    """read_sheet_rest over the paged fetcher: identical DataFrame
-    contract, any sheet height."""
-    payload = fetch_values_paged(
-        spreadsheet_id, sheet=sheet, page_rows=page_rows, **fetch_kwargs
-    )
-    return values_to_dataframe(
-        spark, payload, header=True, rename=rename, target_schema=target_schema
-    )
-
-
 def values_to_dataframe(
     spark: SparkSession,
     payload: dict,

@@ -232,68 +232,6 @@ def compact_table(
     return _commit(path, base + 1, files, "compact", meta=meta)
 
 
-def file_stats(path: str, version: int | None = None) -> dict[str, dict]:
-    """Per-data-file column min/max from the parquet footers (pyarrow)
-    for the given snapshot: {relative_file: {col: (min, max)}}. The
-    manifest-level statistics Delta/Iceberg carry; read cheaply from
-    footers here since manifests only hold names."""
-    import pyarrow.parquet as pq
-
-    v = version if version is not None else current_version(path)
-    out: dict[str, dict] = {}
-    for rel in _manifest(path, v)["files"]:
-        md = pq.ParquetFile(os.path.join(path, rel)).metadata
-        stats: dict[str, tuple] = {}
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                col = md.row_group(rg).column(ci)
-                s = col.statistics
-                if s is None or not s.has_min_max:
-                    continue
-                name = col.path_in_schema
-                lo, hi = s.min, s.max
-                if name in stats:
-                    plo, phi = stats[name]
-                    stats[name] = (min(plo, lo), max(phi, hi))
-                else:
-                    stats[name] = (lo, hi)
-        out[rel] = stats
-    return out
-
-
-def read_table_pruned(
-    spark: SparkSession,
-    path: str,
-    col: str,
-    lo,
-    hi,
-    version: int | None = None,
-) -> DataFrame:
-    """Snapshot read that SKIPS data files whose [min, max] range for
-    ``col`` cannot intersect [lo, hi] — manifest-level file pruning,
-    the reason clustered writes (write_zordered / range-partitioned
-    commits) pay off: a selective read touches only the files whose
-    stats admit matches. Returns the same rows as
-    ``read_table(...).filter(lo <= col <= hi)`` (the residual filter
-    is still applied — stats only prune, never decide)."""
-    v = version if version is not None else current_version(path)
-    if v is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    stats = file_stats(path, v)
-    keep = []
-    for rel, st in stats.items():
-        rng = st.get(col)
-        if rng is None or not (rng[1] < lo or rng[0] > hi):
-            keep.append(rel)
-    if not keep:
-        # preserve the snapshot schema with zero partitions scanned
-        return read_table(spark, path, v).filter(F.lit(False))
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(path, f) for f in keep]
-    )
-    return df.filter((F.col(col) >= lo) & (F.col(col) <= hi))
-
-
 def vacuum(path: str, keep_last: int = 2) -> int:
     """Drop manifests older than the last ``keep_last`` versions and
     any data files no retained manifest references. Returns the number

@@ -68,41 +68,3 @@ def stream_append_to_table(
     return txlog.read_table(spark, table_path)
 
 
-def stream_rollup_to_table(
-    spark: SparkSession,
-    sf_dir: str,
-    table_path: str,
-    checkpoint: str,
-) -> DataFrame:
-    """The continuous aggregate: stream events into a MAINTAINED
-    per-user rollup (incremental.maintain_rollup per micro-batch, each
-    commit versioned and batch-id-idempotent). The streaming twin of
-    re-running a groupBy over all history — but each batch only
-    aggregates itself and merges into the aggregate-sized state."""
-    from hi_csa_db_spark.operators.incremental import (
-        maintain_rollup,
-        read_rollup,
-    )
-
-    ev = read_events_stream(spark, sf_dir).select("user_id", "value")
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        maintain_rollup(
-            batch_df.sparkSession,
-            table_path,
-            batch_df,
-            keys=["user_id"],
-            value_col="value",
-            batch_id=batch_id,
-        )
-
-    with pinned_state_partitions(spark):
-        q = (
-            ev.writeStream.foreachBatch(write_batch)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return read_rollup(spark, table_path)

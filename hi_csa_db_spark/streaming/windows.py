@@ -327,50 +327,6 @@ def incremental_dedup_stream(
     return _run_to_memory(pairs, "stream_incremental_dedup", "complete")
 
 
-def upsert_sink(
-    spark: SparkSession, sf_dir: str, out_path: str, checkpoint: str
-) -> DataFrame:
-    """foreachBatch sink: per-user event totals upserted into a parquet
-    table per micro-batch — the production sink pattern (aggregation in
-    update mode + idempotent MERGE per batch + checkpointed offsets =
-    end-to-end exactly-once to the table).
-
-    Local runs parquet-overwrite the whole (small) table per batch;
-    with Delta/Iceberg the same foreachBatch body becomes MERGE INTO.
-    """
-    import os
-
-    from hi_csa_db_spark.operators.merge import upsert
-
-    ev = read_events_stream(spark, sf_dir)
-    totals = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 6).alias("total_value"),
-    )
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if os.path.exists(out_path):
-            base = batch_df.sparkSession.read.parquet(out_path)
-            merged = upsert(base, batch_df, keys=["user_id"])
-        else:
-            merged = batch_df
-        # materialize BEFORE overwriting the path being read
-        merged.cache().count()
-        merged.write.mode("overwrite").parquet(out_path)
-        merged.unpersist()
-
-    with pinned_state_partitions(spark):
-        q = (
-            totals.writeStream.foreachBatch(write_batch)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out_path)
-
-
 def ohlc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily OHLC downsampling UNDER THE STREAMING PLANNER: the same
     one-pass struct-argmin/argmax aggregation as the batch

@@ -111,13 +111,6 @@ def test_wav_roundtrip():
     assert np.abs(samples[:, 0] - sig).max() < 1e-3
 
 
-def test_resize_nearest():
-    img = _rand_img(10, 8, 3)
-    out = codecs.resize_nearest(img, 4, 5)
-    assert out.shape == (5, 4, 3)
-    assert np.array_equal(out[0, 0], img[0, 0])
-
-
 def test_jpeg_now_decodes_for_real():
     # JPEG graduated from recognized-but-undecodable to a real kernel
     # (functions/jpeg.py); a jpeg-magic payload now hits that decoder —

@@ -81,12 +81,3 @@ def test_maintained_rollup_matches_direct_aggregate(spark, sf_dir, tmp_path):
     assert v0 == d0
 
 
-def test_stream_rollup_matches_batch(spark, sf_dir, tmp_path):
-    from hi_csa_db_spark.streaming.acid_sink import stream_rollup_to_table
-
-    out = stream_rollup_to_table(
-        spark, sf_dir, str(tmp_path / "t"), str(tmp_path / "ckpt")
-    )
-    ev = load_table(spark, sf_dir, "events").select("user_id", "value")
-    direct = finalize(agg_state(ev, ["user_id"], "value"))
-    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, direct.collect()))

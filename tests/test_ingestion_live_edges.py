@@ -24,11 +24,7 @@ from http.server import BaseHTTPRequestHandler, HTTPServer
 import pytest
 
 from hi_csa_db_spark.sources import crawl
-from hi_csa_db_spark.sources.sheets_rest import (
-    fetch_values_paged,
-    read_sheet_rest,
-    read_sheet_rest_paged,
-)
+from hi_csa_db_spark.sources.sheets_rest import fetch_values_paged
 
 # ---------------------------------------------------------------- crawl
 
@@ -202,19 +198,6 @@ def test_paged_fetch_requests_expected_windows(paged_sheet_server):
     assert ranges == ["Sheet1!A1:ZZ10", "Sheet1!A11:ZZ20", "Sheet1!A21:ZZ30"]
     assert payload["pages"] == 3
     assert payload["values"] == SHEET_ROWS
-
-
-def test_paged_reader_matches_one_shot(spark, paged_sheet_server):
-    base, _handler = paged_sheet_server
-    paged = read_sheet_rest_paged(
-        spark, "sheet-id", sheet="Sheet1", page_rows=7, endpoint=base
-    )
-    whole = read_sheet_rest(spark, "sheet-id", "Sheet1", endpoint=base)
-    assert paged.columns == whole.columns
-    assert sorted(map(tuple, paged.collect())) == sorted(
-        map(tuple, whole.collect())
-    )
-    assert paged.count() == len(SHEET_ROWS) - 1  # header consumed
 
 
 def test_paged_fetch_exact_multiple_costs_one_probe(paged_sheet_server):

@@ -10,7 +10,6 @@ import math
 from hi_csa_db_spark.plans.sizing import (
     TARGET_ROWS_PER_PARTITION,
     fixture_max_table_rows,
-    recommended_parts_mult,
     recommended_shuffle_partitions,
 )
 
@@ -26,7 +25,6 @@ def test_small_fixtures_stay_at_core_count(sf_dir):
     # core-count partitions => the measured bench optimum is what the
     # rule derives, and the knob stays off (mult == 1)
     assert recommended_shuffle_partitions(sf_dir, 32) == 32
-    assert recommended_parts_mult(sf_dir, 32) == 1
 
 
 def test_rule_reproduces_the_sf10_calibration(tmp_path):
@@ -61,7 +59,6 @@ def test_rule_reproduces_the_sf10_calibration(tmp_path):
 
     sf10 = fake_fixture(60_000_000 // 1000 * 1000)
     assert recommended_shuffle_partitions(sf10, 32) == 128
-    assert recommended_parts_mult(sf10, 32) == 4
     sf30 = fake_fixture(180_000_000 // 1000 * 1000)
     assert recommended_shuffle_partitions(sf30, 32) == 384
 

@@ -140,20 +140,6 @@ def test_ffd_bins_respect_budget(spark, sf_dir):
     assert over == 0
 
 
-def test_bloom_merge_equals_rebuild(spark):
-    # the incremental-maintenance property: OR-merging two filters is
-    # bit-identical to building one filter over the union of key sets
-    from hi_csa_db_spark.operators.bloomjoin import build_bloom, merge_blooms
-
-    k1 = spark.range(0, 400, 3).select(F.col("id").alias("k"))
-    k2 = spark.range(1, 400, 7).select(F.col("id").alias("k"))
-    merged = merge_blooms(build_bloom(k1, "k"), build_bloom(k2, "k")).collect()[0][
-        "bloom"
-    ]
-    rebuilt = build_bloom(k1.unionByName(k2).distinct(), "k").collect()[0]["bloom"]
-    assert dict(merged) == dict(rebuilt)
-
-
 def test_bloom_mixed_key_types_no_false_negatives(spark):
     """ADVICE r3: xxhash64 hashes the physical type, so an INT build
     side probed by a BIGINT column used to set/test different bits —

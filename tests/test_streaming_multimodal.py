@@ -135,21 +135,6 @@ def test_stream_stream_join_matches_batch(spark, sf_dir):
     assert got == exp
 
 
-def test_stream_upsert_sink_matches_batch(spark, sf_dir, tmp_path):
-    from hi_csa_db_spark.catalog import load_table
-
-    out = windows.upsert_sink(
-        spark, sf_dir, str(tmp_path / "totals"), str(tmp_path / "ckpt")
-    )
-    got = {r.user_id: r.n_events for r in out.collect()}
-    ev = load_table(spark, sf_dir, "events")
-    exp = {
-        r.user_id: r.n
-        for r in ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert got == exp
-
-
 def test_real_codec_features_through_spark(spark):
     """The REAL decode kernels (PNG image stats, WAV audio stats) run
     inside the Arrow mapInPandas pass — not just in unit tests: a real
@@ -284,39 +269,6 @@ def test_stream_dq_gate_matches_batch(spark, sf_dir):
     }
     assert streamed == batch
     assert all(v[0] > 0 for v in streamed.values())
-
-
-def test_tws_user_totals_matches_batch(spark, sf_dir):
-    # transformWithStateInPandas (Spark 4 arbitrary-state API) twin of
-    # the applyInPandasWithState totalizer. Its state-server protocol
-    # needs google.protobuf, absent in some containers — skip there
-    # (the operator is deliberately NOT a registered driver query for
-    # the same reason).
-    import pytest
-
-    from hi_csa_db_spark.streaming import tws
-
-    if not tws.tws_available():
-        pytest.skip("google.protobuf not installed: tws runtime unavailable")
-    from pyspark.sql import functions as F
-
-    from hi_csa_db_spark.catalog import load_table
-
-    got = {
-        (r["user_id"]): (r["n_events"], r["total_cents"])
-        for r in tws.user_running_totals_tws(spark, sf_dir).collect()
-    }
-    ev = load_table(spark, sf_dir, "events")
-    want = {
-        r["user_id"]: (r["n"], r["cents"])
-        for r in ev.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.expr("CAST(ROUND(value * 100) AS BIGINT)")).alias("cents"),
-        )
-        .collect()
-    }
-    assert got == want
 
 
 def _spy_stream_start(spark, monkeypatch, seen):

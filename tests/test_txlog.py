@@ -140,36 +140,6 @@ def test_compact_table_same_rows_fewer_files(spark, tmp_path):
     )
 
 
-def test_read_table_pruned_skips_files_and_matches_filter(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    path = str(tmp_path / "t")
-    # three commits covering disjoint key ranges -> disjoint file stats
-    for lo in (0, 100, 200):
-        txlog.append_batch(
-            _df(spark, [(lo + i, f"r{lo+i}") for i in range(10)]), path, lo
-        )
-    stats = txlog.file_stats(path)
-    assert all("k" in st for st in stats.values())
-    pruned = txlog.read_table_pruned(spark, path, "k", 100, 109)
-    full = txlog.read_table(spark, path).filter(
-        (F.col("k") >= 100) & (F.col("k") <= 109)
-    )
-    assert sorted(map(tuple, pruned.collect())) == sorted(
-        map(tuple, full.collect())
-    )
-    # the pruned plan reads fewer files than the manifest lists
-    n_all = len(txlog._manifest(path, txlog.current_version(path))["files"])
-    kept = [
-        rel
-        for rel, st in stats.items()
-        if "k" in st and not (st["k"][1] < 100 or st["k"][0] > 109)
-    ]
-    assert len(kept) < n_all
-    # empty intersection still returns a well-formed empty frame
-    assert txlog.read_table_pruned(spark, path, "k", 10_000, 20_000).count() == 0
-
-
 def test_stream_append_with_auto_compaction(spark, sf_dir, tmp_path):
     from hi_csa_db_spark.streaming.acid_sink import stream_append_to_table
 

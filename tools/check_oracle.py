@@ -1,13 +1,13 @@
-"""Local stand-in for the driver's correctness gate.
+"""Oracle parity check of the query registry.
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin
 on DuckDB over the same parquet fixtures, then compares row count,
 column names, and an order-insensitive canonical value hash.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
-With SPARK_GRAFT_ORACLE_JSON=<path> set, also writes a JSON file in
-the driver's CORRECTNESS_r{N}.json shape (rows/schema/hash per query)
-so local and driver runs diff mechanically.
+With SPARK_GRAFT_ORACLE_JSON=<path> set, also writes the per-query
+result (rows/schema/hash match) as JSON, so two sweeps diff
+mechanically.
 """
 
 from __future__ import annotations
