@@ -22,6 +22,7 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -149,6 +150,34 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         df = normalize_events(df)
     return df
+
+
+def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """A constant table built on the driver: the engine's one way to
+    turn Python rows into a DataFrame (SCALE.md "Python boundary
+    policy").
+
+    ``spark.createDataFrame(list)`` plans a ``LogicalRDD`` over a
+    PythonRDD, so every scan of it starts Python worker tasks and
+    Catalyst knows no size for it. Built from an Arrow table instead,
+    the frame is a ``LocalRelation`` held in the plan: no Python runs
+    behind it, and the optimizer can fold it or broadcast it by size.
+
+    ``schema`` is a DDL string (``"a bigint, b string"``, with or
+    without ``:``) or a ``StructType``; ``rows`` are tuples or ``Row``s
+    in schema order. Python values convert as Arrow converts them to
+    the schema's types, and a value that does not fit its type raises."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 # Parquet row-group count per input file (footer metadata only: no

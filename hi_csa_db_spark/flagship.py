@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hi_csa_db_spark.catalog import load_tables
+from hi_csa_db_spark.catalog import load_tables, local_frame
 from hi_csa_db_spark.functions.text import slugify
 from hi_csa_db_spark.operators.classify import keyword_classify
 from hi_csa_db_spark.operators.merge import union_streams
@@ -38,7 +38,7 @@ def flagship_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Policy stream: free-text documents classified against the keyword
     # dictionary (the reference's detect.csa over the policy sheet).
-    kw = spark.createDataFrame(_PRACTICE_KEYWORDS, ["keyword", "label"])
+    kw = local_frame(spark, _PRACTICE_KEYWORDS, "keyword string, label string")
     labels = keyword_classify(t["documents"], kw)
     policy = (
         t["documents"]

@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from hi_csa_db_spark.catalog import local_frame
+
 # A fixed demonstration merge list (rank = position). A real deployment
 # loads the learned list as a side input; the kernel is identical.
 DEFAULT_MERGES: list[tuple[str, str]] = [
@@ -159,4 +161,4 @@ def bpe_train(words: DataFrame, rounds: int = 4, word_col: str = "w") -> DataFra
             StructField("n", LongType()),
         ]
     )
-    return spark.createDataFrame(out_rows, schema)
+    return local_frame(spark, out_rows, schema)

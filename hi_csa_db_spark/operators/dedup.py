@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from hi_csa_db_spark.catalog import spread_input
+from hi_csa_db_spark.catalog import local_frame, spread_input
 from hi_csa_db_spark.functions.text import strip_punct, tokenize, word_ngrams
 from hi_csa_db_spark.operators import graph
 from hi_csa_db_spark.operators._cache_ledger import register_cached
@@ -591,8 +591,8 @@ def band_plan_table(spark, num_hashes: int = 16, grid: int = 20) -> DataFrame:
     kmax = num_hashes.bit_length() - 1
     if 2**kmax != num_hashes:
         raise ValueError("num_hashes must be a power of two")
-    geo = spark.createDataFrame(
-        [(num_hashes // (2**k), 2**k) for k in range(kmax + 1)],
+    geo = local_frame(
+        spark, [(num_hashes // (2**k), 2**k) for k in range(kmax + 1)],
         "bands int, rows_per_band int",
     )
     pts = spark.range(1, grid).select(

@@ -19,6 +19,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hi_csa_db_spark.catalog import local_frame
 from hi_csa_db_spark.operators._cache_ledger import register_cached
 
 
@@ -776,8 +777,8 @@ def landmark_closeness(
     """
     e = _iter_layout(edges.select("src", "dst").distinct(), "src")
     spark = e.sparkSession
-    d = spark.createDataFrame(
-        [(lm, lm, 0) for lm in landmarks], "lm long, id long, dist long"
+    d = local_frame(
+        spark, [(lm, lm, 0) for lm in landmarks], "lm long, id long, dist long"
     )
     for _ in range(iterations):
         nxt = d.join(e, d["id"] == e["src"]).select(

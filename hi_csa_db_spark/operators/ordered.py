@@ -72,7 +72,7 @@ def ordered_slice_from_marker(
 def positional_update(
     df: DataFrame,
     match: Column,
-    order_by: Sequence[str | Column],
+    order_by: Sequence[str],
     column: str,
     values: Sequence[str],
 ) -> DataFrame:
@@ -80,19 +80,22 @@ def positional_update(
 
     Reference W4: the 5 "Energy" rows are overwritten with 5 specific
     practices positionally (hi-csa-db.Rmd:575-580). Matched rows get a
-    row_number; a broadcast (pos, value) literal table joins in the
-    replacement — no driver loop, scales to any match count.
+    row_number and read their replacement from a literal array with
+    ``try_element_at``, which is NULL past the end of ``values`` (and
+    safe under ANSI), so surplus matches keep their value. No table, no
+    join, no driver loop.
+
+    The window key holds all matched rows in one partition, as the
+    numbering needs, and spreads the unmatched rows by a hash of their
+    order columns (hence column names, ascending), so no task sorts the
+    whole unmatched remainder. A NULL ``match`` counts as unmatched.
     """
-    spark = df.sparkSession
-    mapping = spark.createDataFrame(
-        [(i + 1, v) for i, v in enumerate(values)], ["__pos", "__val"]
-    )
-    w = Window.partitionBy(match.cast("int")).orderBy(*order_by)
-    out = df.withColumn("__pos", F.when(match, F.row_number().over(w)))
-    out = out.join(F.broadcast(mapping), "__pos", "left")
-    return out.withColumn(
-        column, F.coalesce(F.col("__val"), F.col(column))
-    ).drop("__pos", "__val")
+    matched = F.coalesce(match, F.lit(False))
+    spread = F.when(~matched, F.xxhash64(*order_by))
+    w = Window.partitionBy(matched, spread).orderBy(*order_by)
+    pos = F.when(matched, F.row_number().over(w))
+    new = F.try_element_at(F.array(*map(F.lit, values)), pos)
+    return df.withColumn(column, F.coalesce(new, F.col(column)))
 
 
 def first_row_per_key(

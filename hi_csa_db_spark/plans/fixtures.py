@@ -11,6 +11,8 @@ import random
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hi_csa_db_spark.catalog import local_frame
+
 # The reference's 21-row keyword -> practice dictionary
 # (hi-csa-db.Rmd:497-509), verbatim.
 PRACTICE_KEYWORDS = [
@@ -86,8 +88,8 @@ def page_elements(spark: SparkSession, n_pages: int = 6, seed: int = 42) -> Data
                         f"{practice} guidance {p_i} mentions {kw} for {mit}",
                         hrefs,
                     )
-    return spark.createDataFrame(
-        rows, "url string, doc_order int, tag string, text string, hrefs array<string>"
+    return local_frame(
+        spark, rows, "url string, doc_order int, tag string, text string, hrefs array<string>"
     )
 
 
@@ -113,8 +115,8 @@ def _policy_rows(n_rows: int = 40, seed: int = 7) -> list[tuple]:
 
 def policy_sheet(spark: SparkSession, n_rows: int = 40, seed: int = 7) -> DataFrame:
     """B6: policy sheet with 0-3 keywords per free-text goal row."""
-    return spark.createDataFrame(
-        _policy_rows(n_rows, seed),
+    return local_frame(
+        spark, _policy_rows(n_rows, seed),
         "csa_goals string, guiding_policy string, description string, "
         "verbiage_location string, url string",
     )
@@ -139,8 +141,8 @@ def _support_rows(n_rows: int = 60, seed: int = 11) -> list[tuple]:
 def support_sheet(spark: SparkSession, n_rows: int = 60, seed: int = 11) -> DataFrame:
     """B8: support sheet; ~10% null descriptions; resource column
     arrives under the reference's raw name 'Resources (Links)'."""
-    df = spark.createDataFrame(
-        _support_rows(n_rows, seed),
+    df = local_frame(
+        spark, _support_rows(n_rows, seed),
         "mitigation string, practice string, description string, resource string",
     )
     return df.withColumnRenamed("resource", "Resources (Links)")
@@ -185,4 +187,4 @@ def support_sheet_export_lines(n_rows: int = 60, seed: int = 11) -> list[str]:
 
 def practice_keywords(spark: SparkSession) -> DataFrame:
     """B7: the 21-row classifier dictionary, verbatim."""
-    return spark.createDataFrame(PRACTICE_KEYWORDS, "keyword string, practice string")
+    return local_frame(spark, PRACTICE_KEYWORDS, "keyword string, practice string")

@@ -51,13 +51,18 @@ def policy_stream(policy_sheet: DataFrame, keywords: DataFrame, technical: DataF
     )
     # build side: first (Practice -> Mitigation) pair per practice in
     # deterministic order (the reference's !duplicated(), Rmd:511).
+    # Description breaks ties only to keep it live: ties on Mitigation
+    # give the same Mitigation, but with the column read here this
+    # branch prunes ``technical`` to the same columns as assemble's
+    # union, so the two share one exchange below and every page is
+    # fetched and parsed once per publish, not once per consumer.
     prac_miti = first_row_per_key(
         technical.filter(F.col("Practice").isNotNull()).select(
-            "Practice", "Mitigation"
+            "Practice", "Mitigation", "Description"
         ),
         keys=["Practice"],
-        order_by=["Mitigation"],
-    )
+        order_by=["Mitigation", "Description"],
+    ).select("Practice", "Mitigation")
     out = (
         sheet.join(labels, "__id", "left")
         .withColumn(

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hi_csa_db_spark.catalog import load_table, spread_input
+from hi_csa_db_spark.catalog import load_table, local_frame, spread_input
 from hi_csa_db_spark.functions.text import strip_punct, tokenize
 from hi_csa_db_spark.operators import dedup, ordered, textstats
 
@@ -2357,8 +2357,8 @@ def x66_threshold_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.minhash_lsh_pairs_micro(docs).withColumnRenamed(
         "j_micro", "__jm"
     )
-    thr = spark.createDataFrame(
-        [(50000,), (100000,), (200000,), (400000,)], ["thr_micro"]
+    thr = local_frame(
+        spark, [(50000,), (100000,), (200000,), (400000,)], "thr_micro bigint"
     )
     lab = pairs.crossJoin(F.broadcast(thr))
     agg = lab.groupBy("thr_micro").agg(
@@ -2581,7 +2581,7 @@ def x70_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     rk = ordered.global_row_numbers(
         cum.select("__k", F.col("cum_c").alias("cc")), "__k"
     )
-    ns = spark.createDataFrame([(1,), (2,), (5,), (10,), (20,)], ["topn"])
+    ns = local_frame(spark, [(1,), (2,), (5,), (10,), (20,)], "topn bigint")
     probe = (
         ns.crossJoin(F.broadcast(rk.filter(F.col("rank") <= 20)))
         .filter(F.col("rank") <= F.col("topn"))

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hi_csa_db_spark.catalog import load_table
+from hi_csa_db_spark.catalog import load_table, local_frame
 from hi_csa_db_spark.functions.hashing import MULT_HASH32_SQL, knuth_hash32
 from hi_csa_db_spark.functions.text import strip_punct, tokenize
 from hi_csa_db_spark.operators import dedup, graph, ordered
@@ -1294,7 +1294,7 @@ def d21_band_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the whole planning table is |geometries| x 19 literal rows
     — free at any corpus size; it never touches data."""
     pts = dedup.band_plan_table(spark, num_hashes=16, grid=20)
-    targets = spark.createDataFrame([(4,), (7,), (10,), (14,)], "ti int")
+    targets = local_frame(spark, [(4,), (7,), (10,), (14,)], "ti int")
     err = (
         targets.crossJoin(F.broadcast(pts))
         .select(

@@ -11,7 +11,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hi_csa_db_spark.catalog import load_table, load_tables
+from hi_csa_db_spark.catalog import load_table, load_tables, local_frame
 from hi_csa_db_spark.functions.hashing import (
     KNUTH_HASH32_SQL,
     MULT_HASH32_SQL,
@@ -1920,14 +1920,15 @@ def u30_zone_map_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    preds = spark.createDataFrame(
+    preds = local_frame(
+        spark,
         [
             ("1997q1", "1997-01-01", "1997-03-31"),
             ("1997q2", "1997-04-01", "1997-06-30"),
             ("1997q3", "1997-07-01", "1997-09-30"),
             ("1997q4", "1997-10-01", "1997-12-31"),
         ],
-        ["qtr", "lo_s", "hi_s"],
+        "qtr string, lo_s string, hi_s string",
     ).select("qtr", F.to_date("lo_s").alias("lo"), F.to_date("hi_s").alias("hi"))
     hit = F.when(
         (F.col("zmax") >= F.col("lo")) & (F.col("zmin") <= F.col("hi")), 1
@@ -2055,8 +2056,8 @@ def u31_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         "files_total",
         F.expr("CAST(greatest(1024, ndk * 16 div files_total) AS BIGINT)").alias("m"),
     )
-    grid = spark.createDataFrame(
-        [(2654435761,), (2246822519,), (3266489917,)], "a: bigint"
+    grid = local_frame(
+        spark, [(2654435761,), (2246822519,), (3266489917,)], "a: bigint"
     )
     pos = (
         (mult_hash32(F.col("key"), F.col("a")) % F.col("m"))
@@ -2069,8 +2070,8 @@ def u31_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("file_id", pos)
         .distinct()
     )
-    probes = spark.createDataFrame(
-        [(1,), (7,), (50,), (101,), (999983,)], "probe_key: bigint"
+    probes = local_frame(
+        spark, [(1,), (7,), (50,), (101,), (999983,)], "probe_key: bigint"
     )
     pp = (
         probes.withColumnRenamed("probe_key", "key")
@@ -2397,7 +2398,7 @@ def u33_mor_cow_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(F.col("h") < 100, 1).otherwise(0)).cast("bigint").alias("u100"),
         )
     )
-    g = spark.createDataFrame([(1,), (10,), (100,)], "share_permille: bigint")
+    g = local_frame(spark, [(1,), (10,), (100,)], "share_permille: bigint")
     upd = F.expr(
         "CASE share_permille WHEN 1 THEN u1 WHEN 10 THEN u10 ELSE u100 END"
     )
@@ -2414,8 +2415,8 @@ def u33_mor_cow_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("touched_rows"),
         )
     )
-    strat = spark.createDataFrame(
-        [("copy_on_write",), ("merge_on_read",)], "strategy: string"
+    strat = local_frame(
+        spark, [("copy_on_write",), ("merge_on_read",)], "strategy: string"
     )
     return (
         w.crossJoin(F.broadcast(strat))
@@ -2555,8 +2556,8 @@ def u34_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("post") == 0, 1).otherwise(0)).cast("bigint").alias("rows_pre"),
         F.sum("in_q").cast("bigint").alias("rows_q"),
     )
-    strat = spark.createDataFrame(
-        [("a_rewrite_all",), ("b_evolve_spec",)], "strategy: string"
+    strat = local_frame(
+        spark, [("a_rewrite_all",), ("b_evolve_spec",)], "strategy: string"
     )
     return (
         strat.crossJoin(F.broadcast(parts))

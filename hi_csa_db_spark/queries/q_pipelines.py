@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hi_csa_db_spark.catalog import load_table, load_tables
+from hi_csa_db_spark.catalog import load_table, load_tables, local_frame
 from hi_csa_db_spark.functions.hashing import KNUTH_HASH32_SQL, knuth_hash32
 from hi_csa_db_spark.functions.text import strip_punct, tokenize
 from hi_csa_db_spark.operators import dedup, graph
@@ -122,7 +122,7 @@ def graph_bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    seeds = spark.createDataFrame([(1 * B,), (1 * B + 1,), (1 * B + 2,)], ["node"])
+    seeds = local_frame(spark, [(1 * B,), (1 * B + 1,), (1 * B + 2,)], "node bigint")
     reached = graph.bfs(edges, seeds, max_depth=2)
     tag = F.element_at(
         F.array(F.lit("c"), F.lit("o"), F.lit("p")),

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hi_csa_db_spark.catalog import load_table
+from hi_csa_db_spark.catalog import load_table, local_frame
 from hi_csa_db_spark.functions.text import (
     absolutize_url,
     slugify,
@@ -1347,7 +1347,8 @@ def f_rounding_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: an 8-row literal grid; no table scan at all — the
     cheapest query in the registry, and the one every other signed
     division in it leans on."""
-    v = spark.createDataFrame(
+    v = local_frame(
+        spark,
         [(7, 2), (-7, 2), (7, -2), (-7, -2), (9, 3), (-9, 3),
          (1, 1000000), (-1, 1000000)],
         "a: bigint, b: bigint",

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hi_csa_db_spark.catalog import load_table
+from hi_csa_db_spark.catalog import load_table, local_frame
 from hi_csa_db_spark.functions.text import strip_punct, tokenize
 from hi_csa_db_spark.operators import ordered, similarity, textstats
 
@@ -1336,7 +1336,7 @@ def s13_recall_vs_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("rk")
         .agg(F.count(F.lit(1)).alias("bucket_n"))
     )
-    probes = spark.createDataFrame([(1,), (2,), (4,), (8,)], ["n_probe"])
+    probes = local_frame(spark, [(1,), (2,), (4,), (8,)], "n_probe bigint")
     cands = (
         probes.crossJoin(F.broadcast(sizes))
         .filter(F.col("rk") <= F.col("n_probe"))
@@ -1705,7 +1705,7 @@ def s17_mips_recall_vs_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("rk")
         .agg(F.count(F.lit(1)).alias("bucket_n"))
     )
-    probes = spark.createDataFrame([(1,), (2,), (4,), (8,)], ["n_probe"])
+    probes = local_frame(spark, [(1,), (2,), (4,), (8,)], "n_probe bigint")
     cands = (
         probes.crossJoin(F.broadcast(sizes))
         .filter(F.col("rk") <= F.col("n_probe"))
@@ -2006,8 +2006,8 @@ def ret7_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     BY TERM — never a global sort). The first-relevant reduction is a
     10-row-per-term aggregate."""
     docs = load_table(spark, sf_dir, "documents")
-    terms = spark.createDataFrame(
-        [("filter",), ("hash",), ("join",), ("scan",), ("sort",)], ["term"]
+    terms = local_frame(
+        spark, [("filter",), ("hash",), ("join",), ("scan",), ("sort",)], "term string"
     )
     toks = docs.select(
         "doc_id", F.split(F.col("text"), " ").alias("w")
@@ -2131,13 +2131,14 @@ def ret8_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows partition BY TERM (never global); the DCG fold is a
     10-row-per-term aggregate."""
     docs = load_table(spark, sf_dir, "documents")
-    terms = spark.createDataFrame(
-        [("filter",), ("hash",), ("join",), ("scan",), ("sort",)], ["term"]
+    terms = local_frame(
+        spark, [("filter",), ("hash",), ("join",), ("scan",), ("sort",)], "term string"
     )
-    disc = spark.createDataFrame(
+    disc = local_frame(
+        spark,
         [(1, 1000000), (2, 630930), (3, 500000), (4, 430677), (5, 386853),
          (6, 356207), (7, 333333), (8, 315465), (9, 301030), (10, 289065)],
-        ["r", "disc_micro"],
+        "r bigint, disc_micro bigint",
     )
     toks = docs.select("doc_id", F.split(F.col("text"), " ").alias("w"))
     gain = (

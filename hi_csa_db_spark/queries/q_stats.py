@@ -10,7 +10,7 @@ import glob
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hi_csa_db_spark.catalog import load_table, load_tables
+from hi_csa_db_spark.catalog import load_table, load_tables, local_frame
 from hi_csa_db_spark.functions.hashing import KNUTH_HASH32_SQL, knuth_hash32
 from hi_csa_db_spark.functions.text import strip_punct, tokenize
 from hi_csa_db_spark.operators import ordered, similarity
@@ -930,8 +930,8 @@ def stats_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     (never float formatting); one 9-group map-combined aggregate +
     a broadcast join against the 9-row constant table."""
     o = load_table(spark, sf_dir, "orders")
-    exp_p = spark.createDataFrame(
-        [(d + 1, p) for d, p in enumerate(_BENFORD_MICRO)], "digit int, p_micro long"
+    exp_p = local_frame(
+        spark, [(d + 1, p) for d, p in enumerate(_BENFORD_MICRO)], "digit int, p_micro long"
     )
     obs = (
         o.select(
@@ -2062,9 +2062,10 @@ def opt2_histogram_selectivity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.expr("CAST((pc - pmin) div w AS BIGINT)").alias("cell"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
-    specs = spark.createDataFrame(
+    specs = local_frame(
+        spark,
         [("narrow_low", 0, 1), ("mid_band", 2, 4), ("wide_band", 1, 7), ("upper_half", 4, 8)],
-        ["predicate", "a8", "b8"],
+        "predicate string, a8 bigint, b8 bigint",
     )
     preds = specs.crossJoin(F.broadcast(b)).select(
         "predicate",
@@ -2191,7 +2192,7 @@ def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)  # bounds + split pass share it
     )
     b = d.agg(F.min("x").alias("xmin"), F.max("x").alias("xmax"))
-    grid = spark.createDataFrame([(i,) for i in range(1, 16)], "i: bigint")
+    grid = local_frame(spark, [(i,) for i in range(1, 16)], "i: bigint")
     thr = grid.crossJoin(F.broadcast(b)).select(
         F.expr("CAST(xmin + (xmax - xmin + 1) * i div 16 AS BIGINT)").alias("thr")
     )
@@ -2578,7 +2579,7 @@ def ml_gbdt_round(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("x").alias("xmax"),
         F.sum(F.col("y_milli") * F.col("y_milli")).cast("bigint").alias("syy"),
     )
-    grid = spark.createDataFrame([(i,) for i in range(1, 16)], "i: bigint")
+    grid = local_frame(spark, [(i,) for i in range(1, 16)], "i: bigint")
     thr = grid.crossJoin(F.broadcast(b.select("xmin", "xmax"))).select(
         F.expr("CAST(xmin + (xmax - xmin + 1) * i div 16 AS BIGINT)").alias("t")
     ).localCheckpoint(eager=False)  # both rounds share the grid
@@ -2782,8 +2783,8 @@ def stats_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
             " / (CAST(n_obs AS DOUBLE) * n_obs)"
         ).alias("var_y"),
     )
-    grid = spark.createDataFrame(
-        [(100,), (1000,), (10000,), (100000,)], "n_per_arm: bigint"
+    grid = local_frame(
+        spark, [(100,), (1000,), (10000,), (100000,)], "n_per_arm: bigint"
     )
     return (
         grid.crossJoin(F.broadcast(v))
@@ -3245,7 +3246,7 @@ def ml_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("x", F.col("rank").alias("rnk"))
     perm = ra.join(rb, "rnk").select("x", "y")
     b = d.agg(F.min("x").alias("xmin"), F.max("x").alias("xmax"))
-    grid = spark.createDataFrame([(i,) for i in range(1, 16)], "i: bigint")
+    grid = local_frame(spark, [(i,) for i in range(1, 16)], "i: bigint")
     thr = grid.crossJoin(F.broadcast(b)).select(
         F.expr("CAST(xmin + (xmax - xmin + 1) * i div 16 AS BIGINT)").alias("t")
     ).localCheckpoint(eager=False)  # both grid passes share it

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hi_csa_db_spark.catalog import load_table, load_tables
+from hi_csa_db_spark.catalog import load_table, load_tables, local_frame
 from hi_csa_db_spark.functions.hashing import knuth_hash32
 from hi_csa_db_spark.operators import ordered
 
@@ -1536,7 +1536,7 @@ def t27_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     filled = _daily_series(spark, sf_dir).select(
         "day_n", F.col("v").alias("n")
     )
-    lags = spark.createDataFrame([(1,), (2,), (3,), (7,)], ["lag"])
+    lags = local_frame(spark, [(1,), (2,), (3,), (7,)], "lag bigint")
     a = filled.select(F.col("day_n").alias("da"), F.col("n").alias("xa"))
     b = filled.select(F.col("day_n").alias("db"), F.col("n").alias("xb"))
     pairs = (
@@ -2346,8 +2346,8 @@ def t38_watermark_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.max("us").over(win) - F.col("us"), F.lit(0)), F.lit(0)
     )
     lat = e.select(late.alias("late"))
-    grid = spark.createDataFrame(
-        [(10,), (30,), (60,), (120,), (300,)], "wsec int"
+    grid = local_frame(
+        spark, [(10,), (30,), (60,), (120,), (300,)], "wsec int"
     )
     dropped = F.sum(
         F.when(F.col("late") > F.col("wsec").cast("bigint") * 1000000, 1)
@@ -2421,8 +2421,8 @@ def t39_session_gap_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     gaps = e.select((F.col("us") - F.lag("us").over(w)).alias("gap"))
     nu = ev.agg(F.countDistinct("user_id").cast("bigint").alias("nu"))
-    grid = spark.createDataFrame(
-        [(60,), (300,), (900,), (1800,), (3600,)], "gsec int"
+    grid = local_frame(
+        spark, [(60,), (300,), (900,), (1800,), (3600,)], "gsec int"
     )
     over = F.sum(
         F.when(F.col("gap") > F.col("gsec").cast("bigint") * 1000000, 1)
@@ -2532,8 +2532,8 @@ def t40_auto_gap_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     l = e.withColumn("gap", F.col("us") - F.lag("us").over(w))
     nu = ev.agg(F.countDistinct("user_id").cast("bigint").alias("nu"))
-    grid = spark.createDataFrame(
-        [(60,), (300,), (900,), (1800,), (3600,)], "gsec int"
+    grid = local_frame(
+        spark, [(60,), (300,), (900,), (1800,), (3600,)], "gsec int"
     )
     cand = (
         l.crossJoin(F.broadcast(grid))
@@ -3429,8 +3429,8 @@ def t53_business_day_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(datediff(to_date(l_shipdate), DATE'1970-01-01') AS BIGINT)"
         ).alias("d2"),
     )
-    pw = spark.createDataFrame(
-        [(0, 0), (1, 1), (2, 2), (3, 2), (4, 2), (5, 3), (6, 4)],
+    pw = local_frame(
+        spark, [(0, 0), (1, 1), (2, 2), (3, 2), (4, 2), (5, 3), (6, 4)],
         "pos: bigint, pfx: bigint",
     )
     li = o.join(l, o["o_orderkey"] == l["l_orderkey"])

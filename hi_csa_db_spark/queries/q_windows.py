@@ -11,7 +11,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hi_csa_db_spark.catalog import load_table, load_tables
+from hi_csa_db_spark.catalog import load_table, load_tables, local_frame
 from hi_csa_db_spark.functions.hashing import mult_hash32
 from hi_csa_db_spark.functions.text import strip_punct, tokenize
 from hi_csa_db_spark.operators import classify, ordered
@@ -2660,9 +2660,9 @@ def a21_cms_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)  # cells + top10 + total share it
     )
     tot = counts.agg(F.sum("c").cast("bigint").alias("n"))
-    widths = spark.createDataFrame([(256,), (1024,), (4096,)], "w bigint")
-    hashes = spark.createDataFrame(
-        [(0, 2654435761), (1, 2246822519), (2, 3266489917), (3, 668265263)],
+    widths = local_frame(spark, [(256,), (1024,), (4096,)], "w bigint")
+    hashes = local_frame(
+        spark, [(0, 2654435761), (1, 2246822519), (2, 3266489917), (3, 668265263)],
         "d bigint, a bigint",
     )
     cells = (
@@ -2926,8 +2926,8 @@ def a23_decayed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     )
     ref = e.agg(F.max("day").alias("tref"))
-    decay = spark.createDataFrame(
-        [(d, w) for d, w in enumerate(_DECAY_MICRO_7D)],
+    decay = local_frame(
+        spark, [(d, w) for d, w in enumerate(_DECAY_MICRO_7D)],
         "d: bigint, w_micro: bigint",
     )
     scored = (

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
+from hi_csa_db_spark.catalog import local_frame
+
 PAGE_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -308,8 +310,8 @@ def crawl(
     """
     from pyspark.sql import Row
 
-    visited = spark.createDataFrame(
-        [Row(url=u, level=0) for u in seeds], "url string, level int"
+    visited = local_frame(
+        spark, [Row(url=u, level=0) for u in seeds], "url string, level int"
     )
     frontier = visited.select("url")
     all_edges = None
@@ -329,7 +331,7 @@ def crawl(
         visited = visited.unionByName(new_urls)
         frontier = new_urls.select("url")
     if all_edges is None:
-        all_edges = spark.createDataFrame([], "src string, dst string, level int")
+        all_edges = local_frame(spark, [], "src string, dst string, level int")
     return visited, all_edges
 
 
@@ -368,7 +370,8 @@ def crawl_or_cache(
         )
         url_i = inames.index("Url")
         lvl_i = inames.index("Level")
-        index = spark.createDataFrame(
+        index = local_frame(
+            spark,
             [
                 (u, int(lv) if lv is not None else 0)
                 for u, lv in zip(icols[url_i], icols[lvl_i])
@@ -376,7 +379,8 @@ def crawl_or_cache(
             "url string, level int",
         )
         f_i, t_i = enames.index("From"), enames.index("To")
-        edges = spark.createDataFrame(
+        edges = local_frame(
+            spark,
             [
                 (int(a), int(b))
                 for a, b in zip(ecols[f_i], ecols[t_i])

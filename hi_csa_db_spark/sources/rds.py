@@ -328,6 +328,8 @@ def rds_to_spark(spark, path: str, *component: str):
     obj = read_rds(path)
     if component:
         obj = element(obj, *component)
+    from hi_csa_db_spark.catalog import local_frame
+
     names, cols = data_frame_columns(obj)
     rows = list(zip(*cols)) if cols else []
     fields = []
@@ -351,7 +353,7 @@ def rds_to_spark(spark, path: str, *component: str):
         else:
             t = StringType()
         fields.append(StructField(name, t, True))
-    return spark.createDataFrame(rows, StructType(fields))
+    return local_frame(spark, rows, StructType(fields))
 
 
 def _infer_struct(names: list[str], cols: list[list]):

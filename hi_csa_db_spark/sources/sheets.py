@@ -93,6 +93,12 @@ def read_sheet_export(
     ``rename``: raw-header -> wanted-name overrides applied before the
     generic slugging. ``target_schema``: when given, the result is
     drift-aligned onto it (missing -> typed nulls, extras dropped).
+
+    A list of lines becomes a one-partition PythonRDD: the engine's one
+    list-built input that is not a ``catalog.local_frame``. PySpark's
+    ``DataFrameReader.csv`` and ``.json`` parse a path or an RDD of
+    strings and take no DataFrame, so a LocalRelation of lines cannot
+    feed them; scans of this frame start a Python worker task.
     """
     if isinstance(source, list):
         source = spark.sparkContext.parallelize(source, 1)

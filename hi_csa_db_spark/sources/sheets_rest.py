@@ -31,6 +31,8 @@ import urllib.request
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from hi_csa_db_spark.catalog import local_frame
+
 from hi_csa_db_spark.sources.sheets import (
     align_to_schema,
     _blank_strings_to_null,
@@ -238,7 +240,7 @@ def values_to_dataframe(
     values: list[list] = payload.get("values") or []
     if not values:
         if target_schema is not None:
-            return spark.createDataFrame([], schema=target_schema)
+            return local_frame(spark, [], schema=target_schema)
         raise ValueError("empty sheet range and no target_schema given")
     if header:
         cols, rows = values[0], values[1:]
@@ -251,8 +253,8 @@ def values_to_dataframe(
         + [None] * (width - len(r))
         for r in rows
     ]
-    df = spark.createDataFrame(
-        padded, schema=T.StructType([T.StructField(str(c), T.StringType()) for c in cols])
+    df = local_frame(
+        spark, padded, schema=T.StructType([T.StructField(str(c), T.StringType()) for c in cols])
     )
     df = normalize_headers(df, rename)
     df = _blank_strings_to_null(df)

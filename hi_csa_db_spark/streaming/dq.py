@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hi_csa_db_spark.catalog import local_frame
+
 
 def dq_gate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the events stream through per-batch expectation checks and
@@ -54,6 +56,6 @@ def dq_gate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (rule, int(n), int(v)) for rule, (n, v) in sorted(totals.items())
     ]
-    return spark.createDataFrame(
-        rows, "rule string, n_checked bigint, n_violations bigint"
+    return local_frame(
+        spark, rows, "rule string, n_checked bigint, n_violations bigint"
     )

@@ -19,6 +19,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hi_csa_db_spark.catalog import local_frame
+
 
 @contextmanager
 def pinned_state_partitions(spark: SparkSession) -> Iterator[None]:
@@ -559,8 +561,8 @@ def cms_topk_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hi_csa_db_spark.functions.hashing import mult_hash32
 
     ev = read_events_stream(spark, sf_dir)
-    grid = spark.createDataFrame(
-        [(1, 2654435761), (2, 2246822519), (3, 3266489917)],
+    grid = local_frame(
+        spark, [(1, 2654435761), (2, 2246822519), (3, 3266489917)],
         "a_id: bigint, a: bigint",
     )
     h = ev.select("ts", "user_id", F.lit(1).alias("one")).join(

@@ -7,6 +7,7 @@ assert the window-based Spark results are identical.
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from hi_csa_db_spark.operators.ordered import (
@@ -83,6 +84,40 @@ def test_positional_update(spark):
     got = {r.i: r.val for r in out.collect()}
     assert [got[i] for i in (0, 2, 4, 6, 8)] == ["a", "b", "c", "d", "e"]
     assert all(got[i] == "old" for i in (1, 3, 5, 7, 9))
+
+
+def _imperative_update(rows, values):
+    """The reference's loop: the k-th matched row in order takes the
+    k-th value; matches past the end of ``values`` keep theirs."""
+    out, k = {}, 0
+    for i, cat, val in sorted(rows):
+        if cat == "E":
+            val = values[k] if k < len(values) else val
+            k += 1
+        out[i] = val
+    return out
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        # more matches (8) than values (3), unmatched rows interleaved
+        [(i, "E" if i % 3 else "other", f"old{i}") for i in range(12)],
+        # zero matches
+        [(i, "other", f"old{i}") for i in range(6)],
+        # NULL match column: NULL rows count as unmatched
+        [(i, [None, "E", "other"][i % 3], f"old{i}") for i in range(9)],
+    ],
+    ids=["surplus_matches", "no_match", "null_match"],
+)
+def test_positional_update_edges(spark, rows):
+    values = ["a", "b", "c"]
+    df = spark.createDataFrame(rows, "i int, cat string, val string").repartition(3)
+    out = positional_update(
+        df, match=F.col("cat") == "E", order_by=["i"], column="val", values=values
+    )
+    assert out.columns == df.columns
+    assert {r.i: r.val for r in out.collect()} == _imperative_update(rows, values)
 
 
 def test_first_row_per_key_deterministic(spark):

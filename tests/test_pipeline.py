@@ -69,3 +69,56 @@ def test_pipeline_is_deterministic(spark, db):
     assert sorted(map(tuple, db.collect()), key=_sort_key) == sorted(
         map(tuple, again.collect()), key=_sort_key
     )
+
+
+def _site(n_leaves: int = 4) -> dict:
+    """A home page linking ``n_leaves`` leaves, each with mitigation
+    (h3) / practice (h4) / paragraph sections, one of them 'Energy'."""
+    home = "https://s.org/"
+    leaves = [f"{home}leaf{i}" for i in range(n_leaves)]
+    site = {home: "".join(f'<p><a href="{u}">leaf</a></p>' for u in leaves)}
+    for i, u in enumerate(leaves):
+        mit = fixtures.MITIGATIONS[i % len(fixtures.MITIGATIONS)]
+        kw, practice = fixtures.PRACTICE_KEYWORDS[i]
+        site[u] = (
+            f"<h3>{mit}</h3><h4>{practice}</h4>"
+            f'<p>{practice} mentions {kw} <a href="/doc{i}.pdf">doc</a></p>'
+            f"<h3>Energy</h3><h4></h4><p>energy note {i}</p>"
+        )
+    return site
+
+
+def test_publish_fetches_each_page_once(spark, tmp_path):
+    """One catalog.publish of the csa_db fetches and parses every page
+    once: policy_stream's Practice->Mitigation lookup and assemble's
+    union read one evaluation of the technical stream."""
+    from hi_csa_db_spark import catalog
+    from hi_csa_db_spark.sources import crawl, html
+
+    site = _site()
+    index, _ = crawl.crawl(spark, ["https://s.org/"], lambda u: site.get(u, ""), 1)
+    n_pages = index.count()
+    assert n_pages == len(site)
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def fetcher(u):
+        calls.add(1)
+        return site.get(u, "")
+
+    pages = crawl.fetch_pages(index.select("url"), fetcher)
+    db = pipeline.run_pipeline(
+        html.elements_from_pages(pages),
+        fixtures.policy_sheet(spark),
+        fixtures.support_sheet(spark),
+        fixtures.practice_keywords(spark),
+    )
+    out = str(tmp_path / "csa_db")
+    for _ in range(2):
+        before = calls.value
+        observed = catalog.publish(db, out, partition_by=["Type"], observe=True)
+        assert calls.value - before == n_pages
+    assert {r.Type for r in spark.read.parquet(out).select("Type").distinct().collect()} == {
+        "Technical", "Policy", "Support"
+    }
+    assert observed["n_rows"] == spark.read.parquet(out).count()

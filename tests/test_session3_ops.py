@@ -125,7 +125,9 @@ def test_bpe_train_hand_corpus(spark):
     words = spark.createDataFrame(
         [("abab",), ("abab",), ("abc",)], "w string"
     )
-    rows = bpe_train(words, rounds=2).orderBy("round").collect()
+    merges = bpe_train(words, rounds=2)
+    assert merges.schema.simpleString() == "struct<round:int,merge:string,n:bigint>"
+    rows = merges.orderBy("round").collect()
     assert [r["merge"] for r in rows] == ["ab", "abab"]
     assert rows[0]["n"] == 5
     assert rows[1]["n"] == 2

@@ -43,7 +43,7 @@ def test_spark_roundtrip(spark, tmp_path):
     path = str(tmp_path / "t.rds")
     rds.spark_to_rds(df, path)
     back = rds.rds_to_spark(spark, path)
-    assert back.columns == df.columns
+    assert back.schema == df.schema
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
 
 
