@@ -166,13 +166,20 @@ def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFram
     ``schema`` is a DDL string (``"a bigint, b string"``, with or
     without ``:``) or a ``StructType``; ``rows`` are tuples or ``Row``s
     in schema order. Python values convert as Arrow converts them to
-    the schema's types, and a value that does not fit its type raises."""
+    the schema's types; a value that does not fit its type, or a row
+    whose length differs from the schema's, raises."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    for row in rows:
+        if len(row) != len(arrow):
+            raise ValueError(
+                f"row has {len(row)} fields, schema has {len(arrow)}: {row!r}"
+            )
     cols = list(zip(*rows)) or [()] * len(arrow)
     table = pa.Table.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow

@@ -72,7 +72,7 @@ def ordered_slice_from_marker(
 def positional_update(
     df: DataFrame,
     match: Column,
-    order_by: Sequence[str],
+    order_by: Sequence[str | Column],
     column: str,
     values: Sequence[str],
 ) -> DataFrame:
@@ -83,16 +83,10 @@ def positional_update(
     row_number and read their replacement from a literal array with
     ``try_element_at``, which is NULL past the end of ``values`` (and
     safe under ANSI), so surplus matches keep their value. No table, no
-    join, no driver loop.
-
-    The window key holds all matched rows in one partition, as the
-    numbering needs, and spreads the unmatched rows by a hash of their
-    order columns (hence column names, ascending), so no task sorts the
-    whole unmatched remainder. A NULL ``match`` counts as unmatched.
+    join, no driver loop. A NULL ``match`` counts as unmatched.
     """
     matched = F.coalesce(match, F.lit(False))
-    spread = F.when(~matched, F.xxhash64(*order_by))
-    w = Window.partitionBy(matched, spread).orderBy(*order_by)
+    w = Window.partitionBy(matched).orderBy(*order_by)
     pos = F.when(matched, F.row_number().over(w))
     new = F.try_element_at(F.array(*map(F.lit, values)), pos)
     return df.withColumn(column, F.coalesce(new, F.col(column)))

@@ -34,6 +34,8 @@ import struct
 from dataclasses import dataclass, field
 from typing import Any, BinaryIO
 
+from hi_csa_db_spark.catalog import local_frame
+
 # SEXP type codes (R Internals table)
 NILSXP = 0
 SYMSXP = 1
@@ -328,8 +330,6 @@ def rds_to_spark(spark, path: str, *component: str):
     obj = read_rds(path)
     if component:
         obj = element(obj, *component)
-    from hi_csa_db_spark.catalog import local_frame
-
     names, cols = data_frame_columns(obj)
     rows = list(zip(*cols)) if cols else []
     fields = []

@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from hi_csa_db_spark.catalog import local_frame
-
 from hi_csa_db_spark.sources.sheets import (
     align_to_schema,
     _blank_strings_to_null,

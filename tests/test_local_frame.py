@@ -55,6 +55,16 @@ def test_value_outside_its_type_raises(spark):
         local_frame(spark, [(2**40,)], "i int")
 
 
+@pytest.mark.parametrize(
+    "rows",
+    [[(1, "a", "x")], [(1,)], [(1, "a", "x"), (2, "b")]],
+    ids=["wider", "narrower", "ragged"],
+)
+def test_row_length_other_than_schema_raises(spark, rows):
+    with pytest.raises(ValueError, match="fields"):
+        local_frame(spark, rows, "k int, v string")
+
+
 def test_engine_calls_createDataFrame_only_in_local_frame():
     """One implementation of "a constant table": every other call site
     goes through catalog.local_frame."""
