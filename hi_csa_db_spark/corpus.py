@@ -5,9 +5,16 @@ the named queries call (operators.dedup.minhash_lsh_dedup and
 near_dup_clusters, q_corpus._quality_survivor_drops,
 _shared._dsir_keep and _split_80_10_10) — Catalyst sees the whole
 chained pipeline and prunes columns/pushes filters across stage
-boundaries, exactly like the hand-written composites
-(pipe_training_prep_v3, v6 and v7, whose equality with this API is
-pinned by tests/test_corpus_api.py).
+boundaries, as it does for the hand-written composites.
+
+A chain applies each verb to the docs the verbs before it kept, which
+is not always the composite's rule: ``dedup_near_keep_best`` after
+``quality_filter`` clusters only the quality-kept docs, while
+pipe_training_prep_v3 clusters the whole corpus and then keeps the
+quality-kept survivors. tests/test_corpus_api.py pins equal rows for
+that chain and pipe_v3, and for ``gate_quantile`` against pipe_v7, on
+the test fixture; a near-dup cluster that mixes kept and dropped
+docs can make the first pair differ.
 
     corpus = Corpus.load(spark, sf_dir)
     report = (corpus
@@ -94,7 +101,8 @@ class Corpus:
     def dedup_near_keep_best(self) -> "Corpus":
         """Collapse MinHash-LSH near-dup clusters keeping the BEST-
         quality member (max logit, min-id ties) — the d10 survivor
-        rule, computed over the current docs with x20's scores."""
+        rule, computed over the current docs with x20's scores (so
+        after a filter verb it clusters the kept docs only)."""
         from hi_csa_db_spark.queries.q_corpus import _quality_survivor_drops
 
         _, drops = _quality_survivor_drops(self.spark, self.sf_dir, self._docs)

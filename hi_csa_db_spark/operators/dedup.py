@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from hi_csa_db_spark.catalog import local_frame, spread_input
+from hi_csa_db_spark.functions.hashing import hex_to_long, stable_long_hash
 from hi_csa_db_spark.functions.text import strip_punct, tokenize, word_ngrams
 from hi_csa_db_spark.operators import graph
 from hi_csa_db_spark.operators._cache_ledger import register_cached
@@ -80,6 +81,27 @@ def shingles(
     )
 
 
+def _km_pair(m: Column) -> tuple[Column, Column]:
+    """Kirsch-Mitzenmacher pair of one md5 hex string ``m``: h1 = hex
+    chars 1-15 (60-bit), h2 = hex chars 16-27 * 2 + 1 (49-bit, odd)."""
+    return hex_to_long(m), hex_to_long(m, 12, start=16) * 2 + 1
+
+
+def _minhash_mins(num_hashes: int) -> list[Column]:
+    """The signature aggregates ``__mh{i} = min((__h1 + i*__h2) mod
+    2^60)`` over a frame holding the ``_km_pair`` columns.
+
+    One parsed SQL expression per hash: the Column-operator form
+    costs ~5 py4j round-trips per hash index at BUILD time (~0.8 s
+    of d2/d10's plan construction for 16 hashes, the d4 lane-word
+    lesson); the parsed string is a single call with the identical
+    expression tree."""
+    return [
+        F.expr(f"min((__h1 + {i} * __h2) % {2**60}) AS __mh{i}")
+        for i in range(num_hashes)
+    ]
+
+
 def minhash_signatures(
     shingle_df: DataFrame, id_col: str = "doc_id", num_hashes: int = 16
 ) -> DataFrame:
@@ -98,20 +120,9 @@ def minhash_signatures(
     partition to one row per doc before the shuffle, instead of
     exploding num_hashes x shingles rows through it.
     """
-    m = F.md5(F.col("shingle"))
-    h1 = F.conv(F.substring(m, 1, 15), 16, 10).cast("long")
-    h2 = F.conv(F.substring(m, 16, 12), 16, 10).cast("long") * 2 + 1
+    h1, h2 = _km_pair(F.md5(F.col("shingle")))
     base = shingle_df.select(F.col(id_col), h1.alias("__h1"), h2.alias("__h2"))
-    # one parsed SQL expression per hash: the Column-operator form
-    # costs ~5 py4j round-trips per hash index at BUILD time (~0.8 s
-    # of d2/d10's plan construction for 16 hashes, the d4 lane-word
-    # lesson); the parsed string is a single call with the identical
-    # expression tree
-    aggs = [
-        F.expr(f"min((__h1 + {i} * __h2) % {2**60}) AS __mh{i}")
-        for i in range(num_hashes)
-    ]
-    per_doc = base.groupBy(id_col).agg(*aggs)
+    per_doc = base.groupBy(id_col).agg(*_minhash_mins(num_hashes))
     return per_doc.select(
         id_col,
         F.array(*[F.col(f"__mh{i}") for i in range(num_hashes)]).alias("sig"),
@@ -128,20 +139,17 @@ def shingle_array(text_col: str = "text", n: int = 3):
 def hash_pairs_col(shingle_col: Column) -> Column:
     """(h1, h2) Kirsch-Mitzenmacher pair per shingle of an ALREADY
     MATERIALIZED shingle-array column — one md5 per shingle. Split out
-    of minhash_signature_col (r12) so consumers can pin the pair array
+    of minhash_signature_col so consumers can pin the pair array
     behind its own projection: higher-order functions run interpreted
     (no codegen CSE), so an expression that references the pair array
     ``num_hashes`` times re-evaluates it per reference unless it is a
     plain column by then."""
-    return F.transform(
-        shingle_col,
-        lambda s: F.struct(
-            F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long").alias("h1"),
-            (F.conv(F.substring(F.md5(s), 16, 12), 16, 10).cast("long") * 2 + 1).alias(
-                "h2"
-            ),
-        ),
-    )
+
+    def pair(s: Column) -> Column:
+        h1, h2 = _km_pair(F.md5(s))
+        return F.struct(h1.alias("h1"), h2.alias("h2"))
+
+    return F.transform(shingle_col, pair)
 
 
 def minhash_from_hash_pairs(hp_col: Column, num_hashes: int = 16) -> Column:
@@ -637,26 +645,15 @@ def _lsh_scored_candidates(
     integer-micro (minhash_lsh_pairs_micro) scores both derive, so
     the hash family / band geometry can never drift between them."""
     sh = shingles(docs, id_col, text_col, n)
-    m = F.md5(F.col("shingle"))
-    h1 = F.conv(F.substring(m, 1, 15), 16, 10).cast("long")
-    h2 = F.conv(F.substring(m, 16, 12), 16, 10).cast("long") * 2 + 1
+    h1, h2 = _km_pair(F.md5(F.col("shingle")))
     base = sh.select(F.col(id_col), F.col("shingle"), h1.alias("__h1"), h2.alias("__h2"))
-    # one parsed SQL expression per hash: the Column-operator form
-    # costs ~5 py4j round-trips per hash index at BUILD time (~0.8 s
-    # of d2/d10's plan construction for 16 hashes, the d4 lane-word
-    # lesson); the parsed string is a single call with the identical
-    # expression tree
-    aggs = [
-        F.expr(f"min((__h1 + {i} * __h2) % {2**60}) AS __mh{i}")
-        for i in range(num_hashes)
-    ]
-    # r13: the bounded cache ledger keeps a long session from
-    # accumulating one retained per_doc frame per LSH query
-    # (VERDICT r12 item 5); recency-keyed by plan, so the bench's
-    # cross-pass reuse is untouched.
+    # the bounded cache ledger keeps a long session from accumulating
+    # one retained per_doc frame per LSH query (each query caches its
+    # own); recency-keyed by plan, so the bench's cross-pass reuse is
+    # untouched.
     per_doc = register_cached(
         base.groupBy(id_col)
-        .agg(*aggs, F.collect_set("shingle").alias("__shs"))
+        .agg(*_minhash_mins(num_hashes), F.collect_set("shingle").alias("__shs"))
         .cache()
     )
     sigs = per_doc.select(
@@ -796,10 +793,7 @@ def simhash(
             F.array_distinct(tokenize(F.lower(strip_punct(F.col(text_col)))))
         ).alias("tok"),
     )
-    hashed = toks.select(
-        id_col,
-        F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long").alias("h"),
-    )
+    hashed = toks.select(id_col, stable_long_hash(F.col("tok")).alias("h"))
     # Bit-sliced ones-counting (r7; values unchanged): instead of one
     # SUM(±1) aggregate per bit (60 expressions per row — measured as
     # d4's dominant cost at sf0.1, 0.76 of 2.1 s), pack THREE bit

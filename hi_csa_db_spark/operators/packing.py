@@ -1,7 +1,8 @@
 """Sequence packing for training-context assembly.
 
-The engine's prefix-sum packer (x16_context_packing) is fully
-relational — one shuffle, no sequential state — but it packs in
+The engine's prefix-sum packer (``pack_prefix``: x16_context_packing,
+pipe_training_prep_v2) is fully relational — one shuffle, no
+sequential state — but it packs in
 doc-id order, so a long document can strand budget at every chunk
 boundary. FIRST-FIT-DECREASING is the classic better packer
 (guaranteed <= 11/9·OPT + 1 bins): sort items by size descending,
@@ -25,7 +26,7 @@ the driver records the weaker rows-only check for the query entry.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
@@ -42,6 +43,23 @@ PACK_SCHEMA = StructType(
         StructField("bin_id", LongType()),
     ]
 )
+
+
+def pack_prefix(docs: DataFrame, budget: int) -> DataFrame:
+    """``docs`` plus ``bin_id`` = floor(tokens before the doc / budget),
+    the prefix sum of ``n_tokens`` running over each ``source`` in
+    ``doc_id`` order: a doc straddling a boundary starts in the earlier
+    bin (streaming chunking, no sequential state beyond the prefix
+    sum)."""
+    w = (
+        Window.partitionBy("source")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    before = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
+    return docs.withColumn(
+        "bin_id", F.floor(before / F.lit(float(budget))).cast("long")
+    )
 
 
 def ffd_pack_pdf(pdf: pd.DataFrame, budget: int) -> pd.DataFrame:

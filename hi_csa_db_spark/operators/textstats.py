@@ -8,7 +8,7 @@ never leaves the JVM.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hi_csa_db_spark.functions.text import strip_punct, tokenize
@@ -227,14 +227,25 @@ def pii_scrub(
     )
 
 
+def gopher_keep(n_words: Column, mean_word_len: Column, frac_alpha: Column) -> Column:
+    """The Gopher rule gate: 10-100000 words, mean word length 3-10,
+    at least 80% of words alphabetic."""
+    return (
+        (n_words >= 10)
+        & (n_words <= 100000)
+        & (mean_word_len >= 3)
+        & (mean_word_len <= 10)
+        & (frac_alpha >= 0.8)
+    )
+
+
 def quality_rules(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Gopher-style document quality gates: (id, n_words,
     mean_word_len, frac_alpha_words, keep). One explode + one groupBy
-    (partial aggregation map-side); thresholds are the published
-    rules-of-thumb (word count window, mean word length 3-10, >=80%
-    alphabetic words)."""
+    (partial aggregation map-side); ``keep`` is ``gopher_keep`` on the
+    6-dp rounded means, the form the x12 oracle pins."""
     toks = docs.select(
         F.col(id_col),
         F.explode(tokenize(F.lower(strip_punct(F.col(text_col))))).alias("w"),
@@ -246,12 +257,8 @@ def quality_rules(
             F.avg(F.when(F.col("w").rlike("[a-z]"), 1.0).otherwise(0.0)), 6
         ).alias("frac_alpha_words"),
     )
-    keep = (
-        (F.col("n_words") >= 10)
-        & (F.col("n_words") <= 100000)
-        & (F.col("mean_word_len") >= 3)
-        & (F.col("mean_word_len") <= 10)
-        & (F.col("frac_alpha_words") >= 0.8)
+    keep = gopher_keep(
+        F.col("n_words"), F.col("mean_word_len"), F.col("frac_alpha_words")
     )
     return stats.select(
         id_col, "n_words", "mean_word_len", "frac_alpha_words",

@@ -9,7 +9,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hi_csa_db_spark.catalog import load_table
-from hi_csa_db_spark.functions.hashing import knuth_hash32
+from hi_csa_db_spark.functions.hashing import knuth_hash32, md5_hex
 from hi_csa_db_spark.functions.text import strip_punct, tokenize
 from hi_csa_db_spark.operators import textstats
 
@@ -532,6 +532,32 @@ def _split_80_10_10(key: Column) -> Column:
         F.when(u < 3435973836, "train")
         .when(u < 3865470566, "val")
         .otherwise("test")
+    )
+
+
+def _md5_nibble_split(key: Column) -> Column:
+    """sample_train_split's 75/12.5/12.5 train/val/test split of
+    ``key``: the first hex digit of its md5, 0-b / c-d / e-f."""
+    nib = F.substring(md5_hex(key), 1, 1)
+    return (
+        F.when(nib.isin(*"0123456789ab"), F.lit("train"))
+        .when(nib.isin("c", "d"), F.lit("val"))
+        .otherwise(F.lit("test"))
+    )
+
+
+def _mixture_keep(toks: DataFrame) -> DataFrame:
+    """x17's domain-mixture keep: each source's docs (``source``,
+    ``doc_id``, ``n_tokens``) downsampled to the smallest source's token
+    total by the pure-integer test
+    knuth_hash32(doc_id) * src_tokens < min_tokens * 2^32."""
+    totals = toks.groupBy("source").agg(F.sum("n_tokens").alias("src_tokens"))
+    floor_t = totals.agg(F.min("src_tokens").alias("min_tokens"))
+    u = knuth_hash32(F.col("doc_id"))
+    return (
+        toks.join(F.broadcast(totals), "source")
+        .join(F.broadcast(floor_t))
+        .filter(u * F.col("src_tokens") < F.col("min_tokens") * F.lit(4294967296))
     )
 
 

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hi_csa_db_spark.catalog import load_table, local_frame, spread_input
+from hi_csa_db_spark.functions.hashing import hex_to_long, md5_hex
 from hi_csa_db_spark.functions.text import strip_punct, tokenize
 from hi_csa_db_spark.operators import dedup, ordered, textstats
 
@@ -1574,14 +1575,7 @@ def x53_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(tokenize(F.col("text"))).alias("pos", "tok"),
     )
     masked = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.col("doc_id"), F.col("pos"))), 1, 2
-            ),
-            16,
-            10,
-        ).cast("int")
-        % 5
+        hex_to_long(md5_hex(F.concat_ws(":", F.col("doc_id"), F.col("pos"))), 2) % 5
         == 0
     )
     m = toks.select("doc_id", "tok", "pos", masked.alias("masked"))

@@ -15,8 +15,10 @@ from hi_csa_db_spark.catalog import load_table, load_tables, local_frame
 from hi_csa_db_spark.functions.hashing import (
     KNUTH_HASH32_SQL,
     MULT_HASH32_SQL,
+    id_shard16,
     knuth_hash32,
     mult_hash32,
+    stable_long_hash,
 )
 from hi_csa_db_spark.operators.merge import db_merge, union_streams
 
@@ -964,9 +966,7 @@ def u21_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     exists (the manifest aggregate itself is map-combined)."""
     docs = load_table(spark, sf_dir, "documents")
     sh = docs.select(
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1), 16, 10)
-        .cast("bigint")
-        .alias("shard"),
+        id_shard16(F.col("doc_id")).alias("shard"),
         F.length("text").alias("n_chars"),
     )
     m = sh.groupBy("shard").agg(
@@ -1765,26 +1765,13 @@ def u29_shard_rebalance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the report is 1 row."""
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
-        "doc_id",
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("long")
-        .alias("h"),
+        "doc_id", stable_long_hash(F.col("doc_id")).alias("h")
     ).localCheckpoint(eager=False)  # ring + mod branches share it
     pts = (
         spark.range(24)
         .select(
             F.col("id").cast("bigint").alias("shard"),
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("shard:"), F.col("id").cast("string"))),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            )
-            .cast("long")
-            .alias("pt"),
+            stable_long_hash(F.col("id"), seed="shard").alias("pt"),
             F.when(F.col("id") < 16, 1).otherwise(0).alias("is_old"),
         )
     )

@@ -9,9 +9,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hi_csa_db_spark.catalog import load_table
-from hi_csa_db_spark.functions.hashing import KNUTH_HASH32_SQL, knuth_hash32
+from hi_csa_db_spark.functions.hashing import (
+    KNUTH_HASH32_SQL,
+    hex_to_long,
+    id_shard16,
+    knuth_hash32,
+    md5_hex,
+    row_checksum,
+    stable_long_hash,
+)
 from hi_csa_db_spark.functions.text import strip_punct, tokenize
 from hi_csa_db_spark.operators import dedup, ordered
+from hi_csa_db_spark.operators.packing import pack_prefix
 
 from hi_csa_db_spark.queries import _ORACLES, _register
 from hi_csa_db_spark.queries._shared import (
@@ -24,6 +33,8 @@ from hi_csa_db_spark.queries._shared import (
     _dsir_keep,
     _dsir_weight_frame,
     _eval_split_hits,
+    _md5_nibble_split,
+    _mixture_keep,
     _split_80_10_10,
     _x49_oracle,
 )
@@ -174,12 +185,7 @@ def x29_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     is reproducible and oracle-checkable; keys are rounded to 9dp
     before ranking with doc_id tie-break (the ln() 1-ulp class)."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    m = F.md5(F.col("doc_id").cast("string"))
-    h = (
-        (F.conv(F.substring(m, 1, 1), 16, 10).cast("long") * 65536
-         + F.conv(F.substring(m, 2, 4), 16, 10).cast("long"))
-        % 1000000
-    )
+    h = hex_to_long(md5_hex(F.col("doc_id")), 5) % 1000000
     u = (h + F.lit(0.5)) / 1000000
     key = F.round(F.log(u) / F.col("n_chars"), 9)
     return (
@@ -230,16 +236,8 @@ def x16_context_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "source", "doc_id", F.size(tokenize(F.col("text"))).alias("n_tokens")
     )
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    before = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
     return (
-        toks.withColumn(
-            "bin_id", F.floor(before / F.lit(float(_PACK_BUDGET))).cast("long")
-        )
+        pack_prefix(toks, _PACK_BUDGET)
         .groupBy("source", "bin_id")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -288,13 +286,8 @@ def x17_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "source", "doc_id", F.size(tokenize(F.col("text"))).alias("n_tokens")
     )
-    totals = toks.groupBy("source").agg(F.sum("n_tokens").alias("src_tokens"))
-    floor_t = totals.agg(F.min("src_tokens").alias("min_tokens"))
-    u = knuth_hash32(F.col("doc_id"))
     return (
-        toks.join(F.broadcast(totals), "source")
-        .join(F.broadcast(floor_t))
-        .filter(u * F.col("src_tokens") < F.col("min_tokens") * F.lit(4294967296))
+        _mixture_keep(toks)
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_kept"),
@@ -385,19 +378,12 @@ def x35_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow map + one 16-group aggregation; no shuffle beyond the
     map-combined groupBy."""
     docs = load_table(spark, sf_dir, "documents")
-    shard = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1), 16, 10
-    ).cast("long")
-    fp = (
-        F.conv(F.substring(F.md5(F.col("text")), 1, 15), 16, 10).cast("long")
-        % 2147483647
-    )
     return (
         docs.select(
-            shard.alias("shard"),
+            id_shard16(F.col("doc_id")).alias("shard"),
             F.col("doc_id"),
             F.length("text").alias("n_chars"),
-            fp.alias("fp"),
+            row_checksum(F.col("text")).alias("fp"),
         )
         .groupBy("shard")
         .agg(
@@ -1106,13 +1092,7 @@ def x62_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle key."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_dedup(docs)
-    nib = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-    split = (
-        F.when(nib.isin(*list("0123456789ab")), F.lit("train"))
-        .when(nib.isin("c", "d"), F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
-    sp = docs.select("doc_id", split.alias("split"))
+    sp = docs.select("doc_id", _md5_nibble_split(F.col("doc_id")).alias("split"))
     sa = sp.select(
         F.col("doc_id").alias("__ida"), F.col("split").alias("split_a")
     )
@@ -1844,12 +1824,7 @@ def x95_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=False)  # sketch + exact + sizes share it
     )
-    h = vt.select(
-        "source",
-        F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10)
-        .cast("long")
-        .alias("hv"),
-    )
+    h = vt.select("source", stable_long_hash(F.col("tok")).alias("hv"))
     mins = h.groupBy("source", (F.col("hv") % 64).alias("stratum")).agg(
         F.min("hv").alias("mn")
     )

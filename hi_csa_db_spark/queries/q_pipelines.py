@@ -9,9 +9,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hi_csa_db_spark.catalog import load_table, load_tables, local_frame
-from hi_csa_db_spark.functions.hashing import KNUTH_HASH32_SQL, knuth_hash32
+from hi_csa_db_spark.functions.hashing import (
+    KNUTH_HASH32_SQL,
+    id_shard16,
+    knuth_hash32,
+    row_checksum,
+)
 from hi_csa_db_spark.functions.text import strip_punct, tokenize
 from hi_csa_db_spark.operators import dedup, graph
+from hi_csa_db_spark.operators.packing import pack_prefix
+from hi_csa_db_spark.operators.textstats import gopher_keep
 
 from hi_csa_db_spark.queries import _register
 from hi_csa_db_spark.queries._shared import (
@@ -24,6 +31,8 @@ from hi_csa_db_spark.queries._shared import (
     _dsir_weight_frame,
     _ktruss_oracle,
     _lang_quantile_gate,
+    _md5_nibble_split,
+    _mixture_keep,
 )
 from hi_csa_db_spark.queries.q_corpus import (
     _quality_survivor_drops,
@@ -453,8 +462,10 @@ def pipe_reference_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pipe_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-to-end training-data prep composite: language gate ->
-    quality gate (min token count) -> exact content dedup (md5,
-    keep-min-id) -> deterministic split assignment -> per-split corpus
+    quality gate (min token count) -> exact content dedup (one row per
+    md5(text): the min id, and the min source and token count taken
+    column by column, as the oracle does — not the min-id row that
+    Corpus.dedup_exact keeps) -> md5-nibble split -> per-split corpus
     stats. One lazy Catalyst plan; the gates pushed down to the scan,
     two shuffles total (dedup groupBy, final stats groupBy)."""
     docs = load_table(spark, sf_dir, "documents")
@@ -468,14 +479,10 @@ def pipe_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("source").alias("source"),
         F.min("n_tokens").alias("n_tokens"),
     )
-    nib = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-    split = (
-        F.when(nib < "c", F.lit("train"))
-        .when(nib < "e", F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
     return (
-        deduped.select(split.alias("split"), "source", "n_tokens")
+        deduped.select(
+            _md5_nibble_split(F.col("doc_id")).alias("split"), "source", "n_tokens"
+        )
         .groupBy("split", "source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -728,12 +735,9 @@ def pipe_training_prep_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.regexp_extract_all(F.col("text"), F.lit(EMAIL_RE), F.lit(0)))
         + F.size(F.regexp_extract_all(F.col("text"), F.lit(PHONE_RE), F.lit(0)))
     )
+    # the unrounded means: the composite's oracle gates before rounding
     gated = stats.filter(
-        (F.col("n_tokens") >= 10)
-        & (F.col("n_tokens") <= 100000)
-        & (F.col("mwl") >= 3)
-        & (F.col("mwl") <= 10)
-        & (F.col("alpha") >= 0.8)
+        gopher_keep(F.col("n_tokens"), F.col("mwl"), F.col("alpha"))
     ).select("doc_id", "source", "text", "n_tokens", n_pii.alias("n_pii"))
     deduped = gated.groupBy(F.md5("text")).agg(
         F.min("doc_id").alias("doc_id"),
@@ -741,23 +745,7 @@ def pipe_training_prep_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("n_tokens").alias("n_tokens"),
         F.min("n_pii").alias("n_pii"),
     )
-    totals = deduped.groupBy("source").agg(F.sum("n_tokens").alias("src_tokens"))
-    floor_t = totals.agg(F.min("src_tokens").alias("min_tokens"))
-    u = knuth_hash32(F.col("doc_id"))
-    kept = (
-        deduped.join(F.broadcast(totals), "source")
-        .join(F.broadcast(floor_t))
-        .filter(u * F.col("src_tokens") < F.col("min_tokens") * F.lit(4294967296))
-    )
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    before = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-    packed = kept.withColumn(
-        "bin_id", F.floor(before / F.lit(float(_PACK_BUDGET))).cast("long")
-    )
+    packed = pack_prefix(_mixture_keep(deduped), _PACK_BUDGET)
     return packed.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").alias("total_tokens"),
@@ -821,8 +809,8 @@ def pipe_training_prep_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     composition adds only doc-level equi-joins and one 5-group audit
     aggregate. Shared stage outputs (scored/labels/mem) are
     lazily checkpointed once instead of re-derived per consumer —
-    the x78/er3 pattern (VERDICT r6 item 4; was 45 Exchanges /
-    9 scans before)."""
+    the x78/er3 pattern: re-deriving them per consumer planned 45
+    Exchanges and 9 scans."""
     docs = load_table(spark, sf_dir, "documents")
     scored, drops = _quality_survivor_drops(spark, sf_dir, docs)
     dk = _dsir_weight_frame(spark, sf_dir).filter(_dsir_keep()).select("doc_id")
@@ -835,6 +823,25 @@ def pipe_training_prep_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kept.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_kept"),
         F.sum("n_words").alias("kept_tokens"),
+    )
+
+
+def _shard_manifest(kept: DataFrame) -> DataFrame:
+    """x35-style shard manifest of a curated corpus (``doc_id``,
+    ``text``, ``n_words``): per 16-way id shard, doc count, token total
+    and the order-insensitive content checksum."""
+    return (
+        kept.select(
+            id_shard16(F.col("doc_id")).alias("shard"),
+            F.col("n_words"),
+            row_checksum(F.col("text")).alias("fp"),
+        )
+        .groupBy("shard")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_words").alias("total_tokens"),
+            F.sum("fp").alias("content_checksum"),
+        )
     )
 
 
@@ -931,8 +938,8 @@ def pipe_training_prep_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: inherits every stage's contract; the new gate adds d13's
     linear span pass + one doc-level anti-join; the manifest is a
     16-group map-combined aggregate. Shared stage outputs are
-    checkpointed once via _quality_survivor_drops (VERDICT r6
-    item 4)."""
+    checkpointed once via _quality_survivor_drops, so the scores and
+    labels are not re-derived per consumer."""
     docs = load_table(spark, sf_dir, "documents")
     scored, drops = _quality_survivor_drops(spark, sf_dir, docs)
     dk = _dsir_weight_frame(spark, sf_dir).filter(_dsir_keep()).select("doc_id")
@@ -948,26 +955,7 @@ def pipe_training_prep_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(drops, F.col("doc_id") == drops["id"], "left_anti")
         .join(heavy, "doc_id", "left_anti")
     )
-    shard = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1), 16, 10
-    ).cast("long")
-    fp = (
-        F.conv(F.substring(F.md5(F.col("text")), 1, 15), 16, 10).cast("long")
-        % 2147483647
-    )
-    return (
-        kept.select(
-            shard.alias("shard"),
-            F.col("n_words"),
-            fp.alias("fp"),
-        )
-        .groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_words").alias("total_tokens"),
-            F.sum("fp").alias("content_checksum"),
-        )
-    )
+    return _shard_manifest(kept)
 
 
 @_register(
@@ -1343,26 +1331,7 @@ def pipe_training_prep_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(dk, "doc_id")
         .join(drops, F.col("doc_id") == drops["id"], "left_anti")
     )
-    shard = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1), 16, 10
-    ).cast("long")
-    fp = (
-        F.conv(F.substring(F.md5(F.col("text")), 1, 15), 16, 10).cast("long")
-        % 2147483647
-    )
-    return (
-        kept.select(
-            shard.alias("shard"),
-            F.col("n_words"),
-            fp.alias("fp"),
-        )
-        .groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_words").alias("total_tokens"),
-            F.sum("fp").alias("content_checksum"),
-        )
-    )
+    return _shard_manifest(kept)
 
 
 @_register(
@@ -1904,7 +1873,7 @@ def graph_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pipe_training_prep_v7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-prep composite v7 (VERDICT r5 item 6): the per-language
+    """Corpus-prep composite v7: the per-language
     QUANTILE gate meets exact content dedup and batch planning — x26's
     self-calibrating keep rule (top 40% of each language slice by
     classifier logit, pure integer rank test) selects the training

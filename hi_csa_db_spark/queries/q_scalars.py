@@ -9,6 +9,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hi_csa_db_spark.catalog import load_table, local_frame
+from hi_csa_db_spark.functions.hashing import row_checksum
 from hi_csa_db_spark.functions.text import (
     absolutize_url,
     slugify,
@@ -346,38 +347,17 @@ def f15_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariance suite relies on). Pure map + one aggregate per table."""
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
-    ccol = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.col("c_custkey").cast("string"),
-                    "c_name",
-                    "c_mktsegment",
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long") % 2147483647
-    ocol = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.col("o_orderkey").cast("string"),
-                    F.col("o_custkey").cast("string"),
-                    "o_orderstatus",
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long") % 2147483647
+    ccol = row_checksum(
+        F.concat_ws("|", F.col("c_custkey").cast("string"), "c_name", "c_mktsegment")
+    )
+    ocol = row_checksum(
+        F.concat_ws(
+            "|",
+            F.col("o_orderkey").cast("string"),
+            F.col("o_custkey").cast("string"),
+            "o_orderstatus",
+        )
+    )
     cc = c.agg(F.sum(ccol).alias("customer_checksum"))
     oc = o.agg(F.sum(ocol).alias("orders_checksum"))
     return cc.crossJoin(oc)

@@ -11,7 +11,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hi_csa_db_spark.catalog import load_table, load_tables, local_frame
-from hi_csa_db_spark.functions.hashing import KNUTH_HASH32_SQL, knuth_hash32
+from hi_csa_db_spark.functions.hashing import (
+    KNUTH_HASH32_SQL,
+    hex_to_long,
+    knuth_hash32,
+    md5_hex,
+)
 from hi_csa_db_spark.functions.text import strip_punct, tokenize
 from hi_csa_db_spark.operators import ordered, similarity
 
@@ -25,6 +30,7 @@ from hi_csa_db_spark.queries._shared import (
     _daily_series,
     _dsum,
     _kmeans_oracle,
+    _md5_nibble_split,
 )
 from hi_csa_db_spark.queries.q_corpus import x12_quality_rules, x20_quality_classifier
 
@@ -437,14 +443,8 @@ def sample_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     id's md5 prefix — stable across engines, runs, and shards (no
     rand(); membership is a pure function of the row id)."""
     docs = load_table(spark, sf_dir, "documents")
-    nib = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-    split = (
-        F.when(nib.isin(*list("0123456789ab")), F.lit("train"))
-        .when(nib.isin("c", "d"), F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
     return (
-        docs.select(split.alias("split"), "source")
+        docs.select(_md5_nibble_split(F.col("doc_id")).alias("split"), "source")
         .groupBy("split", "source")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
@@ -1189,22 +1189,8 @@ def stats_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents"),
     )
     reps = spark.range(0, 16).select(F.col("id").alias("b"))
-    h = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|", F.col("b").cast("string"), F.col("id").cast("string")
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000
-    )
+    key = F.concat_ws("|", F.col("b").cast("string"), F.col("id").cast("string"))
+    h = hex_to_long(md5_hex(key), 8) % 1000
     w = (
         F.when(h < 368, 0)
         .when(h < 736, 1)

@@ -12,7 +12,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hi_csa_db_spark.catalog import load_table, load_tables, local_frame
-from hi_csa_db_spark.functions.hashing import mult_hash32
+from hi_csa_db_spark.functions.hashing import (
+    hex_to_long,
+    hll_bucket_rem,
+    hll_estimate,
+    hll_harmonic_sum,
+    hll_rank,
+    md5_hex,
+    mult_hash32,
+    stable_long_hash,
+)
 from hi_csa_db_spark.functions.text import strip_punct, tokenize
 from hi_csa_db_spark.operators import classify, ordered
 
@@ -748,39 +757,16 @@ def a12_hll_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduction. The n_exact column is the expensive exact distinct —
     kept here for audit; production uses the sketch alone."""
     li = load_table(spark, sf_dir, "lineitem")
-    h = li.select(
-        "l_returnflag",
-        "l_orderkey",
-        F.conv(F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 2), 16, 10)
-        .cast("long")
-        .alias("bucket"),
-        F.conv(F.substring(F.md5(F.col("l_orderkey").cast("string")), 3, 13), 16, 10)
-        .cast("long")
-        .alias("rem"),
+    h = li.select("l_returnflag", "l_orderkey", *hll_bucket_rem(F.col("l_orderkey")))
+    regs = h.groupBy("l_returnflag", "bucket").agg(
+        F.max(hll_rank(F.col("rem"))).alias("m")
     )
-    rank = F.when(F.col("rem") == 0, F.lit(50)).otherwise(
-        F.least(F.lit(53) - F.length(F.expr("bin(rem)")), F.lit(50))
-    )
-    regs = h.groupBy("l_returnflag", "bucket").agg(F.max(rank).alias("m"))
-    ssum = regs.groupBy("l_returnflag").agg(
-        (
-            F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), CAST(50 - m AS INT))"))
-            + (256 - F.count(F.lit(1))) * F.expr("shiftleft(CAST(1 AS BIGINT), 50)")
-        )
-        .cast("long")
-        .alias("ssum")
-    )
+    ssum = regs.groupBy("l_returnflag").agg(hll_harmonic_sum("m").alias("ssum"))
     exact = li.groupBy("l_returnflag").agg(
         F.countDistinct("l_orderkey").cast("long").alias("n_exact")
     )
-    est = F.floor(
-        (F.lit(0.7213) / (F.lit(1.0) + F.lit(1.079) / F.lit(256.0)))
-        * F.lit(65536.0)
-        * F.expr("CAST(shiftleft(CAST(1 AS BIGINT), 50) AS DOUBLE)")
-        / F.col("ssum").cast("double")
-    ).cast("long")
     return ssum.join(exact, "l_returnflag").select(
-        "l_returnflag", est.alias("hll_estimate"), "n_exact"
+        "l_returnflag", hll_estimate(F.col("ssum")).alias("hll_estimate"), "n_exact"
     )
 
 
@@ -847,12 +833,7 @@ def a13_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.broadcast(targets), ranked["rank"] == targets["__tgt"]
         ).select("decile", "c")
 
-    keep = (
-        F.conv(F.substring(F.md5(F.col("k").cast("string")), 1, 4), 16, 10).cast(
-            "bigint"
-        )
-        < 4096
-    )
+    keep = hex_to_long(md5_hex(F.col("k")), 4) < 4096
     approx = ranked_with_targets(cents.filter(keep)).withColumnRenamed(
         "c", "approx_cents"
     )
@@ -2402,20 +2383,12 @@ def a19_hll_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     keyed = o.select(
         F.col("o_orderdate").cast("date").alias("day"),
-        F.conv(F.substring(F.md5(F.col("o_custkey").cast("string")), 1, 2), 16, 10)
-        .cast("long")
-        .alias("bucket"),
-        F.conv(F.substring(F.md5(F.col("o_custkey").cast("string")), 3, 13), 16, 10)
-        .cast("long")
-        .alias("rem"),
+        *hll_bucket_rem(F.col("o_custkey")),
         "o_custkey",
-    )
-    rank = F.when(F.col("rem") == 0, F.lit(50)).otherwise(
-        F.least(F.lit(53) - F.length(F.expr("bin(rem)")), F.lit(50))
     )
     daily = (
         keyed.groupBy("day", "bucket")
-        .agg(F.max(rank).alias("m"))
+        .agg(F.max(hll_rank(F.col("rem"))).alias("m"))
         .localCheckpoint(eager=False)  # grid + rolled both consume it
     )
     days = daily.select("day").distinct().withColumn(
@@ -2432,18 +2405,9 @@ def a19_hll_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         grid.join(daily, ["day", "bucket"], "left")
         .withColumn("mm", F.max("m").over(w))
     )
-    s = rolled.groupBy("day").agg(
-        F.sum(
-            F.when(
-                F.col("mm").isNull(),
-                F.expr("shiftleft(CAST(1 AS BIGINT), 50)"),
-            ).otherwise(
-                F.expr("shiftleft(CAST(1 AS BIGINT), CAST(50 - mm AS INT))")
-            )
-        )
-        .cast("long")
-        .alias("ssum")
-    )
+    # the grid holds all 256 buckets of each day, so the NULL-register
+    # terms are exactly the (256 - count(mm)) of hll_harmonic_sum
+    s = rolled.groupBy("day").agg(hll_harmonic_sum("mm").alias("ssum"))
     exact = (
         days.select("day")
         .join(
@@ -2454,15 +2418,9 @@ def a19_hll_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("day")
         .agg(F.countDistinct("o_custkey").cast("long").alias("n_exact"))
     )
-    est = F.floor(
-        (F.lit(0.7213) / (F.lit(1.0) + F.lit(1.079) / F.lit(256.0)))
-        * F.lit(65536.0)
-        * F.expr("CAST(shiftleft(CAST(1 AS BIGINT), 50) AS DOUBLE)")
-        / F.col("ssum").cast("double")
-    ).cast("long")
     return (
         s.join(exact, "day")
-        .select("day", est.alias("hll_rolling"), "n_exact")
+        .select("day", hll_estimate(F.col("ssum")).alias("hll_rolling"), "n_exact")
         .orderBy(F.col("day").asc())
         .limit(60)
     )
@@ -2546,16 +2504,7 @@ def a20_minhash_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=False)
     )
-    lab = members.select(
-        "yr",
-        F.conv(
-            F.substring(F.md5(F.col("o_custkey").cast("string")), 1, 15),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("h"),
-    )
+    lab = members.select("yr", stable_long_hash(F.col("o_custkey")).alias("h"))
     mins = lab.groupBy("yr", (F.col("h") % 64).alias("stratum")).agg(
         F.min("h").alias("mn")
     )
@@ -2799,9 +2748,7 @@ def a22_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = bg.select(
         "source",
         "bigram",
-        F.conv(F.substring(F.md5(F.col("bigram")), 1, 8), 16, 10)
-        .cast("bigint")
-        .alias("hv"),
+        hex_to_long(md5_hex(F.col("bigram")), 8).alias("hv"),
     )
     wk = Window.partitionBy("source").orderBy(
         F.col("hv").asc(), F.col("bigram").asc()

@@ -20,6 +20,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hi_csa_db_spark.catalog import local_frame
+from hi_csa_db_spark.functions.hashing import (
+    hll_bucket_rem,
+    hll_estimate,
+    hll_harmonic_sum,
+    hll_rank,
+)
 
 
 @contextmanager
@@ -487,22 +493,11 @@ def hll_daily_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink's register table; the exact per-day distinct rides along
     for calibration."""
     ev = read_events_stream(spark, sf_dir)
-    h = ev.select(
-        "ts",
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 2), 16, 10)
-        .cast("long")
-        .alias("bucket"),
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 3, 13), 16, 10)
-        .cast("long")
-        .alias("rem"),
-    )
-    rank = F.when(F.col("rem") == 0, F.lit(50)).otherwise(
-        F.least(F.lit(53) - F.length(F.expr("bin(rem)")), F.lit(50))
-    )
+    h = ev.select("ts", *hll_bucket_rem(F.col("user_id")))
     regs = (
         h.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 day"), "bucket")
-        .agg(F.max(rank).alias("m"))
+        .agg(F.max(hll_rank(F.col("rem"))).alias("m"))
         .select(
             F.date_format("window.start", "yyyy-MM-dd").alias("day"),
             "bucket",
@@ -510,15 +505,7 @@ def hll_daily_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = _run_to_memory(regs, "stream_hll_daily_regs", "complete")
-    s = sink.groupBy("day").agg(
-        (
-            F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), CAST(50 - m AS INT))"))
-            + (256 - F.count(F.lit(1)))
-            * F.expr("shiftleft(CAST(1 AS BIGINT), 50)")
-        )
-        .cast("long")
-        .alias("ssum")
-    )
+    s = sink.groupBy("day").agg(hll_harmonic_sum("m").alias("ssum"))
     from hi_csa_db_spark.catalog import normalize_events
 
     exact = (
@@ -531,15 +518,9 @@ def hll_daily_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("day")
         .agg(F.countDistinct("user_id").cast("bigint").alias("n_exact"))
     )
-    est = F.floor(
-        (F.lit(0.7213) / (F.lit(1.0) + F.lit(1.079) / F.lit(256.0)))
-        * F.lit(65536.0)
-        * F.expr("CAST(shiftleft(CAST(1 AS BIGINT), 50) AS DOUBLE)")
-        / F.col("ssum").cast("double")
-    ).cast("long")
     return (
         s.join(exact, "day")
-        .select("day", est.alias("hll_daily"), "n_exact")
+        .select("day", hll_estimate(F.col("ssum")).alias("hll_daily"), "n_exact")
         .orderBy(F.col("day").asc())
         .limit(40)
     )

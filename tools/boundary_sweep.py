@@ -37,12 +37,13 @@ Exit 1 if any query is boundary-unstable.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hi_csa_db_spark.catalog import TABLES
 
@@ -144,9 +145,7 @@ def main():
     # temp dir OUTSIDE the repo — without temp_directory set, duckdb
     # spills to cwd/.tmp and an sf0.1 stress sweep can fill the disk
     # with stranded duckdb_temp_storage-*.tmp files (observed: 74 GB).
-    import os as _os
-
-    _os.makedirs("/tmp/duckdb_oracle_tmp", exist_ok=True)
+    os.makedirs("/tmp/duckdb_oracle_tmp", exist_ok=True)
     con.execute("PRAGMA temp_directory='/tmp/duckdb_oracle_tmp'")
     con.execute("PRAGMA memory_limit='24GB'")
     for t in TABLES:

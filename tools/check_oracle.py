@@ -13,6 +13,7 @@ mechanically.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 from datetime import date, datetime
@@ -20,7 +21,7 @@ from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hi_csa_db_spark.catalog import TABLES
 import __spark_entry__ as entrymod
@@ -33,8 +34,6 @@ def _vanilla_spark():
     session.py's confs — fixture-vintage drift then fails locally first,
     not at the driver (the r1/r2 failure mode). Set
     SPARK_GRAFT_ORACLE_SESSION=tuned to use session.get_spark instead."""
-    import os
-
     from pyspark.sql import SparkSession
 
     if os.environ.get("SPARK_GRAFT_ORACLE_SESSION") == "tuned":
@@ -103,9 +102,7 @@ def main():
     # the oracle a disk temp dir and a bounded memory budget so the
     # 10x-scale stress sweep measures VALUE parity, not RAM.
     try:
-        import os as _os
-
-        _os.makedirs("/tmp/duckdb_oracle_tmp", exist_ok=True)
+        os.makedirs("/tmp/duckdb_oracle_tmp", exist_ok=True)
         con.execute("PRAGMA temp_directory='/tmp/duckdb_oracle_tmp'")
         con.execute("PRAGMA memory_limit='24GB'")
     except Exception:
@@ -125,11 +122,10 @@ def main():
     # query red under two seeds => the query; different position =>
     # the accumulation). Peak driver heap is sampled after every
     # query and reported either way.
-    import os as _os
     import random as _random
 
     names = [n for n in qs if not only or n in only]
-    seed_env = _os.environ.get("SPARK_GRAFT_SWEEP_SHUFFLE")
+    seed_env = os.environ.get("SPARK_GRAFT_SWEEP_SHUFFLE")
     if seed_env:
         _random.Random(int(seed_env)).shuffle(names)
         print(f"sweep order: seeded shuffle (seed={seed_env})")
@@ -290,7 +286,7 @@ def main():
         print(f"final retained driver heap (post-GC): {final_mb:.0f} MiB")
     except Exception:
         pass
-    out_path = _os.environ.get("SPARK_GRAFT_ORACLE_JSON")
+    out_path = os.environ.get("SPARK_GRAFT_ORACLE_JSON")
     if out_path:
         # Rebuild in registry order before dumping (ADVICE r11): under
         # SPARK_GRAFT_SWEEP_SHUFFLE the report dict is built in the
