@@ -27,6 +27,30 @@ def tokenize(col: Column) -> Column:
     return F.filter(F.split(F.trim(col), " "), lambda t: t != F.lit(""))
 
 
+def normalized_text(col: Column) -> Column:
+    """F1 then lowercase: the normalized text every word token is cut
+    from. The one Spark-side spelling of the rule; see ``word_tokens``."""
+    return F.lower(strip_punct(col))
+
+
+def word_tokens(col: Column) -> Column:
+    """F1 + F2: the normalized word tokens of a text, empties removed.
+
+    The reference's ``strsplit(gsub('[[:punct:] ]+', ' ', x), ' ')``
+    (hi-csa-db.Rmd:76-77), lowercased. Every corpus, dedup and quality
+    operator that cuts normalized words calls this function (bare
+    ``tokenize`` on raw text is the whitespace-only count, a different
+    rule); its DuckDB twin is
+    ``queries._shared._TOKS_SQL``, which lowercases *before* stripping.
+    The two agree on ASCII and on non-ASCII letters that both strip
+    (``ÄPFEL``, ``ẞtraße``, ``ﬁne``), but not where ``lower`` maps a
+    non-ASCII letter to ASCII: KELVIN SIGN U+212A gives ``elvin`` here
+    and ``kelvin`` in DuckDB, U+0130 gives ``stanbul`` here and
+    ``istanbul`` there (tests/test_canon_rules.py pins both).
+    """
+    return tokenize(normalized_text(col))
+
+
 def word_ngrams(toks: Column, n: int) -> Column:
     """Space-joined word n-grams of a token array, one per window start
     (a higher-order ``transform`` over token indices — no UDF). An

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hi_csa_db_spark.functions.text import strip_punct, tokenize, word_ngrams
+from hi_csa_db_spark.functions.text import normalized_text, word_ngrams, word_tokens
 
 
 def keyword_classify(
@@ -55,7 +55,7 @@ def keyword_classify(
     )
     toks = docs.select(
         F.col(id_col),
-        tokenize(F.lower(strip_punct(F.col(text_col)))).alias("__toks"),
+        word_tokens(F.col(text_col)).alias("__toks"),
     )
     shingle_arrays = [word_ngrams(F.col("__toks"), n) for n in range(1, max_n + 1)]
     shingled = toks.select(
@@ -100,7 +100,7 @@ def keyword_classify_literal(
     max_n = max(len(k.split(" ")) for k, _ in pairs)
     toks = docs.select(
         F.col(id_col),
-        tokenize(F.lower(strip_punct(F.col(text_col)))).alias("__toks"),
+        word_tokens(F.col(text_col)).alias("__toks"),
     )
     # n=1 shingles ARE the token array — skip the sequence/slice/
     # concat_ws rebuild the generic operator pays per token
@@ -142,7 +142,7 @@ def keyword_classify_nlj(
 ) -> DataFrame:
     """Broadcast nested-loop rlike strategy (small corpora only)."""
     cleaned = docs.select(
-        F.col(id_col), F.lower(strip_punct(F.col(text_col))).alias("__txt")
+        F.col(id_col), normalized_text(F.col(text_col)).alias("__txt")
     )
     dict_df = keywords.select(
         F.lower(F.col(keyword_col)).alias("__kw"), F.col(label_col)

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from hi_csa_db_spark.catalog import local_frame, spread_input
 from hi_csa_db_spark.functions.hashing import hex_to_long, stable_long_hash
-from hi_csa_db_spark.functions.text import strip_punct, tokenize, word_ngrams
+from hi_csa_db_spark.functions.text import word_ngrams, word_tokens
 from hi_csa_db_spark.operators import graph
 from hi_csa_db_spark.operators._cache_ledger import register_cached
 
@@ -41,10 +41,12 @@ def exact_dedup(
 
 
 def _doc_tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, __toks): punct-stripped, lowercased word tokens per doc.
+    """(id, __toks): the spread frame form of ``word_tokens``.
 
-    The one tokenizer of every near-dup and quality operator, so the
-    narrow-input spread sits here: a single-row-group ``docs`` scan is
+    ``shingles``, ``shingle_arrays``, ``chunk_spans`` and x20's quality
+    features tokenize through it (per-row token expressions elsewhere
+    call ``word_tokens`` directly), so the narrow-input spread sits
+    here: a single-row-group ``docs`` scan is
     hash-partitioned on ``id_col`` before the tokenize, and the
     per-document work downstream (shingles, md5, min-hash partials,
     quality features) runs on every core. The consumers' own
@@ -52,7 +54,7 @@ def _doc_tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     added where one follows."""
     return spread_input(docs, id_col).select(
         F.col(id_col),
-        tokenize(F.lower(strip_punct(F.col(text_col)))).alias("__toks"),
+        word_tokens(F.col(text_col)).alias("__toks"),
     )
 
 
@@ -133,7 +135,7 @@ def shingle_array(text_col: str = "text", n: int = 3):
     """The per-doc distinct shingle set as an ARRAY column — the same
     set shingles() explodes, kept un-exploded for narrow per-row
     consumers (streaming signatures)."""
-    return _shingle_set(tokenize(F.lower(strip_punct(F.col(text_col)))), n)
+    return _shingle_set(word_tokens(F.col(text_col)), n)
 
 
 def hash_pairs_col(shingle_col: Column) -> Column:
@@ -790,7 +792,7 @@ def simhash(
     toks = docs.select(
         F.col(id_col),
         F.explode(
-            F.array_distinct(tokenize(F.lower(strip_punct(F.col(text_col)))))
+            F.array_distinct(word_tokens(F.col(text_col)))
         ).alias("tok"),
     )
     hashed = toks.select(id_col, stable_long_hash(F.col("tok")).alias("h"))
@@ -1011,7 +1013,7 @@ def duplicated_spans(
     size; nothing is quadratic in duplicates.
     """
     toks = docs.select(
-        F.col(id_col), tokenize(F.lower(strip_punct(F.col(text_col)))).alias("__t")
+        F.col(id_col), word_tokens(F.col(text_col)).alias("__t")
     ).filter(F.size("__t") >= k)
     gram_structs = F.transform(
         F.sequence(F.lit(1), F.size("__t") - (k - 1)),

@@ -31,8 +31,8 @@ from hi_csa_db_spark.operators._cache_ledger import register_cached
 # cold caches). 512 KiB of optimizer-estimated bytes per partition
 # reproduces those optima and the estimate only shrinks the count —
 # the cap stays at the session's core parallelism, so large frames
-# (the sf10 decade) keep today's layout and the sizing rule in
-# plans/sizing.py continues to govern base-table shuffles.
+# (the sf10 decade) keep the session's shuffle partition count, which
+# SCALE.md "THE partition-sizing rule" sizes.
 _ITER_TARGET_BYTES = 512 * 1024
 
 

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hi_csa_db_spark.functions.text import strip_punct, tokenize
+from hi_csa_db_spark.functions.text import tokenize, word_tokens
 
 # tiny marker-word dictionaries for the n-gram/stopword language
 # heuristic; deterministic and engine-portable (the point is the
@@ -46,7 +46,7 @@ def lang_id(
     staged = docs.select(
         F.col(id_col),
         F.filter(
-            tokenize(F.lower(strip_punct(F.col(text_col)))),
+            word_tokens(F.col(text_col)),
             lambda x: x.isin(*all_markers),
         ).alias("__mk"),
     )
@@ -97,7 +97,7 @@ def quality_score(
     staged = docs.select(
         F.col(id_col),
         F.col(text_col).alias("__t"),
-        tokenize(F.lower(strip_punct(F.col(text_col)))).alias("__toks"),
+        word_tokens(F.col(text_col)).alias("__toks"),
     )
     t = F.col("__t")
     toks = F.col("__toks")
@@ -248,7 +248,7 @@ def quality_rules(
     6-dp rounded means, the form the x12 oracle pins."""
     toks = docs.select(
         F.col(id_col),
-        F.explode(tokenize(F.lower(strip_punct(F.col(text_col))))).alias("w"),
+        F.explode(word_tokens(F.col(text_col))).alias("w"),
     ).filter(F.col("w") != "")
     stats = toks.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_words"),
@@ -287,7 +287,7 @@ def repetition_stats(
     )
     toks = docs.select(
         F.col(id_col),
-        tokenize(F.lower(strip_punct(F.col(text_col)))).alias("__toks"),
+        word_tokens(F.col(text_col)).alias("__toks"),
     )
     bigrams = toks.select(
         id_col,

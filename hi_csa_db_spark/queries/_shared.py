@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from hi_csa_db_spark.catalog import load_table
 from hi_csa_db_spark.functions.hashing import knuth_hash32, md5_hex
-from hi_csa_db_spark.functions.text import strip_punct, tokenize
+from hi_csa_db_spark.functions.text import normalized_text, word_tokens
 from hi_csa_db_spark.operators import textstats
 
 from hi_csa_db_spark.queries import _ORACLES
@@ -175,6 +175,13 @@ _TOKS_SQL = (
     "list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '), "
     "x -> x <> '')"
 )
+
+
+def _text_block_key() -> Column:
+    """d15's sorted-neighborhood blocking key: the first 24 characters
+    of a document's normalized text. Shared by d15, the er* entity
+    resolution queries and x47's content groups."""
+    return F.substring(normalized_text(F.col("text")), 1, 24)
 
 
 _EWMA_W = [str(__import__("decimal").Decimal(1) / (2 ** (k + 1))) for k in range(10)]
@@ -445,7 +452,7 @@ def _dsir_weight_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "lang",
-        F.explode(tokenize(F.lower(strip_punct(F.col("text"))))).alias("tok"),
+        F.explode(word_tokens(F.col("text"))).alias("tok"),
     )
     cs = toks.groupBy("tok").agg(
         F.count(F.lit(1)).alias("c_s"),
@@ -971,9 +978,7 @@ def _eval_split_hits(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
         # the 248 k corpus grams at sf0.1 vs 4.7 s with the boundary
         # (r12; the x82/x80 sweep wall). CollapseProject keeps the
         # boundary because ``__ws`` is referenced more than once.
-        toks = F.filter(
-            tokenize(F.lower(strip_punct(F.col("text")))), lambda x: x != ""
-        )
+        toks = word_tokens(F.col("text"))
         base = df.select(
             *((["doc_id"] if with_id else []) + [toks.alias("__ws")])
         ).filter(F.size("__ws") >= 5)

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from hi_csa_db_spark.catalog import load_table, local_frame, spread_input
 from hi_csa_db_spark.functions.hashing import hex_to_long, md5_hex
-from hi_csa_db_spark.functions.text import strip_punct, tokenize
+from hi_csa_db_spark.functions.text import tokenize, word_tokens
 from hi_csa_db_spark.operators import dedup, ordered, textstats
 
 from hi_csa_db_spark.queries import _ORACLES, _register
@@ -26,6 +26,7 @@ from hi_csa_db_spark.queries._shared import (
     _cos_sql,
     _eval_split_hits,
     _lang_quantile_gate,
+    _text_block_key,
     _x27_oracle,
 )
 
@@ -50,7 +51,7 @@ def x1_token_explode_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select(
-            F.explode(tokenize(F.lower(strip_punct(F.col("text"))))).alias("token")
+            F.explode(word_tokens(F.col("text"))).alias("token")
         )
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -218,7 +219,7 @@ def x10_sparse_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.explode(tokenize(F.lower(strip_punct(F.col("text"))))).alias("tok"),
+        F.explode(word_tokens(F.col("text"))).alias("tok"),
     )
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("tok").agg(F.countDistinct("doc_id").alias("df"))
@@ -308,7 +309,7 @@ def x8_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the n-gram LM statistics pass; ALL occurrences counted (unlike the
     dedup tier's distinct shingles)."""
     docs = load_table(spark, sf_dir, "documents")
-    t = tokenize(F.lower(strip_punct(F.col("text"))))
+    t = word_tokens(F.col("text"))
     bigrams = F.transform(
         F.sequence(F.lit(1), F.size("__t") - 1),
         lambda i: F.concat_ws(
@@ -346,7 +347,7 @@ def x7_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
     flatten every sequence-model featurizer needs (explicit position,
     SURVEY section 7 step 3 design rule)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokenize(F.lower(strip_punct(F.col("text"))))
+    toks = word_tokens(F.col("text"))
     return (
         docs.select("doc_id", toks.alias("__toks"))
         .filter(F.size("__toks") > 0)
@@ -388,7 +389,7 @@ def x6_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.explode(tokenize(F.lower(strip_punct(F.col("text"))))).alias("tok"),
+        F.explode(word_tokens(F.col("text"))).alias("tok"),
     )
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     df_ = toks.groupBy("tok").agg(F.countDistinct("doc_id").alias("df"))
@@ -652,7 +653,7 @@ def x15_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        tokenize(F.lower(strip_punct(F.col("text")))).alias("__toks"),
+        word_tokens(F.col("text")).alias("__toks"),
     ).filter(F.size("__toks") >= 2)
     bgs = toks.select(
         "doc_id",
@@ -945,9 +946,9 @@ def x28_bpe_first_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-segmented text; each round is this same shape). Top-20 pairs,
     count-desc with pair tie-break."""
     docs = load_table(spark, sf_dir, "documents")
-    words = docs.select(
-        F.explode(tokenize(F.lower(strip_punct(F.col("text"))))).alias("w")
-    ).filter(F.length("w") >= 2)
+    words = docs.select(F.explode(word_tokens(F.col("text"))).alias("w")).filter(
+        F.length("w") >= 2
+    )
     pairs = words.select(
         F.explode(
             F.expr("transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))")
@@ -1006,9 +1007,7 @@ def x30_bpe_training_round2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two corpus aggregations + one 1-row broadcast per round;
     the re-segmentation is a narrow map."""
     docs = load_table(spark, sf_dir, "documents")
-    words = docs.select(
-        F.explode(tokenize(F.lower(strip_punct(F.col("text"))))).alias("w")
-    )
+    words = docs.select(F.explode(word_tokens(F.col("text"))).alias("w"))
     pairs1 = words.filter(F.length("w") >= 2).select(
         F.explode(
             F.expr("transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))")
@@ -1055,9 +1054,7 @@ def x34_bpe_train_4rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hi_csa_db_spark.functions.bpe import bpe_train
 
     docs = load_table(spark, sf_dir, "documents")
-    words = docs.select(
-        F.explode(tokenize(F.lower(strip_punct(F.col("text"))))).alias("w")
-    )
+    words = docs.select(F.explode(word_tokens(F.col("text"))).alias("w"))
     return bpe_train(words, rounds=4)
 
 
@@ -1392,7 +1389,7 @@ def x42_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "source",
-        tokenize(F.lower(strip_punct(F.col("text")))).alias("__toks"),
+        word_tokens(F.col("text")).alias("__toks"),
     ).filter(F.size("__toks") >= 2)
     bgs = toks.select(
         "doc_id",
@@ -1479,13 +1476,15 @@ def x43_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence) — no explode until chunks exist, no shuffle before the
     final hash aggregate."""
     docs = load_table(spark, sf_dir, "documents")
-    bs = F.expr(
-        "concat(array(1), "
-        " filter(sequence(2, greatest(length(text) - 7, 2)),"
-        "        i -> length(text) >= 9 AND"
-        "             CAST(conv(substring(md5(substring(text, i, 8)), 1, 4),"
-        "                       16, 10) AS BIGINT) % 16 = 0),"
-        " array(length(text) + 1))"
+    n = F.length("text")
+    bs = F.concat(
+        F.array(F.lit(1)),
+        F.filter(
+            F.sequence(F.lit(2), F.greatest(n - 7, F.lit(2))),
+            lambda i: (n >= 9)
+            & (hex_to_long(F.md5(F.substring("text", i, 8)), 4) % 16 == 0),
+        ),
+        F.array(n + 1),
     )
     chunks = F.expr(
         "filter(transform(sequence(1, size(__bs) - 1),"
@@ -1699,7 +1698,7 @@ def x47_priority_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = docs.select(
         "doc_id",
         "source",
-        F.substring(F.lower(strip_punct(F.col("text"))), 1, 24).alias("key"),
+        _text_block_key().alias("key"),
         F.expr("CAST(substr(source, 4) AS INT)").alias("prio"),
     )
     w = Window.partitionBy("key").orderBy(F.col("prio").asc(), F.col("doc_id").asc())
@@ -1753,7 +1752,7 @@ def x46_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-doc gram sets; integer ratio rounded once at the end."""
     docs = load_table(spark, sf_dir, "documents")
     grams = (
-        docs.select("doc_id", tokenize(F.lower(strip_punct(F.col("text")))).alias("ws"))
+        docs.select("doc_id", word_tokens(F.col("text")).alias("ws"))
         .filter(F.size("ws") >= 3)
         .select(
             "doc_id",
@@ -1841,10 +1840,8 @@ def x56_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id",
-        F.array_distinct(tokenize(F.lower(strip_punct(F.col("text"))))).alias(
-            "dtoks"
-        ),
-        F.size(tokenize(F.lower(strip_punct(F.col("text"))))).alias("n_toks"),
+        F.array_distinct(word_tokens(F.col("text"))).alias("dtoks"),
+        F.size(word_tokens(F.col("text"))).alias("n_toks"),
         # tokenized once, fanned out to the rank branch, the count,
         # and the first-occurrence explode — materialize the tokenize
         # pass instead of re-running it per consumer.
@@ -1927,9 +1924,7 @@ def x57_term_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id",
-        F.array_distinct(tokenize(F.lower(strip_punct(F.col("text"))))).alias(
-            "toks"
-        ),
+        F.array_distinct(word_tokens(F.col("text"))).alias("toks"),
     ).localCheckpoint(eager=False)
     t = d.select("doc_id", F.explode("toks").alias("tok"))
     df_ = t.groupBy("tok").agg(F.count(F.lit(1)).alias("n_docs"))
@@ -2141,7 +2136,7 @@ def x61_rouge_bigram_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     array_intersect on the joined row — no explode, no shuffle beyond
     the one pair join."""
     docs = load_table(spark, sf_dir, "documents")
-    t = tokenize(F.lower(strip_punct(F.col("text"))))
+    t = word_tokens(F.col("text"))
     bigrams = F.transform(
         F.sequence(F.lit(1), F.size("__t") - 1),
         lambda i: F.concat_ws(
@@ -2558,7 +2553,7 @@ def x70_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered.global_row_numbers with a struct key), cumulative counts
     via global_prefix_sums, then a 5-row broadcast threshold probe."""
     docs = load_table(spark, sf_dir, "documents")
-    t = tokenize(F.lower(strip_punct(F.col("text"))))
+    t = word_tokens(F.col("text"))
     tf = (
         docs.select(F.explode(t).alias("w"))
         .groupBy("w")
@@ -2703,7 +2698,7 @@ def x74_crosslingual_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFram
     equi-join over per-language DISTINCT vocabularies (bounded by
     vocab, not corpus), never a lang x lang cross join."""
     docs = load_table(spark, sf_dir, "documents")
-    t = tokenize(F.lower(strip_punct(F.col("text"))))
+    t = word_tokens(F.col("text"))
     v = (
         docs.select("lang", F.explode(t).alias("w"))
         .distinct()
@@ -2808,9 +2803,7 @@ def x75_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats), a vocab-keyed join, and a global top-10 —
     TakeOrderedAndProject, never a full sort."""
     docs = load_table(spark, sf_dir, "documents")
-    arr = F.filter(
-        tokenize(F.lower(strip_punct(F.col("text")))), lambda x: x != ""
-    )
+    arr = word_tokens(F.col("text"))
     tk = docs.select(
         "doc_id", F.posexplode(arr).alias("p", "w")
     )

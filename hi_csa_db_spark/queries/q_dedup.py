@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from hi_csa_db_spark.catalog import load_table, local_frame
 from hi_csa_db_spark.functions.hashing import MULT_HASH32_SQL, knuth_hash32
-from hi_csa_db_spark.functions.text import strip_punct, tokenize
+from hi_csa_db_spark.functions.text import word_tokens
 from hi_csa_db_spark.operators import dedup, graph, ordered
 
 from hi_csa_db_spark.queries import _ORACLES, _register
@@ -20,6 +20,7 @@ from hi_csa_db_spark.queries._shared import (
     _SHINGLE_SQL,
     _X20_SCORED_SQL,
     _cos_sql,
+    _text_block_key,
 )
 from hi_csa_db_spark.queries.q_corpus import x20_quality_classifier
 
@@ -927,7 +928,7 @@ def d15_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hi_csa_db_spark.operators.dedup import sorted_neighborhood_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    key = F.substring(F.lower(strip_punct(F.col("text"))), 1, 24)
+    key = _text_block_key()
     pairs = sorted_neighborhood_pairs(docs, key, id_col="doc_id", window=3)
     return (
         pairs.withColumn("dist", F.levenshtein("a_key", "b_key"))
@@ -967,7 +968,7 @@ def er1_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hi_csa_db_spark.operators.dedup import sorted_neighborhood_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    key = F.substring(F.lower(strip_punct(F.col("text"))), 1, 24)
+    key = _text_block_key()
     pairs = (
         sorted_neighborhood_pairs(docs, key, id_col="doc_id", window=3)
         .filter(F.levenshtein("a_key", "b_key") <= 6)
@@ -1140,7 +1141,7 @@ def er2_blocking_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hi_csa_db_spark.operators.dedup import sorted_neighborhood_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    key = F.substring(F.lower(strip_punct(F.col("text"))), 1, 24)
+    key = _text_block_key()
     k = docs.select("doc_id", key.alias("key"))
     truth = (
         k.groupBy("key")
@@ -1386,7 +1387,7 @@ def er3_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hi_csa_db_spark.operators.dedup import sorted_neighborhood_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    key = F.substring(F.lower(strip_punct(F.col("text"))), 1, 24)
+    key = _text_block_key()
     pairs = (
         sorted_neighborhood_pairs(docs, key, id_col="doc_id", window=3)
         .filter(F.levenshtein("a_key", "b_key") <= 6)
@@ -1615,7 +1616,7 @@ def er4_blocking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sigs = dedup.minhash_signatures(sh, num_hashes=16)
     cand = dedup.lsh_candidate_pairs(sigs, bands=8, rows=2)
-    key = F.substring(F.lower(strip_punct(F.col("text"))), 1, 24)
+    key = _text_block_key()
     # corpus-sized rank -> range-partitioned global_row_numbers over a
     # (key, doc_id) struct, same as d15's operator (VERDICT r7 item 6:
     # this was the one corpus-sized Window.orderBy left in queries.py)
@@ -1630,10 +1631,8 @@ def er4_blocking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.col("rank").alias("rnk"))
         .localCheckpoint(eager=False)
     )
-    w0 = F.filter(tokenize(F.lower(strip_punct(F.col("text")))), lambda x: x != "")[0]
-    w1 = docs.select("doc_id", w0.alias("w")).filter(
-        F.col("w").isNotNull() & (F.col("w") != "")
-    )
+    w0 = word_tokens(F.col("text"))[0]
+    w1 = docs.select("doc_id", w0.alias("w")).filter(F.col("w").isNotNull())
     d = F.translate(
         F.expr("substr(w, 2)"),
         "bfpvcgjkqsxzdtlmnraeiouyhw0123456789",
@@ -1834,7 +1833,7 @@ def er6_bcubed_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    key = F.substring(F.lower(strip_punct(F.col("text"))), 1, 24)
+    key = _text_block_key()
     spairs = (
         sorted_neighborhood_pairs(docs, key, id_col="doc_id", window=3)
         .filter(F.levenshtein("a_key", "b_key") <= 6)

@@ -2612,8 +2612,8 @@ _U35_SQL = "\n    UNION ALL\n".join(
     """,
 )
 def u35_shuffle_sizing_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE shuffle-partition sizing rule (SCALE.md r12 /
-    plans/sizing.py) as an oracle-checked PLANNER QUERY: per fixture
+    """THE shuffle-partition sizing rule (SCALE.md "THE
+    partition-sizing rule") as an oracle-checked PLANNER QUERY: per fixture
     table, the partition count a 32-core deployment should start its
     reduce stages at — enough that the table's widest shuffle stays
     under 500k rows/partition (the sf10-heaps spill calibration:

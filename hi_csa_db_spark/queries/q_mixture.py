@@ -18,7 +18,7 @@ from hi_csa_db_spark.functions.hashing import (
     row_checksum,
     stable_long_hash,
 )
-from hi_csa_db_spark.functions.text import strip_punct, tokenize
+from hi_csa_db_spark.functions.text import tokenize, word_tokens
 from hi_csa_db_spark.operators import dedup, ordered
 from hi_csa_db_spark.operators.packing import pack_prefix
 
@@ -73,7 +73,7 @@ def x32_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     st = docs.select(
         "source",
-        F.explode(tokenize(F.lower(strip_punct(F.col("text"))))).alias("tok"),
+        F.explode(word_tokens(F.col("text"))).alias("tok"),
     ).distinct()
     sizes = st.groupBy("source").agg(F.count(F.lit(1)).alias("sz"))
     a = st.alias("a")
@@ -133,7 +133,7 @@ def x31_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-combined aggregation pass, the cheapest query in the pipeline
     and the one that runs after every build."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.size(tokenize(F.lower(strip_punct(F.col("text")))))
+    toks = F.size(word_tokens(F.col("text")))
     base = docs.select("lang", "source", "n_chars", toks.alias("n_toks"))
     return base.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -836,7 +836,7 @@ def x49_gate_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "lang",
-        F.size(tokenize(F.lower(strip_punct(F.col("text"))))).alias("n_tokens"),
+        F.size(word_tokens(F.col("text"))).alias("n_tokens"),
     )
     return (
         rule.join(model, "doc_id")
@@ -1817,9 +1817,7 @@ def x95_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     vt = (
         docs.select(
             "source",
-            F.explode(
-                tokenize(F.lower(strip_punct(F.col("text"))))
-            ).alias("tok"),
+            F.explode(word_tokens(F.col("text"))).alias("tok"),
         )
         .distinct()
         .localCheckpoint(eager=False)  # sketch + exact + sizes share it

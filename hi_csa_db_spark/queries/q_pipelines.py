@@ -15,7 +15,7 @@ from hi_csa_db_spark.functions.hashing import (
     knuth_hash32,
     row_checksum,
 )
-from hi_csa_db_spark.functions.text import strip_punct, tokenize
+from hi_csa_db_spark.functions.text import word_tokens
 from hi_csa_db_spark.operators import dedup, graph
 from hi_csa_db_spark.operators.packing import pack_prefix
 from hi_csa_db_spark.operators.textstats import gopher_keep
@@ -469,7 +469,7 @@ def pipe_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats. One lazy Catalyst plan; the gates pushed down to the scan,
     two shuffles total (dedup groupBy, final stats groupBy)."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(tokenize(F.lower(strip_punct(F.col("text")))))
+    n_tokens = F.size(word_tokens(F.col("text")))
     gated = (
         docs.select("doc_id", "source", "lang", "text", n_tokens.alias("n_tokens"))
         .filter(F.col("lang").isin("en", "haw") & (F.col("n_tokens") >= 10))
@@ -561,7 +561,7 @@ def html_parse_sectionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hi_csa_db_spark.sources.html import elements_from_pages
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokenize(F.lower(strip_punct(F.col("text"))))
+    toks = word_tokens(F.col("text"))
     body = F.concat_ws(" ", F.slice(toks, 1, 5))
     pages = docs.select(
         F.concat(F.lit("https://x.org/doc/"), F.col("doc_id")).alias("url"),
@@ -617,7 +617,7 @@ def html_css_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hi_csa_db_spark.sources.cssdom import css_select_elements
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokenize(F.lower(strip_punct(F.col("text"))))
+    toks = word_tokens(F.col("text"))
     body = F.concat_ws(" ", F.slice(toks, 1, 5))
     pages = docs.select(
         F.concat(F.lit("https://x.org/doc/"), F.col("doc_id")).alias("url"),
@@ -718,7 +718,7 @@ def pipe_training_prep_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         "text",
-        F.explode(tokenize(F.lower(strip_punct(F.col("text"))))).alias("w"),
+        F.explode(word_tokens(F.col("text"))).alias("w"),
     ).filter(F.col("w") != "")
     stats = toks.groupBy("doc_id").agg(
         F.min("source").alias("source"),

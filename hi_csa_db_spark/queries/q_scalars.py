@@ -13,8 +13,7 @@ from hi_csa_db_spark.functions.hashing import row_checksum
 from hi_csa_db_spark.functions.text import (
     absolutize_url,
     slugify,
-    strip_punct,
-    tokenize,
+    word_tokens,
 )
 from hi_csa_db_spark.operators import ordered
 
@@ -78,7 +77,7 @@ def p7_conditional_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 def f1_regex_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1/F2/F8: punctuation strip, whitespace tokenize, slugify."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokenize(F.lower(strip_punct(F.col("text"))))
+    toks = word_tokens(F.col("text"))
     return docs.select(
         "doc_id",
         F.size(toks).alias("n_tokens"),
@@ -1203,12 +1202,8 @@ def f18_soundex_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     subsequent pair join, bounding candidates by block size like
     every other blocking op here."""
     docs = load_table(spark, sf_dir, "documents")
-    w = F.filter(
-        tokenize(F.lower(strip_punct(F.col("text")))), lambda x: x != ""
-    )[0]
-    w1 = docs.select("doc_id", w.alias("w")).filter(
-        F.col("w").isNotNull() & (F.col("w") != "")
-    )
+    w = word_tokens(F.col("text"))[0]
+    w1 = docs.select("doc_id", w.alias("w")).filter(F.col("w").isNotNull())
     d = F.translate(
         F.expr("substr(w, 2)"),
         "bfpvcgjkqsxzdtlmnraeiouyhw0123456789",

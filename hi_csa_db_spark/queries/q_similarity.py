@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hi_csa_db_spark.catalog import load_table, local_frame
-from hi_csa_db_spark.functions.text import strip_punct, tokenize
+from hi_csa_db_spark.functions.text import word_tokens
 from hi_csa_db_spark.operators import ordered, similarity, textstats
 
 from hi_csa_db_spark.queries import _register
@@ -527,7 +527,7 @@ def ret1_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = ["spark", "hash", "merge"]
     toks = docs.select(
         "doc_id",
-        F.explode(tokenize(F.lower(strip_punct(F.col("text"))))).alias("tok"),
+        F.explode(word_tokens(F.col("text"))).alias("tok"),
     )
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     corpus = dl.agg(
@@ -1825,7 +1825,7 @@ def ret6_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     toks = docs.select(
         "doc_id",
-        F.explode(tokenize(F.lower(strip_punct(F.col("text"))))).alias("tok"),
+        F.explode(word_tokens(F.col("text"))).alias("tok"),
     )
     base_terms = ["spark", "hash", "merge"]
     fb = (

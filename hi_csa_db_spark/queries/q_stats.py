@@ -17,7 +17,7 @@ from hi_csa_db_spark.functions.hashing import (
     knuth_hash32,
     md5_hex,
 )
-from hi_csa_db_spark.functions.text import strip_punct, tokenize
+from hi_csa_db_spark.functions.text import word_tokens
 from hi_csa_db_spark.operators import ordered, similarity
 
 from hi_csa_db_spark.queries import _ORACLES, _register
@@ -1425,7 +1425,7 @@ def ml_naive_bayes_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "lang",
-        F.explode(tokenize(F.lower(strip_punct(F.col("text"))))).alias("w"),
+        F.explode(word_tokens(F.col("text"))).alias("w"),
     ).filter(F.col("w") != "")
     cnt_wc = toks.groupBy("lang", "w").agg(F.count(F.lit(1)).alias("c"))
     tot_c = toks.groupBy("lang").agg(F.count(F.lit(1)).alias("tc"))

@@ -9,7 +9,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hi_csa_db_spark.catalog import load_table, load_tables, local_frame
-from hi_csa_db_spark.functions.hashing import knuth_hash32
+from hi_csa_db_spark.functions.hashing import hex_to_long, knuth_hash32, md5_hex
 from hi_csa_db_spark.operators import ordered
 
 from hi_csa_db_spark.queries import _register
@@ -2146,14 +2146,13 @@ def t35_retention_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("(dmax - day_n) div 7"), F.lit(6)
         ).alias("age_weeks"),
     )
+    tier = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(age_weeks AS INT))")
     kept = aged.select(
         "age_weeks",
-        F.expr(
-            "CAST(CASE WHEN CAST(conv(substring(md5(CAST(event_id AS STRING)),"
-            " 1, 8), 16, 10) AS BIGINT)"
-            " % shiftleft(CAST(1 AS BIGINT), CAST(age_weeks AS INT)) = 0"
-            " THEN 1 ELSE 0 END AS BIGINT)"
-        ).alias("keep"),
+        F.when(hex_to_long(md5_hex(F.col("event_id")), 8) % tier == 0, 1)
+        .otherwise(0)
+        .cast("bigint")
+        .alias("keep"),
     )
     return kept.groupBy("age_weeks").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),

@@ -5,8 +5,10 @@ Importing this module registers its queries in the package registry
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -22,7 +24,7 @@ from hi_csa_db_spark.functions.hashing import (
     mult_hash32,
     stable_long_hash,
 )
-from hi_csa_db_spark.functions.text import strip_punct, tokenize
+from hi_csa_db_spark.functions.text import word_tokens
 from hi_csa_db_spark.operators import classify, ordered
 
 from hi_csa_db_spark.queries import _register
@@ -1090,7 +1092,7 @@ def a2_a4_distinct_and_maxlen(spark: SparkSession, sf_dir: str) -> DataFrame:
     hi-csa-db.Rmd:494) + A4 max array length (ragged-path padding bound,
     hi-csa-db.Rmd:412-413) in one scalar aggregate."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokenize(F.lower(strip_punct(F.col("text"))))
+    toks = word_tokens(F.col("text"))
     return docs.agg(
         F.countDistinct("source").alias("n_sources"),
         F.max(F.size(toks)).alias("max_tokens"),
@@ -1204,7 +1206,7 @@ def a11_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate tokens reach the exact pass's shuffle."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        F.explode(tokenize(F.lower(strip_punct(F.col("text"))))).alias("tok")
+        F.explode(word_tokens(F.col("text"))).alias("tok")
     )
     depth, width = 4, 1024
     cells = toks.select(
@@ -1399,16 +1401,16 @@ def j11_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-free regardless of data size — the Spark-native equivalent
     of the reference keeping its tables keyed on orderkey. The write
     is per-process idempotent (skipped when the table already exists);
-    the bucketed copies live under /tmp, never in the repo.
+    the bucketed copies live under /tmp, never in the repo, and the
+    process removes its own copies when it exits.
     Reference: hi-csa-db.Rmd keeps RDS tables re-joined by key across
     chunks; bucketing is the Spark-first re-expression of that reuse."""
-    import hashlib
-    import os
-
     tag = hashlib.md5(f"{sf_dir}|{os.getpid()}".encode()).hexdigest()[:10]
     db = f"bkt_{tag}"
     loc = f"/tmp/spark_graft_buckets/{tag}"
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
+    if not spark.catalog.databaseExists(db):
+        atexit.register(shutil.rmtree, loc, ignore_errors=True)
+        spark.sql(f"CREATE DATABASE {db} LOCATION '{loc}'")
     for tbl, src, key in (
         ("orders_b", "orders", "o_orderkey"),
         ("lineitem_b", "lineitem", "l_orderkey"),

@@ -49,26 +49,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    # Opt-in wide start for big local fixtures: start reduce stages at
-    # mult x cores and let AQE coalesce down (sf10 sixth decade: the
-    # core-count default hit ~2M-row partitions/spill — graph_degrees
-    # 69.9 s -> 29.9 s at 128 partitions; but always-wide costs ~5% at
-    # sf0.1, so the default stays core-count and big-SF runs opt in;
-    # moot on a real cluster where partitions scale with executors).
-    # Set initialPartitionNum ONLY when the multiplier is active
-    # (ADVICE r11): that way an extra_conf override of
-    # spark.sql.shuffle.partitions keeps driving AQE's initial count
-    # through Spark's own fallback; and parse the env var defensively
-    # — a malformed value falls back to 1 instead of raising.
-    try:
-        parts_mult = int(os.environ.get("SPARK_GRAFT_INITIAL_PARTS_MULT", "1"))
-    except ValueError:
-        parts_mult = 1
-    if parts_mult > 1:
-        builder = builder.config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(n_shuffle * parts_mult),
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -10,6 +10,7 @@ from __future__ import annotations
 import ast
 import hashlib
 import os
+import re
 
 import duckdb
 import pytest
@@ -187,16 +188,24 @@ def test_hll_registers_and_harmonic_sum_match_python(spark):
 
 
 def _conv_calls(src: str, path: str = "<src>") -> list[int]:
-    """Line of every ``conv(...)`` / ``F.conv(...)`` call in ``src``."""
-    return [
+    """Line of every ``conv(...)`` / ``F.conv(...)`` call in ``src``, and
+    of every string constant (a Spark SQL fragment) that calls ``conv(``."""
+    return sorted(
         node.lineno
         for node in ast.walk(ast.parse(src, path))
-        if isinstance(node, ast.Call)
-        and (
-            (isinstance(node.func, ast.Attribute) and node.func.attr == "conv")
-            or (isinstance(node.func, ast.Name) and node.func.id == "conv")
+        if (
+            isinstance(node, ast.Call)
+            and (
+                (isinstance(node.func, ast.Attribute) and node.func.attr == "conv")
+                or (isinstance(node.func, ast.Name) and node.func.id == "conv")
+            )
         )
-    ]
+        or (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and re.search(r"\bconv\s*\(", node.value, re.IGNORECASE)
+        )
+    )
 
 
 def test_no_conv_outside_hashing():
@@ -215,5 +224,9 @@ def test_no_conv_outside_hashing():
 
 
 def test_conv_check_sees_both_forms():
-    src = "a = F.conv(F.substring(h, 1, 15), 16, 10)\nb = conv(h, 16, 10)\nc = F.md5(h)\n"
-    assert _conv_calls(src) == [1, 2]
+    src = (
+        "a = F.conv(F.substring(h, 1, 15), 16, 10)\nb = conv(h, 16, 10)\nc = F.md5(h)\n"
+        "d = F.expr('CAST(CONV(substring(md5(x), 1, 8), 16, 10) AS BIGINT)')\n"
+        "e = F.expr('convert_timezone(x)')\n"
+    )
+    assert _conv_calls(src) == [1, 2, 4]
